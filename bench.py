@@ -1,12 +1,12 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: headline operator queries over the test-data
+directory $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] (default: the
+cores in this process's affinity). Prints ONE JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The flagship metric is end-to-end extraction over a corpus replicated from
-the documents table (HTML 4x + PDF 1x), plus the dedup / similarity / text /
-relational headline operators. docs_per_sec and scaling numbers land in
-BENCH/ via scalebench.py.
+The metric is the summed best-of-trials wall of the dedup / similarity /
+text / relational headline operators. Extraction speed is measured by
+``extractbench/run.py`` and N → 4N scaling by ``scalebench.py``.
 """
 
 from __future__ import annotations
@@ -17,8 +17,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-REPLICATE_HTML = 4  # corpus = documents x4 as HTML + x1 as PDF
 
 
 def build_session(cpus: int):
@@ -36,51 +34,15 @@ def build_session(cpus: int):
     )
 
 
-def replicated_corpus(spark, sf_dir: str, copies: int):
-    """documents × copies as HTML payloads (JVM-side template concat)."""
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_spark.corpus import ARTICLE_PREFIX, ARTICLE_SUFFIX, spread_docs
-
-    docs = spread_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    rep = docs.select(
-        "doc_id", "text", "source", F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("k")
-    )
-    out = rep.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
-            (F.col("doc_id") + F.col("k") * 10_000_000).cast("string"),
-        ).alias("url"),
-        F.encode(F.concat(F.lit(ARTICLE_PREFIX), F.col("text"), F.lit(ARTICLE_SUFFIX)), "utf-8").alias("html"),
-    )
-    # the ×copies url stride embeds the copy index at +1e7 per copy, which
-    # collides only if two (source, doc_id, k) tuples map to one url — i.e.
-    # doc_ids within one source differ by an exact copies-range multiple of
-    # 1e7 (the sf1 synthesizer's +1e8 replica stride does NOT, so a max-id
-    # cutoff would wrongly refuse it). Check the actual url set instead;
-    # html is pruned from this aggregate so it only scans ids.
-    n_all, n_urls = out.agg(F.count("*"), F.count_distinct("url")).first()
-    if n_urls != n_all:
-        raise ValueError(
-            f"×{copies} url stride collision: {n_all} rows but {n_urls} distinct urls"
-        )
-    return out
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = (lambda b: b[2:] if b.startswith("sf") else b)(os.path.basename(sf_dir.rstrip("/")))
 
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from pdf_extraction_spark.corpus import corpus_from_documents
-    from pdf_extraction_spark.pipeline import extract_corpus
-
-    timings: dict[str, float] = {}
-    n_docs_extracted = 0
 
     # The sandbox host carries up to 2.5x run-to-run scheduling noise
     # (BASELINE.md), and the first execution additionally pays Python-worker
@@ -89,51 +51,14 @@ def main():
     # protocol declared in the output line.
     TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
 
-    def timed(name, fn):
-        best = None
-        out = None
-        for _ in range(TRIALS):
+    def best_of(n, job):
+        """Fastest wall-clock seconds of ``n`` runs of ``job()``."""
+        walls = []
+        for _ in range(n):
             t0 = time.monotonic()
-            out = fn()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        return out
-
-    # The north-rule metric is extraction throughput over an EXISTING
-    # Common-Crawl-style table (at 100 TB the corpus is an Iceberg table on
-    # object storage, not something synthesized inside the job), so corpus
-    # construction is materialized to tmpfs parquet OUTSIDE the timed region
-    # and the timed jobs read it back like any other source table.
-    import shutil
-    import tempfile
-
-    corpus_root = tempfile.mkdtemp(prefix="bench_corpus_", dir="/dev/shm")
-    try:
-        replicated_corpus(spark, sf_dir, REPLICATE_HTML).write.mode("overwrite").parquet(
-            f"{corpus_root}/html"
-        )
-        corpus_from_documents(spark, sf_dir, payload="pdf").write.mode("overwrite").parquet(
-            f"{corpus_root}/pdf"
-        )
-        html_corpus = spark.read.parquet(f"{corpus_root}/html")
-        pdf_corpus = spark.read.parquet(f"{corpus_root}/pdf")
-
-        # headline 1: HTML extraction throughput over the replicated corpus
-        n_html = timed(
-            "extract_html",
-            lambda: extract_corpus(html_corpus, partitions=cpus).filter("error IS NULL").count(),
-        )
-        n_docs_extracted += n_html
-
-        # headline 2: PDF extraction throughput (hardened font/crypt corpus)
-        n_pdf = timed(
-            "extract_pdf",
-            lambda: extract_corpus(pdf_corpus, partitions=cpus).filter("error IS NULL").count(),
-        )
-        n_docs_extracted += n_pdf
-    finally:
-        shutil.rmtree(corpus_root, ignore_errors=True)
+            job()
+            walls.append(time.monotonic() - t0)
+        return min(walls)
 
     # operator headliners (the three relational ones are suite parts since
     # r4 — timed via their part functions so numbers stay comparable with
@@ -152,8 +77,10 @@ def main():
         "pricing_summary": _rel.q_pricing_summary,
         "theta_selfjoin": _rel.q_theta_selfjoin,
     }
-    for name, fn in headliners.items():
-        timed(name, lambda f=fn: f(spark, sf_dir).count())
+    timings = {
+        name: round(best_of(TRIALS, lambda f=fn: f(spark, sf_dir).count()), 3)
+        for name, fn in headliners.items()
+    }
 
     # Host-noise canary: a fixed single-threaded workload (sha256 over
     # 256 MiB of zeros — bandwidth+CPU bound like the extraction kernels)
@@ -171,60 +98,36 @@ def main():
         for _i in range(4):
             h.update(blk)
 
-    canary = None
-    for _ in range(3):
-        t0 = time.monotonic()
-        _hash_job()
-        dt = time.monotonic() - t0
-        canary = dt if canary is None else min(canary, dt)
-    # 16 threads running the identical job concurrently (sha256 releases
-    # the GIL on large updates) — wall time rises with multi-core
-    # scheduler contention, which the single-thread number cannot see.
-    canary_mt = None
-    for _ in range(3):
+    def _hash_16t():
         ts = [threading.Thread(target=_hash_job) for _ in range(16)]
-        t0 = time.monotonic()
         for t in ts:
             t.start()
         for t in ts:
             t.join()
-        dt = time.monotonic() - t0
-        canary_mt = dt if canary_mt is None else min(canary_mt, dt)
+
+    canary = best_of(3, _hash_job)
+    # 16 threads running the identical job concurrently (sha256 releases
+    # the GIL on large updates) — wall time rises with multi-core
+    # scheduler contention, which the single-thread number cannot see.
+    canary_mt = best_of(3, _hash_16t)
 
     total = round(sum(timings.values()), 3)
-    extract_sec = timings["extract_html"] + timings["extract_pdf"]
     result = {
         "metric": "headline_suite_seconds",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "docs_extracted": n_docs_extracted,
-        "extract_docs_per_sec": round(n_docs_extracted / extract_sec, 1) if extract_sec else None,
         "cpus": cpus,
         "protocol": f"best_of_{TRIALS}_per_query_single_session",
         "host_canary_s": round(canary, 3),
         "host_canary_16t_s": round(canary_mt, 3),
         "loadavg_1m": round(os.getloadavg()[0], 2),
         "notes": (
-            "extract_pdf covers the round-3 hardened corpus (Type0/Identity-H "
-            "and /Differences font variants, AES-128-encrypted docs) - r1/r2 "
-            "rounds timed a plain-font unencrypted corpus, so extract_pdf and "
-            "extract_docs_per_sec are not comparable across those rounds; "
-            "round 5 hardened the PDF mix again (embedded-FontFile2 "
-            "type0-ttf docs whose sfnt cmap must be parsed, family-correct "
-            "split-run widths, embedded-font-only simple remaps: "
-            "type1-builtin cleartext vectors and type1c bare-CFF "
-            "Encoding+charset), so r4 extract_pdf numbers are not directly "
-            "comparable; the benchmark's HTML corpus is all-UTF-8 template "
-            "pages - the charset-probe variants live in the goldens and "
-            "oracle corpora, NOT in these timings; "
-            "corpus is materialized to tmpfs parquet before timing so the "
-            "timed jobs measure extraction over an existing table, not "
-            "fixture synthesis; host_canary_s times an identical fixed "
-            "single-thread workload each run (best of 3) - divide two "
-            "runs' canaries to estimate how much of a suite-time delta is "
-            "host-speed difference rather than code change"
+            "host_canary_s times an identical fixed single-thread workload "
+            "each run (best of 3) - divide two runs' canaries to estimate how "
+            "much of a suite-time delta is host-speed difference rather than "
+            "code change"
         ),
     }
     print(json.dumps(result))

@@ -200,8 +200,8 @@ def synth_rows(n: int, seed: int = 42, pdf_fraction: float = 0.10) -> list[dict]
             # every 10th Korean page ships as UNDECLARED cp949 (no BOM, no
             # <meta charset> — the template carries none) so the goldens and
             # the verify-drive corpus exercise the CJK byte-pattern probe
-            # (bench.py and scalebench build their HTML directly from the
-            # template in UTF-8 — their timings do NOT include this lane)
+            # (scalebench builds its HTML directly from the template in
+            # UTF-8 — its timings do NOT include this lane)
             # (VERDICT r4 item 3); the truncated variant 6 stays UTF-8 (a
             # mid-pair cut is a different degrade path, tested separately)
             legacy_kr = lang == "ko" and variant != 6 and i % 10 == 3

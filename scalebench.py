@@ -1,40 +1,25 @@
-"""Two-cluster-size scaling benchmark (BASELINE.md sandbox protocol).
+"""N → 4N scaling check for the ``spark-submit --py-files`` job.
 
-A real multi-executor cluster is unavailable in the sandbox, so the
-N → 4N-executor criterion (BASELINE.json: "scaling efficiency >= 0.8") is
-evidenced by running the IDENTICAL ``spark-submit --py-files`` job at two
-parallelism levels on the same machine and the same materialized input:
+BASELINE.json asks for scaling efficiency >= 0.8 from N to 4N executors. A
+real multi-executor cluster is not available, so the identical ``job.py``
+submit runs at two parallelism levels on one machine over one corpus:
 
-    size N  -> --master local[2]     (SCALEBENCH_N, default 2)
-    size 4N -> --master local[8]
+    size N  -> --master local[N],  N = (cores in this process's affinity) // 4
+    size 4N -> --master local[4N]
 
-Both sizes sit below the box's single memory-bus saturation point (~36k
-docs/s with the round-2 kernels) — the faithful single-box analog of a
-real cluster, where 4N executors bring 4N memory buses. See BASELINE.md
-"Where the residual inefficiency lives" for the saturated-window numbers.
+On a 4-vCPU host that is local[1] → local[4]. Each job is confined to its
+cores (taskset + JVM ``-XX:ActiveProcessorCount``), the analog of a
+cgroup-limited executor: unpinned, a small local[N] JVM free-rides
+host-sized GC/JIT/netty pools and understates efficiency.
 
-Each job is confined to exactly N cores (taskset + JVM
--XX:ActiveProcessorCount=N) — the analog of a cgroup-limited N-core
-executor. Unpinned, a local[2] JVM keeps ~4.3 cores runnable (parallel GC,
-JIT, netty pools sized for the 32-core host), inflating the small-size
-throughput and understating efficiency; see ``_pin_prefix``.
+Throughput is job.py's extraction-phase docs/s, best of ``TRIALS`` trials
+(the first warms the Python workers); efficiency = (thr_4N / thr_N) / 4.
+Both sizes must print the same ``output_hash``. The corpus, zip and sinks
+live in a temporary directory that is removed afterwards, so a run writes
+nothing inside the repository. Prints one JSON line; exits 1 if the hashes
+differ.
 
-Steps:
-1. materialize a corpus parquet (documents.parquet replicated xHTML_COPIES
-   as HTML + x1 as deterministic PDFs) — distributed generation, written
-   once, read by both runs;
-2. zip the package for --py-files;
-3. spark-submit job.py at the two pinned sizes (default local[2] and local[8]) (fresh output each);
-4. compute docs/sec from each job's internal extract wall (excludes JVM/
-   session startup, which is a per-driver constant, not a scaling term),
-   efficiency = (thr_4N / thr_N) / 4, and require byte-identical output
-   hashes across parallelism levels;
-5. write BENCH/scaling.run.json + BENCH/BASELINE.run.md (or the canonical
-   scaling.json / BASELINE.md when SCALEBENCH_PUBLISH=1 — set by the batch
-   harness tools/bench_attempts.py, so bare runs never clobber the
-   pre-declared median-pooled batch artifacts).
-
-Usage: python scalebench.py [sf_dir] [html_copies]
+Usage: python scalebench.py <sf_dir> [html_copies=8] [repeat=8]
 """
 
 from __future__ import annotations
@@ -42,284 +27,149 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
-import time
+import tempfile
 
 REPO = pathlib.Path(__file__).resolve().parent
-# tmpfs by default: a single box's disk is shared bandwidth that does NOT
-# grow with cores, unlike a real cluster where each executor brings its own
-# local disks + the object store scales with nodes. RAM-backed I/O keeps the
-# two-parallelism comparison about the pipeline, not one disk spindle.
-WORK = pathlib.Path(os.environ.get("SCALEBENCH_WORK", "/dev/shm/scalebench"))
+TRIALS = 3
+TARGET = 0.8
 
 
-def materialize_corpus(sf_dir: str, html_copies: int, repeat: int = 8) -> tuple[str, int]:
-    corpus_path = WORK / "corpus.parquet"
-    from pyspark.sql import SparkSession
+def replicated_corpus(spark, sf_dir: str, copies: int, repeat: int = 8):
+    """documents × copies as HTML pages in the job's input shape.
 
-    spark = (
-        SparkSession.builder.master("local[32]").appName("scalebench_gen")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, str(REPO))
+    The document text is repeated ``repeat`` times as paragraphs so a page
+    is Common-Crawl-sized (~5 KB) and kernel work dominates fixed costs.
+    """
     from pyspark.sql import functions as F
 
-    from pdf_extraction_spark.corpus import (
-        ARTICLE_PREFIX, ARTICLE_SUFFIX, corpus_from_documents, spread_docs,
-    )
+    from pdf_extraction_spark.corpus import ARTICLE_PREFIX, ARTICLE_SUFFIX, spread_docs
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    # the ×copies url stride embeds the copy index at +1e7 per copy; a
-    # doc_id at or past the stride would collide with copy k+1's urls
-    mx = docs.agg(F.max("doc_id")).first()[0]
-    if mx is not None and mx >= 10_000_000:
-        raise SystemExit(f"doc_id {mx} >= url stride 10_000_000: widen the stride")
     rep = docs.select(
         "doc_id", "text", "lang", "source",
-        F.explode(F.sequence(F.lit(0), F.lit(html_copies - 1))).alias("k"),
+        F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("k"),
     )
-    # repeat the document text as `repeat` paragraphs so per-doc size is
-    # Common-Crawl-realistic (~5 KB) and kernel CPU dominates fixed overheads
     body = F.array_join(F.array_repeat(F.col("text"), repeat), "</p><p>")
-    html = rep.select(
+    out = rep.select(
         F.concat(
             F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
             (F.col("doc_id") + F.col("k") * 10_000_000).cast("string"),
         ).alias("url"),
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        F.encode(
-            F.concat(F.lit(ARTICLE_PREFIX), body, F.lit(ARTICLE_SUFFIX)), "utf-8"
-        ).alias("html"),
-        F.col("text"), F.col("lang"),
+        F.encode(F.concat(F.lit(ARTICLE_PREFIX), body, F.lit(ARTICLE_SUFFIX)), "utf-8").alias("html"),
+        "text", "lang",
     )
+    # the ×copies url stride embeds the copy index at +1e7 per copy, which
+    # collides only if two (source, doc_id, k) tuples map to one url — i.e.
+    # doc_ids within one source differ by an exact copies-range multiple of
+    # 1e7 (the sf1 synthesizer's +1e8 replica stride does NOT, so a max-id
+    # cutoff would wrongly refuse it). Check the actual url set instead;
+    # html is pruned from this aggregate so it only scans ids.
+    n_all, n_urls = out.agg(F.count("*"), F.count_distinct("url")).first()
+    if n_urls != n_all:
+        raise ValueError(
+            f"×{copies} url stride collision: {n_all} rows but {n_urls} distinct urls"
+        )
+    return out
+
+
+def materialize_corpus(work: pathlib.Path, sf_dir: str, copies: int, repeat: int, cores: int) -> int:
+    """Write documents × copies as HTML plus × 1 as PDFs to ``work/corpus``."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_spark.corpus import corpus_from_documents
+
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]").appName("scalebench_gen")
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
     pdfs = corpus_from_documents(spark, sf_dir, payload="pdf").select(
         F.concat(F.lit("https://pdf."), F.expr("substring(url, 9)")).alias("url"),
         "warc_ts", "html", "text", "lang",
     )
-    corpus = html.unionByName(pdfs)
-    corpus.repartition(64).write.mode("overwrite").parquet(str(corpus_path))
-    n = spark.read.parquet(str(corpus_path)).count()
+    corpus = replicated_corpus(spark, sf_dir, copies, repeat).unionByName(pdfs)
+    corpus.repartition(64).write.parquet(str(work / "corpus"))
+    n = spark.read.parquet(str(work / "corpus")).count()
     spark.stop()
-    # record the build parameters so a SCALEBENCH_REUSE run can refuse a
-    # corpus built with different inputs instead of mislabeling its results
-    (WORK / "corpus_meta.json").write_text(json.dumps(
-        {"sf_dir": sf_dir, "html_copies": html_copies, "repeat": repeat, "n_docs": n}
-    ))
-    return str(corpus_path), n
+    return n
 
 
-def _pin_prefix(cores: int) -> list[str]:
-    """Confine the whole process tree (JVM + pyspark workers) to ``cores``
-    physical cores via taskset.
-
-    Without this, a ``local[N]`` job on this 32-core box free-rides
-    host-sized JVM thread pools — parallel GC, JIT compiler, netty — on top
-    of its N task slots (measured: a local[2] job keeps ~4.3 cores runnable
-    unpinned). That inflates the small-size throughput and UNDERSTATES
-    scaling efficiency. A real N-core executor is cgroup-confined to N
-    cores, so pinning is the faithful cluster analog, not a benchmark trick.
-    Disable with SCALEBENCH_PIN=0.
-    """
-    if os.environ.get("SCALEBENCH_PIN", "1") == "0":
-        return []
-    import shutil as _sh
-
-    if not _sh.which("taskset"):
-        return []
-    return ["taskset", "-c", f"0-{cores - 1}"]
-
-
-def run_at(cores: int, corpus_path: str, zip_path: str, trials: int | None = None) -> dict:
-    trials = trials or int(os.environ.get("SCALEBENCH_TRIALS", "3"))
-    out = WORK / f"out_{cores}"
+def run_at(cores: int, work: pathlib.Path) -> dict:
+    """spark-submit job.py at local[cores], pinned to ``cores`` cores."""
+    pin = ",".join(map(str, sorted(os.sched_getaffinity(0))[:cores]))
     cmd = [
-        *_pin_prefix(cores),
-        "spark-submit",
-        # size the JVM's own pools (GC, JIT, common pool) to the simulated
-        # node, matching what a cgroup-aware JVM does on a real executor
+        "taskset", "-c", pin, "spark-submit",
         "--driver-java-options", f"-XX:ActiveProcessorCount={cores}",
         "--master", f"local[{cores}]",
-        "--py-files", zip_path,
-        "--conf", "spark.sql.shuffle.partitions=" + str(max(cores, 8)),
+        "--py-files", str(work / "pdf_extraction_spark.zip"),
+        "--conf", f"spark.sql.shuffle.partitions={max(cores, 8)}",
         "--conf", "spark.sql.files.maxPartitionBytes=16m",
-        # bandwidth-bound regime: trade plentiful CPU for scarce memory-bus
-        # bytes — zstd halves shuffle+sink volume vs lz4/snappy
         "--conf", "spark.io.compression.codec=zstd",
         "--conf", "spark.sql.parquet.compression.codec=zstd",
-        "--conf", "spark.driver.memory=24g",
-        "--conf", f"spark.local.dir={WORK / 'spark-local'}",
+        "--conf", "spark.driver.memory=4g",
+        "--conf", f"spark.local.dir={work / 'spark-local'}",
         "--conf", "spark.ui.enabled=false",
         str(REPO / "job.py"),
-        "--input", corpus_path,
-        "--output", str(out),
+        "--input", str(work / "corpus"),
+        "--output", str(work / f"out_{cores}"),
         "--buckets", "64",
         "--partitions", str(cores * 3),
         "--fresh",
-        "--trials", str(trials),
+        "--trials", str(TRIALS),
     ]
-    t0 = time.monotonic()
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=str(REPO))
-    wall_total = time.monotonic() - t0
-    if proc.returncode != 0:
-        sys.stderr.write(proc.stdout[-2000:] + "\n" + proc.stderr[-4000:])
-        raise SystemExit(f"job failed at local[{cores}]")
     json_lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    if not json_lines:
+    if proc.returncode != 0 or not json_lines:
         sys.stderr.write(proc.stdout[-2000:] + "\n" + proc.stderr[-4000:])
-        raise SystemExit(f"job at local[{cores}] exited 0 but printed no JSON summary")
-    res = json.loads(json_lines[-1])
-    res["cores"] = cores
-    res["wall_total_s"] = round(wall_total, 3)
-    return res
+        raise SystemExit(f"job at local[{cores}] failed or printed no JSON summary")
+    return json.loads(json_lines[-1])
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
-    html_copies = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    if len(sys.argv) < 2:
+        raise SystemExit("usage: python scalebench.py <sf_dir> [html_copies=8] [repeat=8]")
+    sf_dir = sys.argv[1]
+    copies = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     repeat = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-    WORK.mkdir(parents=True, exist_ok=True)
+    cores = len(os.sched_getaffinity(0))
+    n = cores // 4
+    if n < 1:
+        raise SystemExit(f"need at least 4 cores for N → 4N, have {cores}")
 
-    zip_path = str(WORK / "pdf_extraction_spark.zip")
-    # always rebuild: `zip -qr` onto an existing archive only adds/refreshes
-    # entries, so a module deleted from the package would stay importable
-    # from the stale zip and the benchmarked jobs would run old code
-    pathlib.Path(zip_path).unlink(missing_ok=True)
-    subprocess.run(
-        ["zip", "-qr", zip_path, "pdf_extraction_spark", "-x", "*__pycache__*"],
-        cwd=str(REPO), check=True,
-    )
-
-    if os.environ.get("SCALEBENCH_REUSE") and (WORK / "corpus.parquet").exists():
-        corpus_path = str(WORK / "corpus.parquet")
-        meta_path = WORK / "corpus_meta.json"
-        if not meta_path.exists():
-            raise SystemExit(
-                "SCALEBENCH_REUSE: no corpus_meta.json next to the cached "
-                "corpus — rebuild without SCALEBENCH_REUSE"
-            )
-        meta = json.loads(meta_path.read_text())
-        want = {"sf_dir": sf_dir, "html_copies": html_copies, "repeat": repeat}
-        have = {k: meta.get(k) for k in want}
-        if have != want:
-            raise SystemExit(
-                f"SCALEBENCH_REUSE: cached corpus was built with {have}, "
-                f"this run asked for {want} — rebuild without SCALEBENCH_REUSE"
-            )
-        n_docs = meta["n_docs"]
-    else:
-        corpus_path, n_docs = materialize_corpus(sf_dir, html_copies, repeat)
-    print(f"corpus: {n_docs} docs at {corpus_path}", file=sys.stderr)
-
-    # N=2 -> 4N=8 keeps BOTH sizes below this box's single memory-bus wall
-    # (~36k docs/s with the round-2 kernels): on a real cluster 4N executors
-    # bring 4N memory buses, so the below-the-wall window is the faithful
-    # single-box analog. The saturated 4->16 window is reported alongside in
-    # BASELINE.md for transparency.
-    n_cores = int(os.environ.get("SCALEBENCH_N", "2"))
-    # Interleave the two sizes across rounds so both sample comparable host
-    # conditions (the shared sandbox host is bursty); best-of-all-trials per
-    # size is the capability number.
-    rounds = int(os.environ.get("SCALEBENCH_ROUNDS", "2"))
-    trials = int(os.environ.get("SCALEBENCH_TRIALS", "3"))
-    runs_n, runs_4n = [], []
-    for _ in range(rounds):
-        runs_n.append(run_at(n_cores, corpus_path, zip_path))
-        runs_4n.append(run_at(n_cores * 4, corpus_path, zip_path))
-
-    def merge(runs: list[dict]) -> dict:
-        best = max(runs, key=lambda r: r["docs_per_sec"])
-        merged = dict(best)
-        merged["trials"] = [t for r in runs for t in r["trials"]]
-        return merged
-
-    r8, r32 = merge(runs_n), merge(runs_4n)
-    n_docs = n_docs or r8["n_docs"]
-    thr8 = r8["docs_per_sec"]
-    thr32 = r32["docs_per_sec"]
-    eff = round((thr32 / thr8) / 4, 3)
-    identical = r8["output_hash"] == r32["output_hash"]
-
-    result = {
-        "sf_dir": sf_dir,
-        "n_docs": n_docs,
-        "N_cores": n_cores,
-        "4N_cores": n_cores * 4,
-        "throughput_N_docs_per_sec": thr8,
-        "throughput_4N_docs_per_sec": thr32,
-        "scaling_efficiency": eff,
-        "target": 0.8,
-        "pass": eff >= 0.8 and identical,
-        "output_bytes_identical": identical,
-        "rounds_per_size": rounds,
-        "trials_per_session": trials,
-        "runs": {f"local{n_cores}": r8, f"local{n_cores * 4}": r32},
-    }
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    # BENCH/scaling.json and BENCH/BASELINE.md hold the pre-declared
-    # median-pooled batch result; a bare confirmation run must not clobber
-    # them (it did once — restored in commit 3857fd3). Only the batch
-    # harness (tools/bench_attempts.py) sets SCALEBENCH_PUBLISH=1; bare
-    # runs land in *.run.* files.
-    publish = os.environ.get("SCALEBENCH_PUBLISH") == "1"
-    if not publish:
-        print(
-            "SCALEBENCH_PUBLISH unset: writing BENCH/scaling.run.json + "
-            "BENCH/BASELINE.run.md (canonical batch artifacts untouched)",
-            file=sys.stderr,
+    work = pathlib.Path(tempfile.mkdtemp(prefix="scalebench_"))
+    try:
+        subprocess.run(
+            ["zip", "-qr", str(work / "pdf_extraction_spark.zip"), "pdf_extraction_spark",
+             "-x", "*__pycache__*"],
+            cwd=str(REPO), check=True,
         )
-    out_json = bench_dir / ("scaling.json" if publish else "scaling.run.json")
-    out_md = bench_dir / ("BASELINE.md" if publish else "BASELINE.run.md")
-    out_json.write_text(json.dumps(result, indent=2))
+        n_docs = materialize_corpus(work, sf_dir, copies, repeat, cores)
+        print(f"corpus: {n_docs} docs; local[{n}] → local[{4 * n}]", file=sys.stderr)
+        runs = {size: run_at(size, work) for size in (n, 4 * n)}
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
-    md = f"""# BENCH/BASELINE.md — measured scaling numbers
-
-Protocol: BASELINE.md "Sandbox scaling protocol" — the identical
-`spark-submit --py-files pdf_extraction_spark.zip job.py` run at two
-parallelism levels over the same materialized corpus parquet
-({n_docs} docs from {sf_dir}: documents x{html_copies} as ~3-5 KB HTML pages
-(text repeated x{repeat} as paragraphs) + x1 as deterministic PDFs).
-Throughput uses the extraction-phase wall clock (salted repartition →
-mapInArrow kernels → bucket-clustered parquet write) — the part that scales
-with executors; session startup and per-run lineage bookkeeping are
-per-driver constants, amortized over a real run's corpus size, and are
-reported separately (`wall_s`, `wall_total_s`). Each job is confined to
-exactly its N cores (taskset + `-XX:ActiveProcessorCount=N`) — the analog
-of a cgroup-limited N-core executor; unpinned, a local[2] JVM keeps ~4.3
-cores runnable via host-sized GC/JIT/netty pools, which inflates the
-small-size number and understates efficiency. The two sizes run in
-interleaved session rounds ({trials} warm trials per session, {rounds}
-session(s) per size — the values this run actually used) so both sample
-comparable host conditions; the reported number is the best trial per size.
-The sandbox host is shared and bursty — single trials carry up to 2.5x
-scheduling noise; every trial is listed in scaling.json with its measured
-`busy_cores`/`steal_cores` (from /proc/stat) so noisy-window trials are
-auditable. When run through
-`tools/bench_attempts.py`, the published attempt is the MEDIAN-efficiency
-attempt of several complete runs (all attempt efficiencies listed below),
-not a best-of ratchet.
-
-| cluster size stand-in | docs | extract phase (s) | job wall (s) | total wall (s) | docs/sec | output hash |
-|---|---|---|---|---|---|---|
-| N  = local[{r8['cores']}]  | {r8['n_docs']} | {r8['extract_phase_s']} | {r8['wall_s']} | {r8['wall_total_s']} | {thr8} | `{r8['output_hash'][:12]}` |
-| 4N = local[{r32['cores']}] | {r32['n_docs']} | {r32['extract_phase_s']} | {r32['wall_s']} | {r32['wall_total_s']} | {thr32} | `{r32['output_hash'][:12]}` |
-
-- **scaling efficiency = (throughput_4N / throughput_N) / 4 = {eff}** (target >= 0.8: {"PASS" if eff >= 0.8 else "FAIL"})
-- **output bytes identical across parallelism levels: {identical}** (distributed order-insensitive hash: per-row xxhash64 of `url|extracted_text` combined by count + decimal sum + bit_xor)
-- resumability: the same job is bucket-checkpointed (`_lineage` table); see tests/test_lineage.py
-
-Regenerate (batch): `python tools/bench_attempts.py 9 {sf_dir} {html_copies} {repeat}`;
-a single bare `python scalebench.py` writes BENCH/*.run.* instead (set
-SCALEBENCH_PUBLISH=1 to overwrite the canonical artifacts).
-"""
-    out_md.write_text(md)
-    print(json.dumps(result))
+    thr_n, thr_4n = runs[n]["docs_per_sec"], runs[4 * n]["docs_per_sec"]
+    eff = round(thr_4n / thr_n / 4, 3)
+    identical = runs[n]["output_hash"] == runs[4 * n]["output_hash"]
+    print(json.dumps({
+        "sf_dir": sf_dir, "html_copies": copies, "repeat": repeat, "n_docs": n_docs,
+        "N_cores": n, "4N_cores": 4 * n,
+        "throughput_N_docs_per_sec": thr_n, "throughput_4N_docs_per_sec": thr_4n,
+        "scaling_efficiency": eff, "target": TARGET, "pass": eff >= TARGET and identical,
+        "output_hash": {f"local[{k}]": r["output_hash"] for k, r in runs.items()},
+        "output_bytes_identical": identical,
+        "trials": {f"local[{k}]": r["trials"] for k, r in runs.items()},
+    }))
+    if not identical:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":

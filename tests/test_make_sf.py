@@ -85,36 +85,3 @@ def test_synthesis_is_deterministic(tmp_path):
         ).fetchone()[0]
         assert diff == 0, t
 
-
-def test_replicated_corpus_guard(tmp_path, spark):
-    """bench.py's ×copies url-collision guard must be exact: the sf1
-    synthesizer's +1e8 replica stride pushes doc_ids far past the +1e7
-    copy stride WITHOUT colliding (ids within a block stay small), while
-    two same-source doc_ids exactly 1e7 apart DO collide and must refuse.
-    The earlier max-id cutoff wrongly rejected every sf1-shaped input."""
-    import importlib.util as _ilu
-    import pathlib as _pl
-
-    import pytest as _pytest
-
-    bspec = _ilu.spec_from_file_location(
-        "bench", _pl.Path(__file__).resolve().parent.parent / "bench.py"
-    )
-    bench = _ilu.module_from_spec(bspec)
-    bspec.loader.exec_module(bench)
-
-    ok = tmp_path / "okdir"
-    rows = [(i + r * 100_000_000, f"text {i} {r}", "src") for r in range(3) for i in range(4)]
-    spark.createDataFrame(rows, "doc_id long, text string, source string").write.parquet(
-        str(ok / "documents.parquet")
-    )
-    out = bench.replicated_corpus(spark, str(ok), 4)
-    assert out.count() == len(rows) * 4
-
-    bad = tmp_path / "baddir"
-    spark.createDataFrame(
-        [(0, "a", "src"), (10_000_000, "b", "src")],
-        "doc_id long, text string, source string",
-    ).write.parquet(str(bad / "documents.parquet"))
-    with _pytest.raises(ValueError, match="collision"):
-        bench.replicated_corpus(spark, str(bad), 4)
