@@ -1,7 +1,7 @@
 """spark-submit entry point for the extraction pipeline (north rule:
 "launched via spark-submit --py-files on multi-executor clusters").
 
-    spark-submit --master local[32] --py-files pdf_extraction_spark.zip \
+    spark-submit --master 'local[*]' --py-files pdf_extraction_spark.zip \
         job.py --input /path/corpus_parquet --output /path/out \
                --buckets 64 --salt 8 [--partitions 64] [--fresh] [--wet] [--cdx]
 

@@ -12,13 +12,18 @@ work:
 Protocol (pure batch — SURVEY.md §2.8: Structured Streaming is not required
 by the rule; an anti-join restart over a lineage table is):
 
-1. read ``{output}/_lineage`` (append-only parquet); ``done`` buckets are
-   skipped via an anti-filter (the bucket list is tiny — at most
-   ``n_buckets`` literals — so it folds into the scan as a pushed predicate,
-   pruning ``bucket=`` partition directories on re-read and short-circuiting
-   work for completed hosts).
+1. read ``{output}/_lineage`` (append-only parquet) ONCE, as one aggregate:
+   ``(bucket, status, n_buckets) -> count`` — at most 2·n_buckets rows per
+   grid. ``done`` buckets are skipped via an anti-filter (the bucket list is
+   tiny — at most ``n_buckets`` literals — so it folds into the scan as a
+   pushed predicate, pruning ``bucket=`` partition directories on re-read and
+   short-circuiting work for completed hosts). Every lineage row records the
+   ``n_buckets`` grid it was written under; resuming under a different grid
+   (or over lineage that records none) raises.
 2. append a ``pending`` row per remaining bucket (attempt = #prior pendings
-   + 1) — this is the checkpoint "intent" record.
+   + 1, from the same aggregate) — this is the checkpoint "intent" record,
+   written before any sink write, so every ``bucket=`` directory is covered
+   by a row naming its grid.
 3. extract remaining buckets; write parquet partitioned by ``bucket`` with
    dynamic partition overwrite, so a re-run of a half-written bucket
    replaces only its own directory (idempotent restart, no duplicates).
@@ -45,7 +50,7 @@ from pyspark.sql import functions as F
 from .pipeline import extract_corpus, host_col
 
 LINEAGE_SCHEMA = (
-    "run_id string, bucket int, status string, attempt int, "
+    "run_id string, bucket int, status string, attempt int, n_buckets int, "
     "n_docs long, n_errors long, n_chars long, wall_s double, ts timestamp"
 )
 
@@ -79,33 +84,6 @@ def _append_lineage(spark: SparkSession, output_path: str, rows: list[tuple]) ->
     )
 
 
-def _check_bucket_grid(spark: SparkSession, output_path: str, n_buckets: int) -> None:
-    """Refuse to resume under a DIFFERENT bucket grid: ``done`` bucket ids
-    only mean anything under the ``pmod(xxhash64(host), n_buckets)`` that
-    wrote them — resuming 64-bucket lineage with ``n_buckets=32`` would
-    skip documents whose NEW bucket id collides with an OLD done id and
-    leave stale dirs behind, silently. The grid is recorded once in
-    ``<output>/_meta`` (1-row parquet, same storage layer as the lineage
-    table)."""
-    meta_path = output_path.rstrip("/") + "/_meta"
-    try:
-        prev = spark.read.schema("n_buckets int").parquet(meta_path).head()
-    except Exception:
-        prev = None
-    if prev is not None:
-        if prev["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"output at {output_path} was bucketed with n_buckets="
-                f"{prev['n_buckets']}; resuming with n_buckets={n_buckets} "
-                "would silently skip documents — rerun with the original "
-                "bucket count or start fresh"
-            )
-        return
-    spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(meta_path)
-
-
 def run_resumable(
     corpus: DataFrame,
     output_path: str,
@@ -135,8 +113,30 @@ def run_resumable(
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
-    _check_bucket_grid(spark, output_path, n_buckets)
-    done = completed_buckets(spark, output_path)
+    # The one lineage read. ``done`` bucket ids only mean anything under the
+    # ``pmod(xxhash64(host), n_buckets)`` that wrote them: resuming 64-bucket
+    # lineage with n_buckets=32 would silently skip documents whose NEW
+    # bucket id collides with an OLD done id, so any other grid refuses.
+    lin = read_lineage(spark, output_path)
+    counts = (
+        lin.groupBy("bucket", "status", "n_buckets").count().collect()
+        if lin is not None else []
+    )
+    grids = {r["n_buckets"] for r in counts} - {n_buckets}
+    if None in grids:
+        raise ValueError(
+            f"lineage at {_lineage_path(output_path)} records no n_buckets "
+            "(written before the grid was recorded) — start fresh"
+        )
+    if grids:
+        raise ValueError(
+            f"output at {output_path} was bucketed with n_buckets="
+            f"{sorted(grids)}; resuming with n_buckets={n_buckets} "
+            "would silently skip documents — rerun with the original "
+            "bucket count or start fresh"
+        )
+    done = {r["bucket"] for r in counts if r["status"] == "done"}
+    prior = {r["bucket"]: r["count"] for r in counts if r["status"] == "pending"}
     tagged = corpus.withColumn("bucket", bucket_col(n_buckets))
 
     # pending = complement of done — no corpus scan needed; buckets that turn
@@ -152,13 +152,6 @@ def run_resumable(
         summary["wall_s"] = round(time.monotonic() - t0, 3)
         return summary
 
-    lin = read_lineage(spark, output_path)
-    prior = (
-        {r["bucket"]: r["n"] for r in lin.filter(F.col("status") == "pending")
-         .groupBy("bucket").agg(F.count("*").alias("n")).collect()}
-        if lin is not None else {}
-    )
-
     docs_path = output_path.rstrip("/") + "/docs"
     wave_size = wave_size or len(pending)
     waves = [pending[i:i + wave_size] for i in range(0, len(pending), wave_size)]
@@ -168,7 +161,7 @@ def run_resumable(
         ts = datetime.datetime.now()
         _append_lineage(
             spark, output_path,
-            [(run_id, int(b), "pending", int(prior.get(b, 0)) + 1,
+            [(run_id, int(b), "pending", int(prior.get(b, 0)) + 1, n_buckets,
               None, None, None, None, ts) for b in wave],
         )
         wave_in = (
@@ -228,7 +221,7 @@ def run_resumable(
             spark, output_path,
             [
                 (
-                    run_id, int(b), "done", int(prior.get(b, 0)) + 1,
+                    run_id, int(b), "done", int(prior.get(b, 0)) + 1, n_buckets,
                     int(stats[b]["n_docs"]) if b in stats else 0,
                     int(stats[b]["n_errors"]) if b in stats else 0,
                     int(stats[b]["n_chars"]) if b in stats else 0,

@@ -108,46 +108,6 @@ EXTRACTION_PARTS = (
 )
 
 
-def _multipart_unpivot(df: DataFrame, parts) -> DataFrame:
-    """Unpivot SEVERAL parts' value columns out of ONE DataFrame in a single
-    explode — the per-cell struct carries its part name, so parts that
-    derive from the same expensive subtree (here: one HTML extraction pass)
-    cost one execution, not one per part. All parts share the key columns."""
-    keys = parts[0][1]
-    key = F.concat_ws(
-        "|", *[F.coalesce(F.col(c).cast("string"), F.lit("∅")) for c in keys]
-    )
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(part).alias("part"),
-                F.lit(c).alias("c"),
-                (
-                    F.col(c).cast("string")
-                    if kind == STR
-                    else F.lit(None).cast("string")
-                ).alias("vs"),
-                (
-                    F.col(c).cast("double")
-                    if kind == NUM
-                    else F.lit(None).cast("double")
-                ).alias("vn"),
-            )
-            for part, _keys, vals in parts
-            for c, kind in vals
-        ]
-    )
-    return (
-        df.select(key.alias("k0"), F.explode(cells).alias("p"))
-        .select(
-            F.col("p.part").alias("part"),
-            F.concat_ws("|", F.col("k0"), F.col("p.c")).alias("k"),
-            F.col("p.vs").alias("v_str"),
-            F.col("p.vn").alias("v_num"),
-        )
-    )
-
-
 def q_extraction_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four north-rule roundtrips as one driver-checked query.
 
@@ -163,12 +123,11 @@ def q_extraction_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     html_out = extract_corpus(
         corpus_from_documents(spark, sf_dir, payload="html"), repartition=False
     ).select("url", "extracted_text", "n_elements", *_span_tile_cols())
-    html_branch = _multipart_unpivot(html_out, shared)
-    branches = [html_branch]
+    branches = [_unpivot(html_out, shared)]
     for name, fn, _sql, keys, vals in EXTRACTION_PARTS:
         if name in ("html_roundtrip", "spans_tile"):
             continue
-        branches.append(_unpivot(fn(spark, sf_dir), name, keys, vals))
+        branches.append(_unpivot(fn(spark, sf_dir), [(name, keys, vals)]))
     out = branches[0]
     for b in branches[1:]:
         out = out.unionByName(b)

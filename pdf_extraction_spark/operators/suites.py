@@ -155,18 +155,24 @@ CRAWL_PARTS = (
 )
 
 
-def _unpivot(df: DataFrame, part: str, keys: list, vals: list) -> DataFrame:
-    # single pass over the part: one explode of an in-row (column, v_str,
-    # v_num) struct array — a union branch per value column would re-execute
-    # the part's whole subtree once per column, and the shuffle-free
-    # mapInPandas parts (docmeta/crawl extraction) have no exchange for
-    # Spark to reuse, so full document extraction would run 2-4x per part
+def _unpivot(df: DataFrame, parts) -> DataFrame:
+    """Unpivot the value columns of one or more ``(part, keys, vals)`` parts
+    out of ONE DataFrame in a single explode of an in-row (part, column,
+    v_str, v_num) struct array. All parts share the key columns.
+
+    A union branch per value column would re-execute the subtree once per
+    column, and the shuffle-free mapInPandas parts (docmeta/crawl extraction)
+    have no exchange for Spark to reuse, so full document extraction would
+    run 2-4x per part; parts derived from the same expensive subtree (one
+    HTML extraction pass) likewise cost one execution, not one per part."""
+    keys = parts[0][1]
     key = F.concat_ws(
         "|", *[F.coalesce(F.col(c).cast("string"), F.lit("∅")) for c in keys]
     )
     cells = F.array(
         *[
             F.struct(
+                F.lit(part).alias("part"),
                 F.lit(c).alias("c"),
                 (
                     F.col(c).cast("string")
@@ -179,13 +185,14 @@ def _unpivot(df: DataFrame, part: str, keys: list, vals: list) -> DataFrame:
                     else F.lit(None).cast("double")
                 ).alias("vn"),
             )
+            for part, _keys, vals in parts
             for c, kind in vals
         ]
     )
     return (
-        df.select(F.lit(part).alias("part"), key.alias("k0"), F.explode(cells).alias("p"))
+        df.select(key.alias("k0"), F.explode(cells).alias("p"))
         .select(
-            "part",
+            F.col("p.part").alias("part"),
             F.concat_ws("|", F.col("k0"), F.col("p.c")).alias("k"),
             F.col("p.vs").alias("v_str"),
             F.col("p.vn").alias("v_num"),
@@ -196,7 +203,7 @@ def _unpivot(df: DataFrame, part: str, keys: list, vals: list) -> DataFrame:
 def make_suite(parts):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         dfs = [
-            _unpivot(fn(spark, sf_dir), name, keys, vals)
+            _unpivot(fn(spark, sf_dir), [(name, keys, vals)])
             for name, fn, _sql, keys, vals in parts
         ]
         return reduce(lambda a, b: a.unionByName(b), dfs)

@@ -210,9 +210,3 @@ def extract_corpus(
     )
     return pruned.mapInArrow(_make_extract_batches(keep_cols), schema=schema)
 
-
-def write_sink(result: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet sink in an Iceberg-compatible layout (S6 analog —
-    hybrid_docling_gpt4_processor.py:692-693 wrote one JSON per doc; we
-    append to a table instead)."""
-    result.write.mode(mode).parquet(path)

@@ -1,6 +1,8 @@
 """Checkpoint/lineage resumability tests (north rule: "resumable from
 checkpoint with per-partition lineage + metrics")."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,3 +119,68 @@ def test_resume_with_different_bucket_grid_refuses(spark, tmp_path):
     # same grid resumes cleanly and skips all done buckets
     s = run_resumable(corpus, out, n_buckets=8)
     assert s["buckets_run"] == 0 and s["resumed"]
+
+
+def test_grid_recorded_before_first_sink_write(spark, corpus_df, tmp_path):
+    """A crash in the FIRST wave leaves only ``pending`` rows — they alone
+    must carry the grid, so resuming under another grid still refuses."""
+    df, _ = corpus_df
+    out = str(tmp_path / "run5")
+    first_wave = {0, 1}
+    hit = {
+        r["b"] for r in df.select(lineage.bucket_col(N_BUCKETS).alias("b")).distinct().collect()
+    } & first_wave
+    assert hit, "corpus leaves the first wave empty"
+    with pytest.raises(Exception):
+        lineage.run_resumable(
+            df, out, n_buckets=N_BUCKETS, partitions=4, wave_size=2,
+            fail_buckets={min(hit)},
+        )
+    assert lineage.completed_buckets(spark, out) == set()
+    with pytest.raises(ValueError, match="n_buckets"):
+        lineage.run_resumable(df, out, n_buckets=4, partitions=4)
+
+
+def test_lineage_without_grid_refuses(spark, corpus_df, tmp_path):
+    """Lineage in the schema that predates the ``n_buckets`` column cannot
+    say which grid its ``done`` ids belong to: fail closed, resume nothing."""
+    df, _ = corpus_df
+    out = str(tmp_path / "run6")
+    old_schema = (
+        "run_id string, bucket int, status string, attempt int, "
+        "n_docs long, n_errors long, n_chars long, wall_s double, ts timestamp"
+    )
+    spark.createDataFrame(
+        [("old", b, "done", 1, 0, 0, 0, 0.0, None) for b in range(N_BUCKETS)],
+        old_schema,
+    ).coalesce(1).write.parquet(out + "/_lineage")
+    with pytest.raises(ValueError, match="start fresh"):
+        lineage.run_resumable(df, out, n_buckets=N_BUCKETS, partitions=4)
+    assert os.listdir(out) == ["_lineage"]
+    assert lineage.read_lineage(spark, out).count() == N_BUCKETS
+
+
+def test_spark_job_budget(spark, corpus_df, tmp_path):
+    """Bookkeeping jobs are a fixed cost on every run: a fresh single-wave run
+    is 7 jobs (pending append, 3 for the shuffled sink write, 2 for the
+    read-back aggregate, done append) and a no-op resume is the one aggregate
+    lineage read (2 jobs). Either count going up means a new pass over the
+    tables."""
+    df, _ = corpus_df
+    sc = spark.sparkContext
+    out = str(tmp_path / "run7")
+
+    def n_jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            summary = lineage.run_resumable(df, out, n_buckets=N_BUCKETS, partitions=4, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return summary, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fresh, fresh_jobs = n_jobs(f"fresh-{tmp_path.name}")
+    noop, noop_jobs = n_jobs(f"noop-{tmp_path.name}")
+    assert fresh["buckets_run"] == N_BUCKETS and noop["buckets_run"] == 0
+    assert fresh_jobs <= 7
+    assert noop_jobs <= 2
+    assert sorted(os.listdir(out)) == ["_lineage", "docs"]
