@@ -36,6 +36,15 @@ by the rule; an anti-join restart over a lineage table is):
 A crash between 3 and 4 leaves no ``done`` row → the bucket re-runs and its
 partition directory is overwritten. A crash before 3 costs nothing. Restart
 cost is O(remaining buckets).
+
+The ``pending`` and ``done`` rows of steps 2 and 4 are built on the driver as
+one Arrow table and handed to the JVM as a ``LocalRelation``
+(:func:`.pipeline.local_df`): a list-based ``createDataFrame`` goes through
+``sc.parallelize``, a ``PythonRDD`` whose Python worker tasks cost about as
+much per append as the whole docs write on a small wave. ``ts`` is built
+UTC-aware (``datetime.now(timezone.utc)``) because Arrow reads a naive
+``datetime`` as UTC wall time, which would shift every stored instant by the
+local offset; the aware value stores the same instant the list path did.
 """
 
 from __future__ import annotations
@@ -46,13 +55,22 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .pipeline import extract_corpus, host_col
+from .pipeline import extract_corpus, host_col, local_df
 
-LINEAGE_SCHEMA = (
-    "run_id string, bucket int, status string, attempt int, n_buckets int, "
-    "n_docs long, n_errors long, n_chars long, wall_s double, ts timestamp"
-)
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("attempt", T.IntegerType()),
+    T.StructField("n_buckets", T.IntegerType()),
+    T.StructField("n_docs", T.LongType()),
+    T.StructField("n_errors", T.LongType()),
+    T.StructField("n_chars", T.LongType()),
+    T.StructField("wall_s", T.DoubleType()),
+    T.StructField("ts", T.TimestampType()),
+])
 
 
 def bucket_col(n_buckets: int, url_col: str = "url"):
@@ -79,7 +97,7 @@ def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
 
 
 def _append_lineage(spark: SparkSession, output_path: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(
+    local_df(spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(
         _lineage_path(output_path)
     )
 
@@ -158,7 +176,7 @@ def run_resumable(
     fb = sorted(fail_buckets) if fail_buckets else []
 
     for wave in waves:
-        ts = datetime.datetime.now()
+        ts = datetime.datetime.now(datetime.timezone.utc)
         _append_lineage(
             spark, output_path,
             [(run_id, int(b), "pending", int(prior.get(b, 0)) + 1, n_buckets,
@@ -216,7 +234,7 @@ def run_resumable(
                 F.sum(F.length("extracted_text")).alias("n_chars"),
             ).collect()
         }
-        ts = datetime.datetime.now()
+        ts = datetime.datetime.now(datetime.timezone.utc)
         _append_lineage(
             spark, output_path,
             [

@@ -470,18 +470,23 @@ def q_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 codec, phrase = _SNIFF_VARIANTS[i % 7]
                 # the appended words must be encodable in EVERY lane codec
                 # (a non-ASCII word would crash the whole Arrow batch on
-                # e.g. cp949); keep their ASCII subset, drop words that
-                # become empty — identity on the ASCII driver corpus, and
-                # the oracle applies the same transform in SQL
+                # e.g. cp949); keep their printable-ASCII subset (the kernel
+                # folds tabs and other control whitespace into one space,
+                # which the oracle cannot see), drop words that become
+                # empty — identity on the driver corpus, and the oracle
+                # applies the same transform in SQL
                 words = [
                     s for s in (
-                        "".join(c for c in x if ord(c) < 128)
+                        "".join(c for c in x if "!" <= c <= "~")
                         for x in str(text).split(" ")[:4]
                     )
                     if s
                 ]
-                para = (phrase + " " + " ".join(words)).rstrip()
-                page = ("<html><body><main><p>" + para
+                # rstrip(" ") is DuckDB's rtrim; the kept words are element
+                # content, so & and < are escaped (the kernel decodes them)
+                para = (phrase + " " + " ".join(words)).rstrip(" ")
+                page = ("<html><body><main><p>"
+                        + para.replace("&", "&amp;").replace("<", "&lt;")
                         + "</p></main></body></html>")
                 payload = page.encode(_SNIFF_ENCODE.get(codec, codec))
                 rows["doc_id"].append(i)
@@ -510,10 +515,10 @@ SELECT doc_id,
          WHEN 5 THEN 'にほんごのてすとぶんしょうですよろしく'
          ELSE '東京都議会議員選挙結果速報経済産業省統計資料' END
        -- coalesce: DuckDB array_to_string([]) is NULL, not '' — an
-       -- all-non-ASCII word list must yield the bare phrase, not NULL
+       -- word list with no printable ASCII must yield the bare phrase, not NULL
        || rtrim(' ' || coalesce(array_to_string(
               list_filter(list_transform(w[1:4],
-                  t -> regexp_replace(t, '[^\\x00-\\x7f]', '', 'g')),
+                  t -> regexp_replace(t, '[^\\x21-\\x7e]', '', 'g')),
                   t -> t <> ''), ' '), '')) AS extracted
 FROM w
 """
@@ -601,7 +606,15 @@ def q_canonical_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §2.1); pipeline-completing capability like the corpus
     curation family.
     """
-    meta = _meta_df(corpus_from_documents(spark, sf_dir, payload="html"))
+    return canonical_clusters(_meta_df(corpus_from_documents(spark, sf_dir, payload="html")))
+
+
+def canonical_clusters(meta: DataFrame) -> DataFrame:
+    """``(canonical, n_docs, keeper_url)`` over ``(url, canonical)`` rows.
+    The keeper is the member with the smallest UTF-8 byte key — DuckDB's
+    VARCHAR order — stated as a binary key so it never depends on how the
+    engine collates strings (UTF-16 code-unit order puts astral-plane
+    characters before U+E000-U+FFFF; UTF-8 puts them after)."""
     from pyspark.sql import functions as F
 
     return (
@@ -609,7 +622,7 @@ def q_canonical_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("canonical")
         .agg(
             F.count("*").alias("n_docs"),
-            F.min("url").alias("keeper_url"),
+            F.min_by("url", F.encode("url", "UTF-8")).alias("keeper_url"),
         )
     )
 

@@ -14,7 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..pipeline import local_df
 from .common import first_words, tbl
 
 # deterministic per-language stopword lists (literal dimension table; the
@@ -28,9 +30,14 @@ STOPWORDS = {
 }
 
 
+_STOPWORD_SCHEMA = T.StructType(
+    [T.StructField("cand_lang", T.StringType()), T.StructField("tok", T.StringType())]
+)
+
+
 def _stopword_df(spark: SparkSession):
     rows = [(lang, w) for lang, words in STOPWORDS.items() for w in words]
-    return spark.createDataFrame(rows, "cand_lang string, tok string")
+    return local_df(spark, rows, _STOPWORD_SCHEMA)
 
 
 def _stopword_values_sql() -> str:

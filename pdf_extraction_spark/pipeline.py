@@ -16,7 +16,7 @@ across ``salt`` partitions while keeping host locality for everything else.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,6 +58,23 @@ OUTPUT_SCHEMA = T.StructType(
 def host_col(url_col="url"):
     """url-host for partitioning (pure JVM regexp, codegen'd)."""
     return F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/]+)", 1)
+
+
+def local_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame over a JVM ``LocalRelation``.
+
+    The rows cross to the JVM once, as one Arrow table, so the plan is a
+    ``LocalTableScan``: no ``PythonRDD`` and no Python worker tasks, which
+    ``createDataFrame(<list>)`` pays on every call (``sc.parallelize``).
+    Timestamp values must be timezone-aware: Arrow reads a naive
+    ``datetime`` as UTC wall time, shifting it by the local offset.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def salted_repartition(df: DataFrame, partitions: int, salt: int = 8) -> DataFrame:

@@ -16,6 +16,8 @@ from __future__ import annotations
 import gzip
 import re
 
+from . import paths_df
+
 _ITEM = re.compile(r"<(item|entry)\b[^>]*>(.*?)</\1\s*>", re.DOTALL | re.IGNORECASE)
 _KIND = re.compile(r"<\s*(rss|feed)\b", re.IGNORECASE)
 _TAG = {
@@ -123,11 +125,6 @@ def read_feeds(spark, paths: list[str], partitions: int | None = None):
     entry_id)`` — one row per entry, parsed on executors."""
     import pandas as pd  # noqa: F401
 
-    n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(n)
-
     def _parse(batches):
         import pandas as pd
 
@@ -143,7 +140,7 @@ def read_feeds(spark, paths: list[str], partitions: int | None = None):
                                 "feed_title": parsed["title"], **e})
             yield pd.DataFrame(out, columns=cols)
 
-    return paths_df.mapInPandas(
+    return paths_df(spark, paths, partitions).mapInPandas(
         _parse,
         schema=("feed_path string, kind string, feed_title string, "
                 "title string, link string, published string, "

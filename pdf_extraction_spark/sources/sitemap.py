@@ -17,6 +17,8 @@ from __future__ import annotations
 import gzip
 import re
 
+from . import paths_df
+
 _LOC_BLOCK = re.compile(
     r"<(url|sitemap)\b[^>]*>(.*?)</\1\s*>", re.DOTALL | re.IGNORECASE
 )
@@ -96,11 +98,6 @@ def read_sitemaps(spark, paths: list[str], partitions: int | None = None):
     priority)`` — one row per entry, parsed on executors."""
     import pandas as pd  # noqa: F401
 
-    n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(n)
-
     def _parse(batches):
         import pandas as pd
 
@@ -115,7 +112,7 @@ def read_sitemaps(spark, paths: list[str], partitions: int | None = None):
                     out.append({"sitemap_path": p, "kind": parsed["kind"], **e})
             yield pd.DataFrame(out, columns=cols)
 
-    return paths_df.mapInPandas(
+    return paths_df(spark, paths, partitions).mapInPandas(
         _parse,
         schema=("sitemap_path string, kind string, loc string, "
                 "lastmod string, changefreq string, priority double"),

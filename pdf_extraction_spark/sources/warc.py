@@ -30,6 +30,8 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import paths_df
+
 CRLF = b"\r\n"
 
 CORPUS_SCHEMA = T.StructType(
@@ -199,9 +201,6 @@ def read_warc(spark: SparkSession, paths: list[str], partitions: int | None = No
     memory; output rows are yielded in bounded Arrow batches."""
     import pandas as pd  # noqa: F401 — needed by the worker closure
 
-    n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(n)
-
     def _parse(batches):
         import pandas as pd
 
@@ -223,7 +222,7 @@ def read_warc(spark: SparkSession, paths: list[str], partitions: int | None = No
                             out = []
             yield pd.DataFrame(out, columns=cols)
 
-    return paths_df.mapInPandas(_parse, schema=CORPUS_SCHEMA)
+    return paths_df(spark, paths, partitions).mapInPandas(_parse, schema=CORPUS_SCHEMA)
 
 
 # -- deterministic writer (fixtures/tests) ----------------------------------------

@@ -27,6 +27,7 @@ import gzip
 import io
 import zlib
 
+from . import paths_df
 from . import warc as warcmod
 from .warc import CRLF, iter_warc_records
 
@@ -156,9 +157,6 @@ def read_wet(spark, paths: list[str], partitions: int | None = None):
     incrementally on executors (mirror of :func:`.warc.read_warc`)."""
     import pandas as pd  # noqa: F401
 
-    n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(n)
-
     def _parse(batches):
         import pandas as pd
 
@@ -180,7 +178,7 @@ def read_wet(spark, paths: list[str], partitions: int | None = None):
                             out = []
             yield pd.DataFrame(out, columns=cols)
 
-    return paths_df.mapInPandas(_parse, schema=WET_SCHEMA)
+    return paths_df(spark, paths, partitions).mapInPandas(_parse, schema=WET_SCHEMA)
 
 
 def q_wet_roundtrip(spark, sf_dir: str):

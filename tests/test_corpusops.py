@@ -318,10 +318,7 @@ def test_robots_digit_parity_on_exotic_hosts(spark, tmp_path):
     assert "https://x10y.example.com/about" not in targets
 
 
-def test_charset_sniff_parity_on_short_docs(spark, tmp_path):
-    """Docs with <4 words: the oracle's old 'w[1]||…||w[4]' concat
-    NULL-propagated while the kernel truncates (review finding); both
-    sides must now truncate identically."""
+def _charset_sniff_rows(spark, tmp_path, texts):
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -332,11 +329,11 @@ def test_charset_sniff_parity_on_short_docs(spark, tmp_path):
     sf.mkdir()
     pq.write_table(
         pa.table({
-            "doc_id": [0, 1, 2, 3],
-            "text": ["solo", "two words", "three little words", "now four words here"],
-            "lang": ["en"] * 4,
-            "source": ["src0"] * 4,
-            "n_chars": [4, 9, 18, 19],
+            "doc_id": list(range(len(texts))),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["src0"] * len(texts),
+            "n_chars": [len(t) for t in texts],
         }),
         sf / "documents.parquet",
     )
@@ -346,8 +343,59 @@ def test_charset_sniff_parity_on_short_docs(spark, tmp_path):
     )
     srows = {tuple(r) for r in docmeta.q_charset_sniff(spark, str(sf)).collect()}
     orows = {tuple(r) for r in con.execute(docmeta.SQL_CHARSET_SNIFF).fetchall()}
+    return srows, orows
+
+
+def test_charset_sniff_parity_on_short_docs(spark, tmp_path):
+    """Docs with <4 words: the oracle's old 'w[1]||…||w[4]' concat
+    NULL-propagated while the kernel truncates (review finding); both
+    sides must now truncate identically."""
+    srows, orows = _charset_sniff_rows(
+        spark, tmp_path, ["solo", "two words", "three little words", "now four words here"]
+    )
     assert srows == orows, srows ^ orows
     assert all(r[2] is not None for r in orows)
+
+
+def test_charset_sniff_parity_on_markup_and_control_chars(spark, tmp_path):
+    """Kept words ending in a tab (DuckDB's rtrim strips only spaces, and
+    the kernel folds control whitespace) or carrying '<' / '&' (element
+    content the kernel parses as markup) give the same row on both engines,
+    in every charset lane (doc_id % 7)."""
+    texts = [
+        "tail\t", "a<b c&d", "x\ty &amp; <p>", "\t only", "q&lt;r\r\n",
+        "<", "fine words here", "end\t\t", "&", "a<\tb",
+        "w1 w2 w3 w4\t", "\x0bvt", "lt< gt>", "amp& tab\t",
+    ]
+    srows, orows = _charset_sniff_rows(spark, tmp_path, texts)
+    assert srows == orows, srows ^ orows
+    assert {r[2].rsplit(" ", 1)[-1] for r in orows if r[0] in (0, 1)} == {"tail", "c&d"}
+
+
+def test_canonical_keeper_orders_like_duckdb_on_astral_urls(spark):
+    """The canonical-cluster keeper is the min url in UTF-8 byte order on
+    both engines, including url pairs whose UTF-16 code-unit order is the
+    reverse (an astral-plane character against one in U+E000-U+FFFF)."""
+    import duckdb
+
+    from pdf_extraction_spark.operators import docmeta
+
+    pairs = [("\uff5e", "\U0001f600"), ("\ue000", "\U00010000")]
+    rows = []
+    for i, (bmp, astral) in enumerate(pairs):
+        assert bmp.encode("utf-8") < astral.encode("utf-8")
+        assert astral.encode("utf-16-be") < bmp.encode("utf-16-be")
+        canon = f"https://h{i}.example.com/canonical"
+        rows += [(f"https://h{i}.example.com/d/{c}", canon) for c in (astral, bmp)]
+    meta = spark.createDataFrame(rows, "url string, canonical string")
+    srows = sorted(tuple(r) for r in docmeta.canonical_clusters(meta).collect())
+    orows = sorted(duckdb.connect().execute(
+        "SELECT canonical, count(*), min(url) FROM "
+        "(SELECT unnest(?) AS url, unnest(?) AS canonical) GROUP BY canonical",
+        [[u for u, _ in rows], [c for _, c in rows]],
+    ).fetchall())
+    assert srows == orows
+    assert [r[2][-1] for r in srows] == [bmp for bmp, _ in pairs]
 
 
 def test_decontaminate_tail_parity_on_short_benchmark_docs(spark, tmp_path):

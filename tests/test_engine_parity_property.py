@@ -735,6 +735,58 @@ def test_generated_tpch_relational_suite(
     )
 
 
+# Twelfth group: a builder that puts generated words into element content.
+# Its alphabet adds a tab (DuckDB's rtrim strips only spaces, the HTML
+# kernel folds control whitespace) and '<' / '&' (content the kernel parses
+# as markup), which the shared alphabet never produces.
+_CHARS_MARKUP = _CHARS + "\t<&"
+_word12 = st.text(alphabet=_CHARS_MARKUP, min_size=1, max_size=8).filter(
+    lambda w: " " not in w
+)
+_corpus12 = st.lists(
+    st.lists(_word12, min_size=1, max_size=12).map(" ".join), min_size=7, max_size=14
+)
+
+from pdf_extraction_spark.operators import docmeta  # noqa: E402
+
+PAIRS12 = [
+    (docmeta.q_charset_sniff, docmeta.SQL_CHARSET_SNIFF),
+]
+
+
+@pytest.mark.parametrize("fn,sql", PAIRS12, ids=[p[0].__name__ for p in PAIRS12])
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(texts=_corpus12)
+def test_generated_markup_chars_parity(spark, tmp_path_factory, fn, sql, texts):
+    sf = tmp_path_factory.mktemp("gencorpus12") / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": list(range(len(texts))),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": [f"s{i % 3}" for i in range(len(texts))],
+            "n_chars": [len(t) for t in texts],
+        }),
+        sf / "documents.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    srows = sorted(_norm(tuple(r)) for r in fn(spark, str(sf)).collect())
+    orows = sorted(_norm(tuple(r)) for r in con.execute(sql).fetchall())
+    assert srows == orows, (
+        f"{fn.__name__}: {len(srows)} spark vs {len(orows)} oracle rows; "
+        f"diff sample={list(set(srows) ^ set(orows))[:6]}"
+    )
+    assert srows
+
+
 # Deterministic large-corpus soak: one seeded 150-document random corpus
 # through the three end-to-end suites. The per-example hypothesis corpora
 # are small (<=13 docs); this catches the collision/edge mass that only

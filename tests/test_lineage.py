@@ -1,6 +1,7 @@
 """Checkpoint/lineage resumability tests (north rule: "resumable from
 checkpoint with per-partition lineage + metrics")."""
 
+import datetime
 import os
 
 import pytest
@@ -184,3 +185,67 @@ def test_spark_job_budget(spark, corpus_df, tmp_path):
     assert fresh_jobs <= 7
     assert noop_jobs <= 2
     assert sorted(os.listdir(out)) == ["_lineage", "docs"]
+
+
+@pytest.fixture
+def shifted_zones(spark, monkeypatch):
+    """Process ``TZ`` and Spark session zone both off UTC and off each other,
+    so a timestamp built or read in the wrong zone lands hours away."""
+    import time
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        monkeypatch.undo()
+        time.tzset()
+
+
+def _micros(ts) -> int:
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    return (ts - epoch) // datetime.timedelta(microseconds=1)
+
+
+def test_lineage_rows_round_trip_exactly(spark, tmp_path, shifted_zones):
+    """Every ``LINEAGE_SCHEMA`` column reads back with its type and value,
+    including the NULL metrics of ``pending`` rows and the exact ``ts``
+    instant (compared as ``unix_micros``, which no zone can shift)."""
+    out = str(tmp_path / "rt")
+    ts = datetime.datetime(2026, 3, 8, 9, 30, 15, 123456, tzinfo=datetime.timezone.utc)
+    rows = [
+        ("r1", 3, "pending", 2, 16, None, None, None, None, ts),
+        ("r1", 3, "done", 2, 16, 5_000_000_000, 7, 2**40 + 1, 0.125, ts),
+    ]
+    lineage._append_lineage(spark, out, rows)
+    back = lineage.read_lineage(spark, out)
+    assert back.schema == lineage.LINEAGE_SCHEMA
+    got = sorted(
+        tuple(r)
+        for r in back.select(
+            *[c for c in back.columns if c != "ts"], F.unix_micros("ts")
+        ).collect()
+    )
+    assert got == sorted(r[:-1] + (_micros(ts),) for r in rows)
+
+
+def test_lineage_ts_is_the_run_instant(spark, tmp_path, shifted_zones):
+    """``run_resumable`` stamps its rows with the instant it ran: a naive
+    local ``datetime`` would read back off by the process or session zone's
+    UTC offset."""
+    corpus = spark.createDataFrame(
+        [(f"https://h{i}.x/d{i}", None, None, None, None) for i in range(4)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    out = str(tmp_path / "ts")
+    before = _micros(datetime.datetime.now(datetime.timezone.utc))
+    lineage.run_resumable(corpus, out, n_buckets=2)
+    after = _micros(datetime.datetime.now(datetime.timezone.utc))
+    stamped = [
+        r[0] for r in lineage.read_lineage(spark, out).select(F.unix_micros("ts")).collect()
+    ]
+    assert len(stamped) == 4
+    assert all(before <= us <= after for us in stamped), (before, stamped, after)

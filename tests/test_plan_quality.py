@@ -175,3 +175,44 @@ def test_redirect_map_zero_shuffle(spark):
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" in plan
     assert "ENSURE_REQUIREMENTS" not in plan
+
+
+def _lineage_rows(spark, tmp_path):
+    import datetime
+
+    from pdf_extraction_spark import lineage
+    from pdf_extraction_spark.pipeline import local_df
+
+    ts = datetime.datetime.now(datetime.timezone.utc)
+    return local_df(
+        spark, [("r", 0, "pending", 1, 8, None, None, None, None, ts)],
+        lineage.LINEAGE_SCHEMA,
+    )
+
+
+def _stopwords(spark, tmp_path):
+    from pdf_extraction_spark.operators import textops
+
+    return textops._stopword_df(spark)
+
+
+def _warc_paths(spark, tmp_path):
+    from pdf_extraction_spark.sources import warc
+
+    path = str(tmp_path / "one.warc")
+    warc.write_warc([], path)
+    return warc.read_warc(spark, [path])
+
+
+@pytest.mark.parametrize(
+    "build", [_lineage_rows, _stopwords, _warc_paths], ids=lambda f: f.__name__.strip("_")
+)
+def test_driver_rows_are_local_relations(spark, tmp_path, build):
+    """Rows built on the driver (lineage appends, the stopword dimension,
+    connector path lists) reach the JVM as a ``LocalTableScan`` — never a
+    parallelized ``PythonRDD`` (``Scan ExistingRDD``), whose Python worker
+    tasks are a fixed cost on every call."""
+    plan = plan_of(build(spark, tmp_path))
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert "PythonRDD" not in plan
