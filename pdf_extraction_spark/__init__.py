@@ -12,7 +12,7 @@ Layout:
     operators/  relational / dedup / similarity / text-analysis operators
     streaming/  Structured Streaming variant of the pipeline
     corpus.py   deterministic synthetic fixture corpus
-    pipeline.py Spark extraction pipeline (salted repartition + mapInPandas)
+    pipeline.py Spark extraction pipeline (salted repartition + one mapInArrow stage)
     lineage.py  per-partition checkpoint/lineage + resumable restart
 """
 

@@ -288,6 +288,15 @@ def spread_docs(docs):
     return docs.repartition(parallelism, "doc_id")
 
 
+def doc_url():
+    """``'https://' || source || '.example.com/doc/' || doc_id``: the url of
+    a ``documents`` row, as the DuckDB oracles reconstruct it."""
+    from pyspark.sql import functions as F
+
+    return F.concat(F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
+                    F.col("doc_id").cast("string"))
+
+
 def corpus_from_documents(spark, sf_dir: str, payload: str = "html"):
     """Build the corpus table from ``{sf_dir}/documents.parquet``.
 
@@ -300,10 +309,8 @@ def corpus_from_documents(spark, sf_dir: str, payload: str = "html"):
     from pyspark.sql import types as T
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet"))
-    url = F.concat(F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
-                   F.col("doc_id").cast("string")).alias("url")
     base = docs.select(
-        url,
+        doc_url().alias("url"),
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
         F.col("text"),
         F.col("lang"),

@@ -3,7 +3,7 @@ link-density heuristics (Boilerpipe / trafilatura family of algorithms).
 
 Pure Python, stdlib only, deterministic, total (never raises on malformed
 input). This is the single-threaded ground-truth kernel; the Spark pipeline
-calls :func:`extract_html` from inside an Arrow-batched ``mapInPandas`` stage
+calls :func:`extract_html` from inside an Arrow-batched ``mapInArrow`` stage
 and golden tests require byte-identical output from both paths.
 
 Semantics carried over from the reference pipeline (see SURVEY.md §2, all

@@ -23,3 +23,17 @@ def first_words(text: object, k: int) -> list[str]:
     mirrors this guard as ``coalesce(w[i], 'pad')`` so both engines build
     the identical fixture on any input."""
     return (str(text).split(" ") + [PAD_WORD] * k)[:k]
+
+
+# Python's str.isspace() set, as an RE2 class: the HTML kernel normalizes
+# attribute values with " ".join(v.split()) after entity decoding.
+_SQL_WS = (r"[\t\n\x0b\f\r\x1c-\x1f \x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+           r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+")
+
+
+def sql_fold_ws(expr: str) -> str:
+    """DuckDB twin of the kernel's attribute-value fold: whitespace runs
+    become one space and the edges are trimmed. Oracles that read a
+    builder's words back out of an HTML attribute wrap them in this, so a
+    word holding a tab parses the same on both engines."""
+    return f"trim(regexp_replace({expr}, '{_SQL_WS}', ' ', 'g'))"

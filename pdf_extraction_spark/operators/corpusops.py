@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..corpus import spread_docs
+from ..corpus import doc_url, spread_docs
+from ..pipeline import META_SCHEMA, _extract_stage
 from .common import tbl
 from .textops import QUALITY_EXPR_SQL
 
@@ -844,49 +845,27 @@ def q_indexable_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-policy curation gate: the two signals crawl pipelines honor
     before a page may enter a corpus — ``<meta name=robots>`` noindex and
     rel=canonical pointing elsewhere (the shell page collapses onto its
-    canonical target; only the canonical copy is kept). The metadata comes
-    out of one Arrow extraction pass; the verdict itself is JVM column
-    algebra, so at 10^12 docs this is a narrow map with zero shuffle."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..kernels.html_extract import extract_html
-    from ..kernels.urlnorm import resolve_link
-
+    canonical target; only the canonical copy is kept). The head page and
+    the verdict are JVM column algebra around the extraction stage's
+    ``meta`` column, so at 10^12 docs this is a narrow map with zero
+    shuffle."""
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "source"
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "url": [], "robots": [], "canonical": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                if i % 5 == 0:
-                    head = "<meta name='robots' content='noindex, follow'>"
-                elif i % 7 == 0:
-                    head = "<link rel='canonical' href='/other'>"
-                else:
-                    head = f"<link rel='canonical' href='/doc/{i}'>"
-                meta = extract_html(
-                    f"<html><head>{head}</head><body><p>x</p></body></html>"
-                )["meta"]
-                canon = meta.get("canonical")
-                rows["doc_id"].append(i)
-                rows["url"].append(url)
-                rows["robots"].append(meta.get("robots"))
-                rows["canonical"].append(
-                    resolve_link(url, canon) if canon else None
-                )
-            yield pd.DataFrame(rows)
-
-    m = docs.mapInPandas(
-        gen, schema="doc_id long, url string, robots string, canonical string"
+    i = F.col("doc_id")
+    head = (
+        F.when(i % 5 == 0, F.lit("<meta name='robots' content='noindex, follow'>"))
+        .when(i % 7 == 0, F.lit("<link rel='canonical' href='/other'>"))
+        .otherwise(F.concat(F.lit("<link rel='canonical' href='/doc/"),
+                            i.cast("string"), F.lit("'>")))
     )
-    noindex = F.coalesce(F.col("robots"), F.lit("")).contains("noindex")
-    non_canon = F.col("canonical").isNotNull() & (
-        F.col("canonical") != F.col("url")
+    html = F.concat(F.lit("<html><head>"), head,
+                    F.lit("</head><body><p>x</p></body></html>"))
+    pages = docs.select(doc_url().alias("url"), F.encode(html, "UTF-8").alias("html"), "doc_id")
+    m = _extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
+    noindex = F.coalesce(F.col("meta.robots"), F.lit("")).contains("noindex")
+    non_canon = F.col("meta.canonical").isNotNull() & (
+        F.col("meta.canonical") != F.col("url")
     )
     return m.select(
         "doc_id",
@@ -1041,12 +1020,8 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as :func:`q_stratified_sample`, modulo bias ~2e-8). One combinable
     groupBy on a 64-value key; no sort, no driver collection."""
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    url = F.concat(
-        F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
-        F.col("doc_id").cast("string"),
-    )
     shard = (
-        F.conv(F.substring(F.md5(url), 1, 8), 16, 10).cast("long") % N_SHARDS
+        F.conv(F.substring(F.md5(doc_url()), 1, 8), 16, 10).cast("long") % N_SHARDS
     ).cast("int")
     return (
         docs.select(shard.alias("shard"), "n_chars")

@@ -3,52 +3,30 @@
 Webtext pipelines surface per-document metadata alongside the extracted
 text: the head ``<title>`` and robots/author ``<meta>`` tags for HTML, the
 trailer /Info dictionary for PDF (what PyMuPDF exposes as ``doc.metadata``
-in the reference's stack — the reference itself never reads it). Both run
-as one Arrow-batched ``mapInPandas`` pass over the corpus; at 10^12 docs
-this is embarrassingly parallel, partitioned by the source scan (with the
+in the reference's stack — the reference itself never reads it). Both are
+a projection of the ``meta`` column the one Arrow extraction stage
+(``pipeline._extract_stage``) builds; at 10^12 docs this is
+embarrassingly parallel, partitioned by the source scan (with the
 ``spread_docs`` rebalance kicking in only when a small-file scan would
 starve the cores — see :func:`..corpus.spread_docs`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import corpus_from_documents, spread_docs
-from .common import first_words
-
-_META_SCHEMA = ("url string, title string, author string, "
-                "robots string, canonical string")
+from ..pipeline import META_SCHEMA, _extract_stage
+from .common import first_words, sql_fold_ws
 
 
 def _meta_df(corpus: DataFrame) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.dispatch import extract_document
-        from ..kernels.urlnorm import resolve_link
-
-        for pdf in batches:
-            rows = {"url": [], "title": [], "author": [], "robots": [],
-                    "canonical": []}
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                meta = extract_document(payload)["meta"]
-                rows["url"].append(url)
-                rows["title"].append(meta.get("title"))
-                rows["author"].append(meta.get("author"))
-                rows["robots"].append(meta.get("robots"))
-                # rel=canonical resolves against the document URL (with any
-                # <base href> honored first, like anchors)
-                base = meta.get("base")
-                eff = (resolve_link(url, base) or url) if base else url
-                canon = meta.get("canonical")
-                rows["canonical"].append(
-                    resolve_link(eff, canon) if canon else None
-                )
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(gen, _META_SCHEMA)
+    """(url, title, author, robots, canonical) per document: the ``meta``
+    column of the extraction stage, canonical resolved against the
+    ``<base href>``-adjusted document URL."""
+    return _extract_stage(corpus, META_SCHEMA).select(
+        "url", *(f"meta.{c}" for c in ("title", "author", "robots", "canonical"))
+    )
 
 
 def q_html_head_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +251,8 @@ def q_opengraph_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i = int(doc_id)
                 # attribute content: escape so a quote in a word cannot
                 # truncate the attribute (same fix as image_alt_pairs; the
-                # kernel decodes entities back to the raw words)
+                # kernel decodes entities back and folds whitespace, which
+                # the oracle mirrors with sql_fold_ws)
                 w = [
                     x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
                     for x in first_words(text, 2)
@@ -304,10 +283,10 @@ def q_opengraph_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_OPENGRAPH_CARDS = """
+SQL_OPENGRAPH_CARDS = f"""
 WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents)
 SELECT doc_id,
-       coalesce(w[1], 'pad') || ' ' || coalesce(w[2], 'pad') AS og_title,
+       {sql_fold_ws("coalesce(w[1], 'pad') || ' ' || coalesce(w[2], 'pad')")} AS og_title,
        'article' AS og_type,
        'https://' || source || '.example.com/img/' || CAST(doc_id AS VARCHAR) || '.jpg' AS og_image,
        'https://' || source || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS og_url

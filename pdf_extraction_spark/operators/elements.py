@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import spread_docs
+from ..corpus import doc_url, spread_docs
 from ..kernels import pdf_write
 from ..pipeline import extract_corpus
 from .common import first_words
@@ -49,10 +49,7 @@ def _titled_pdf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return docs.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
+        doc_url().alias("url"),
         make_pdf("text", "doc_id").alias("html"),
         "doc_id",
     )
@@ -99,10 +96,7 @@ def _figured_pdf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return docs.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
+        doc_url().alias("url"),
         make_pdf("text", "doc_id").alias("html"),
     )
 

@@ -32,8 +32,9 @@ from .suites import NUM, STR, _unpivot, make_suite_sql
 
 def q_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: wrap documents.text in the article template (JVM concat),
-    run the HTML extraction kernel via mapInPandas, return the extracted
-    text — must equal documents.text byte-identically (north rule)."""
+    run the HTML extraction kernel in the mapInArrow stage, return the
+    extracted text — must equal documents.text byte-identically (north
+    rule)."""
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
     out = extract_corpus(corpus, repartition=False)
     return out.select("url", "extracted_text", "n_elements")

@@ -5,10 +5,11 @@ graphs (quality/spam features a la OPIC/harmonic centrality), and URL
 dedup. The reference has no link path at all (its inputs are local files);
 this is the Spark-first rebuild over the corpus table:
 
-* the Arrow-batched anchor/annotation kernel runs inside ``mapInPandas``
-  (one Python worker pass, no per-row UDF);
-* URL resolution (:mod:`..kernels.urlnorm`) happens in the same batch, so
-  the shuffle only ever carries resolved targets;
+* anchors and PDF URI annotations come out of the one Arrow extraction
+  stage (``pipeline._extract_stage``) as a typed ``links`` column, which
+  :func:`outlinks` explodes with a JVM ``inline``;
+* URL resolution (:mod:`..kernels.urlnorm`) happens in that same batch,
+  so the shuffle only ever carries resolved targets;
 * the host-graph rollup is a plain map-side-combinable groupBy — at 10^12
   documents the shuffle key is (src_host, dst_host), bounded by the host
   vocabulary, not the document count.
@@ -27,11 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..corpus import corpus_from_documents, spread_docs
-from .common import first_words, tbl
-
-_LINKS_SCHEMA = ("url string, href string, resolved string, "
-                 "chrome boolean, nofollow boolean, anchor string")
+from ..corpus import corpus_from_documents, doc_url, spread_docs
+from ..pipeline import LINKS_SCHEMA, META_SCHEMA, _extract_stage
+from .common import first_words, sql_fold_ws, tbl
 
 
 def outlinks(corpus: DataFrame) -> DataFrame:
@@ -40,36 +39,7 @@ def outlinks(corpus: DataFrame) -> DataFrame:
     (javascript:, mailto:, fragments) are dropped after resolution. The
     anchor text rides along because it is the web's oldest relevance
     signal — :func:`q_anchor_text_rollup` aggregates it per target."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.dispatch import extract_document
-        from ..kernels.urlnorm import resolve_link
-
-        for pdf in batches:
-            urls, hrefs, resolved, chrome, nofollow, anchors = [], [], [], [], [], []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                res = extract_document(payload)
-                # <base href> redirects relative resolution (itself resolved
-                # against the document URL, per HTML spec)
-                base = res["meta"].get("base") if res["meta"] else None
-                eff_base = (resolve_link(url, base) or url) if base else url
-                for lk in res["links"]:
-                    tgt = resolve_link(eff_base, lk["href"])
-                    if tgt is None:
-                        continue
-                    urls.append(url)
-                    hrefs.append(lk["href"])
-                    resolved.append(tgt)
-                    chrome.append(bool(lk["chrome"]))
-                    # PDF /Annots links carry no rel semantics -> False
-                    nofollow.append(bool(lk.get("nofollow", False)))
-                    anchors.append(lk.get("text") or "")
-            yield pd.DataFrame(
-                {"url": urls, "href": hrefs, "resolved": resolved,
-                 "chrome": chrome, "nofollow": nofollow, "anchor": anchors}
-            )
-
-    return corpus.select("url", "html").mapInPandas(gen, _LINKS_SCHEMA)
+    return _extract_stage(corpus, LINKS_SCHEMA).select("url", F.inline("links"))
 
 
 def q_extract_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,10 +70,10 @@ def q_anchor_text_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by every search/ranking pipeline from the link graph. nofollow edges
     are excluded, as ranking pipelines do. Map-side-combinable groupBy on
     (resolved, anchor) — cardinality is the target×vocabulary space, far
-    below the edge count. Run standalone this re-extracts outlinks (Spark
-    cannot reuse a shuffle-free mapInPandas subtree across suite parts);
-    a production pipeline materializes the outlinks table once and feeds
-    every link-derived rollup from it."""
+    below the edge count. Run standalone, each link query re-runs the
+    extraction stage that :func:`outlinks` projects (suite parts share no
+    ``mapInArrow`` subtree); a production pipeline writes the outlinks
+    table once and feeds every link-derived rollup from it."""
     lk = q_extract_outlinks(spark, sf_dir).filter(~F.col("nofollow"))
     return (
         lk.groupBy("resolved", "anchor")
@@ -154,51 +124,34 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved against the document URL — crawlers follow these like 3xx
     responses (and dedup pipelines collapse the redirecting shell page onto
     its target). Docs with ``doc_id % 4 == 0`` carry no refresh and must
-    emit nothing. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
-    from ..kernels.html_extract import extract_html
-    from ..kernels.urlnorm import resolve_link
-
+    emit nothing. The shell page is JVM column algebra and its head meta a
+    projection of the extraction stage; zero shuffle."""
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "text", "source"
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "delay_s": [], "target": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                # the word lands in a URL PATH: keep only unreserved chars
-                # (RFC 3986) so URL-structural bytes can't change the
-                # parse — a trailing '?' is an empty query real resolution
-                # drops, ';'/''' would need quoting. Identity on the
-                # alnum driver corpus; the oracle mirrors the strip.
-                w0 = _re.sub(r"[^A-Za-z0-9._~-]", "", str(text).split(" ", 1)[0])
-                if w0 and set(w0) == {"."}:
-                    # '.'/'..' are RFC 3986 dot-segments and would be
-                    # normalized away (or climb a level) during resolution
-                    w0 = ""
-                frag = (
-                    "" if i % 4 == 0 else
-                    f"<meta http-equiv='refresh' content='{i % 7};url=/next/{w0}'>"
-                )
-                html = (
-                    f"<html><head>{frag}</head>"
-                    "<body><p>shell page body text</p></body></html>"
-                )
-                meta = extract_html(html)["meta"]
-                if meta.get("refresh_url") is None:
-                    continue
-                rows["doc_id"].append(i)
-                rows["delay_s"].append(meta["refresh_delay"])
-                rows["target"].append(resolve_link(url, meta["refresh_url"]))
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, schema="doc_id long, delay_s int, target string"
+    i = F.col("doc_id")
+    # the word lands in a URL PATH: keep only unreserved chars (RFC 3986)
+    # so URL-structural bytes can't change the parse — a trailing '?' is an
+    # empty query real resolution drops, ';'/''' would need quoting. Identity
+    # on the alnum driver corpus; the oracle mirrors the strip.
+    w0 = F.regexp_replace(F.substring_index("text", " ", 1), "[^A-Za-z0-9._~-]", "")
+    # '.'/'..' are RFC 3986 dot-segments and would be normalized away (or
+    # climb a level) during resolution
+    w0 = F.when(w0.rlike("^[.]+$"), F.lit("")).otherwise(w0)
+    frag = F.when(i % 4 == 0, F.lit("")).otherwise(F.concat(
+        F.lit("<meta http-equiv='refresh' content='"), F.pmod(i, F.lit(7)).cast("string"),
+        F.lit(";url=/next/"), w0, F.lit("'>"),
+    ))
+    html = F.concat(
+        F.lit("<html><head>"), frag,
+        F.lit("</head><body><p>shell page body text</p></body></html>"),
+    )
+    pages = docs.select(doc_url().alias("url"), F.encode(html, "UTF-8").alias("html"), "doc_id")
+    return (
+        _extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
+        .filter(F.col("meta.refresh_delay").isNotNull())
+        .select("doc_id", F.col("meta.refresh_delay").alias("delay_s"),
+                F.col("meta.refresh").alias("target"))
     )
 
 
@@ -242,8 +195,8 @@ def q_image_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 url = f"https://{source}.example.com/doc/{i}"
                 # words are ATTRIBUTE content: escape &/'/< so a word
                 # containing the quote delimiter cannot truncate the
-                # attribute (the kernel decodes entities back, so the
-                # parsed alt equals the raw words — what the oracle emits)
+                # attribute (the kernel decodes entities back and folds
+                # whitespace, which the oracle mirrors with sql_fold_ws)
                 w = [
                     x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
                     for x in first_words(text, 4)
@@ -274,7 +227,7 @@ def q_image_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_IMAGE_ALT_PAIRS = """
+SQL_IMAGE_ALT_PAIRS = f"""
 WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents)
 SELECT doc_id, CAST(0 AS INT) AS pos,
        'https://' || source || '.example.com/logo.png' AS src,
@@ -283,12 +236,14 @@ FROM w
 UNION ALL
 SELECT doc_id, CAST(1 AS INT),
        'https://' || source || '.example.com/img/' || CAST(doc_id AS VARCHAR) || '.jpg',
-       coalesce(w[1], 'pad') || ' ' || coalesce(w[2], 'pad'), FALSE, CAST(2 AS INT)
+       {sql_fold_ws("coalesce(w[1], 'pad') || ' ' || coalesce(w[2], 'pad')")},
+       FALSE, CAST(2 AS INT)
 FROM w
 UNION ALL
 SELECT doc_id, CAST(2 AS INT),
        'https://' || source || '.example.com/img/' || CAST(doc_id AS VARCHAR) || '.png',
-       coalesce(w[3], 'pad') || ' ' || coalesce(w[4], 'pad'), FALSE, CAST(0 AS INT)
+       {sql_fold_ws("coalesce(w[3], 'pad') || ' ' || coalesce(w[4], 'pad')")},
+       FALSE, CAST(0 AS INT)
 FROM w
 """
 
@@ -534,11 +489,7 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     lk = q_extract_outlinks(spark, sf_dir).filter(~F.col("nofollow"))
     crawled = spark.read.parquet(
         f"{sf_dir.rstrip('/')}/documents.parquet"
-    ).select(
-        F.concat(F.lit("https://"), F.col("source"),
-                 F.lit(".example.com/doc/"),
-                 F.col("doc_id").cast("string")).alias("url")
-    )
+    ).select(doc_url().alias("url"))
     cand = lk.select(
         F.col("resolved").alias("target"),
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long").alias("discoverer"),

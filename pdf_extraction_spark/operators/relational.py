@@ -29,10 +29,14 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = tbl(spark, sf_dir, "lineitem")
     # money/discount columns are fixed-decimal (cents / percent): recover
-    # the integers (round is exact) and sum THOSE — BIGINT sums are
+    # the integers (round is exact) and sum THOSE — integer sums are
     # order-independent across partitionings and engines, where a double
     # sum's last-ulp depends on accumulation order and can flip the
-    # rounded cent at a .005 midpoint (the quality_score fragility class)
+    # rounded cent at a .005 midpoint (the quality_score fragility class).
+    # The revenue product and its sum run in DECIMAL(38,0): a BIGINT sum
+    # overflows past 9.2e18 1e-4-dollar units (ARITHMETIC_OVERFLOW under
+    # ANSI) where DuckDB's sum(BIGINT) promotes to HUGEINT
+    dec = "decimal(38,0)"
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .select(
@@ -44,7 +48,8 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.sum(F.col("price_c") * (100 - F.col("disc_p"))).alias("rev_u"),
+            F.sum(F.col("price_c").cast(dec) * (100 - F.col("disc_p")).cast(dec))
+            .alias("rev_u"),
             F.sum("disc_p").alias("disc_sum"),
             F.count("*").alias("n_rows"),
         )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .kernels.dispatch import extract_document
+from .kernels.urlnorm import resolve_link
 
 SPAN_TYPE = T.StructType(
     [
@@ -53,6 +54,36 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("error", T.StringType()),
     ]
 )
+
+# One fetchable outlink: the raw href, its absolute normalized target, the
+# boilerplate flag, rel=nofollow, and the anchor text ("" for PDF /Annots).
+LINK_TYPE = T.StructType(
+    [
+        T.StructField("href", T.StringType()),
+        T.StructField("resolved", T.StringType()),
+        T.StructField("chrome", T.BooleanType()),
+        T.StructField("nofollow", T.BooleanType()),
+        T.StructField("anchor", T.StringType()),
+    ]
+)
+
+# Head metadata (PDF: trailer /Info title/author); canonical and refresh
+# are resolved like the links.
+META_TYPE = T.StructType(
+    [
+        T.StructField("title", T.StringType()),
+        T.StructField("author", T.StringType()),
+        T.StructField("robots", T.StringType()),
+        T.StructField("canonical", T.StringType()),
+        T.StructField("refresh_delay", T.IntegerType()),
+        T.StructField("refresh", T.StringType()),
+    ]
+)
+
+LINKS_SCHEMA = T.StructType(
+    [OUTPUT_SCHEMA["url"], T.StructField("links", T.ArrayType(LINK_TYPE))]
+)
+META_SCHEMA = T.StructType([OUTPUT_SCHEMA["url"], T.StructField("meta", META_TYPE)])
 
 
 def host_col(url_col="url"):
@@ -113,85 +144,88 @@ def _iter_binary_views(arr):
             yield v.as_py()
 
 
-def _make_extract_batches(keep_cols: tuple[str, ...] = ()):
+def _resolve(url: str, res: dict, links: bool, meta: bool) -> None:
+    """Replace ``res``'s kernel links/meta by the ``LINK_TYPE`` rows and the
+    ``META_TYPE`` row of the document at ``url``: hrefs, canonical and
+    refresh targets resolved against the ``<base href>`` (itself resolved
+    against the document URL, per HTML spec), non-fetchable targets
+    (javascript:, mailto:, #fragment) dropped."""
+    m = res["meta"]
+    base = m.get("base")
+    eff = (resolve_link(url, base) or url) if base else url
+    if links:
+        rows = []
+        for lk in res["links"]:
+            tgt = resolve_link(eff, lk["href"])
+            if tgt is not None:
+                # PDF /Annots links carry no rel semantics -> nofollow False
+                rows.append((lk["href"], tgt, bool(lk["chrome"]),
+                             bool(lk.get("nofollow", False)), lk.get("text") or ""))
+        res["links"] = rows
+    if meta:
+        canon, refresh, delay = m.get("canonical"), m.get("refresh_url"), m.get("refresh_delay")
+        res["meta"] = (
+            m.get("title"), m.get("author"), m.get("robots"),
+            resolve_link(eff, canon) if canon else None,
+            # a delay past int32 is junk content, not a redirect
+            delay if delay is None or delay <= 0x7FFFFFFF else None,
+            resolve_link(eff, refresh) if refresh else None,
+        )
+
+
+# output column -> key of the extract_document result it is built from
+_KERNEL_COLS = {"extracted_text": "text", "spans": "spans", "n_elements": "n_elements",
+                "method": "method", "error": "error", "links": "links", "meta": "meta"}
+
+
+def _make_extract_batches(schema: T.StructType):
     """mapInArrow worker factory: one kernel pass per Arrow batch, building
-    the output columns as flat Arrow arrays directly (no per-span Python
-    dicts, no pandas round-trip — at 16 workers the pandas→Arrow struct
-    conversion was pure memory traffic on a bandwidth-bound stage);
-    payloads reach the kernels as zero-copy memoryviews into the Arrow
-    buffer; ``keep_cols`` are carried through untouched (e.g. the lineage
-    bucket)."""
+    each ``schema`` column that ``_KERNEL_COLS`` names straight from the
+    kernel results (``links``/``meta`` resolved first, see
+    :func:`_resolve`) and carrying every other column (``url``, the
+    lineage bucket) through from the input batch untouched. Payloads reach
+    the kernels as zero-copy memoryviews into the Arrow buffer; no pandas
+    round-trip."""
+    built = [f for f in schema.fields if f.name in _KERNEL_COLS]
+    links, meta = "links" in schema.names, "meta" in schema.names
 
     def _extract_batches(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
+        types = [to_arrow_type(f.dataType) for f in built]
         for batch in batches:
-            payloads = _iter_binary_views(batch.column("html"))
-            texts: list[str] = []
-            n_elems: list[int] = []
-            methods: list[str] = []
-            errors: list = []
-            span_off = [0]
-            et: list[str] = []
-            pg: list[int] = []
-            cs: list[int] = []
-            ce: list[int] = []
-            bbox_off = [0]
-            bbox_vals: list[float] = []
-            cf: list[float] = []
-            hlv: list[int] = []
-            pid: list[int] = []
-            for payload in payloads:
+            urls = batch.column("url").to_pylist() if links or meta else None
+            cols = [[] for _ in built]
+            sinks = [(c, _KERNEL_COLS[f.name]) for c, f in zip(cols, built)]
+            for i, payload in enumerate(_iter_binary_views(batch.column("html"))):
                 res = extract_document(payload)
-                texts.append(res["text"])
-                n_elems.append(res["n_elements"])
-                methods.append(res["method"])
-                errors.append(res["error"])
-                for s in res["spans"]:
-                    et.append(s[0])
-                    pg.append(s[1])
-                    cs.append(s[2])
-                    ce.append(s[3])
-                    bbox_vals.extend(s[4])
-                    bbox_off.append(len(bbox_vals))
-                    cf.append(s[5])
-                    hlv.append(s[6])
-                    pid.append(s[7])
-                span_off.append(len(et))
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(et, pa.string()),
-                    pa.array(pg, pa.int32()),
-                    pa.array(cs, pa.int64()),
-                    pa.array(ce, pa.int64()),
-                    pa.ListArray.from_arrays(
-                        pa.array(bbox_off, pa.int32()), pa.array(bbox_vals, pa.float64())
-                    ),
-                    pa.array(cf, pa.float64()),
-                    pa.array(hlv, pa.int32()),
-                    pa.array(pid, pa.int32()),
-                ],
-                names=[
-                    "elem_type", "page", "char_start", "char_end", "bbox",
-                    "confidence", "hierarchy_level", "parent_id",
-                ],
+                if urls is not None:
+                    _resolve(urls[i], res, links, meta)
+                for col, key in sinks:
+                    col.append(res[key])
+            arrays = dict(zip([f.name for f in built], map(pa.array, cols, types)))
+            yield pa.RecordBatch.from_arrays(
+                [arrays[n] if n in arrays else batch.column(n) for n in schema.names],
+                names=schema.names,
             )
-            spans = pa.ListArray.from_arrays(pa.array(span_off, pa.int32()), struct)
-            arrays = [
-                batch.column("url"),
-                pa.array(texts, pa.string()),
-                spans,
-                pa.array(n_elems, pa.int32()),
-                pa.array(methods, pa.string()),
-                pa.array(errors, pa.string()),
-            ]
-            names = ["url", "extracted_text", "spans", "n_elements", "method", "error"]
-            for c in keep_cols:
-                arrays.append(batch.column(c))
-                names.append(c)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return _extract_batches
+
+
+def _extract_stage(
+    df: DataFrame, schema: T.StructType, keep_cols: tuple[str, ...] = ()
+) -> DataFrame:
+    """The one Spark stage that runs the kernels: ``df``'s ``(url, html)``
+    rows through ``extract_document``, emitting the columns of ``schema``
+    (``OUTPUT_SCHEMA``, ``LINKS_SCHEMA`` or ``META_SCHEMA``) followed by
+    ``keep_cols`` carried through. Operators that need a document's links
+    or head metadata project this stage's output instead of calling the
+    kernel themselves."""
+    schema = T.StructType(schema.fields + [df.schema[c] for c in keep_cols])
+    return df.select("url", "html", *keep_cols).mapInArrow(
+        _make_extract_batches(schema), schema=schema
+    )
 
 
 def extract_corpus(
@@ -222,8 +256,5 @@ def extract_corpus(
             pruned = pruned.repartition(partitions, *partition_exprs)
         else:
             pruned = salted_repartition(pruned, partitions, salt)
-    schema = T.StructType(
-        OUTPUT_SCHEMA.fields + [corpus.schema[c] for c in keep_cols]
-    )
-    return pruned.mapInArrow(_make_extract_batches(keep_cols), schema=schema)
+    return _extract_stage(pruned, OUTPUT_SCHEMA, keep_cols)
 

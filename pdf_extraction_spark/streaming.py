@@ -7,7 +7,7 @@ module is the *scale path beyond* that: a Common-Crawl-style corpus lands as
 parquet files over time, and the extraction pipeline runs as an incremental
 Structured Streaming job —
 
-    readStream(corpus dir) → mapInPandas(kernels) → writeStream(parquet sink)
+    readStream(corpus dir) → mapInArrow(kernels) → writeStream(parquet sink)
 
 with ``Trigger.AvailableNow`` for drain-and-stop batch-of-streams runs and
 the stream checkpoint providing exactly-once file-level progress (the

@@ -735,10 +735,10 @@ def test_generated_tpch_relational_suite(
     )
 
 
-# Twelfth group: a builder that puts generated words into element content.
-# Its alphabet adds a tab (DuckDB's rtrim strips only spaces, the HTML
-# kernel folds control whitespace) and '<' / '&' (content the kernel parses
-# as markup), which the shared alphabet never produces.
+# Twelfth group: builders that put generated words into element content
+# and attribute values. Its alphabet adds a tab (DuckDB's rtrim strips only
+# spaces, the HTML kernel folds control whitespace) and '<' / '&' (content
+# the kernel parses as markup), which the shared alphabet never produces.
 _CHARS_MARKUP = _CHARS + "\t<&"
 _word12 = st.text(alphabet=_CHARS_MARKUP, min_size=1, max_size=8).filter(
     lambda w: " " not in w
@@ -751,6 +751,8 @@ from pdf_extraction_spark.operators import docmeta  # noqa: E402
 
 PAIRS12 = [
     (docmeta.q_charset_sniff, docmeta.SQL_CHARSET_SNIFF),
+    (docmeta.q_opengraph_cards, docmeta.SQL_OPENGRAPH_CARDS),
+    (links.q_image_alt_pairs, links.SQL_IMAGE_ALT_PAIRS),
 ]
 
 

@@ -216,3 +216,26 @@ def test_driver_rows_are_local_relations(spark, tmp_path, build):
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert "PythonRDD" not in plan
+
+
+def _kernel_plan_queries():
+    from pdf_extraction_spark.operators import corpusops, docmeta, links
+
+    return [links.q_extract_outlinks, docmeta.q_html_head_meta,
+            docmeta.q_canonical_cluster, corpusops.q_indexable_filter,
+            links.q_meta_refresh, docmeta.q_pdf_info_meta]
+
+
+@pytest.mark.parametrize("q", _kernel_plan_queries(), ids=lambda q: q.__name__)
+def test_link_and_meta_queries_project_the_extraction_stage(spark, q):
+    """Outlinks and head/document meta are projections of the one Arrow
+    extraction stage: exactly one ``MapInArrow`` and no pandas generator
+    stage of their own. The PDF corpus builder's ``ArrowEvalPython``
+    (the deterministic writer UDF) is the only other Python node allowed,
+    and only on ``q_pdf_info_meta``."""
+    plan = plan_of(q(spark, SF))
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
+    assert "BatchEvalPython" not in plan
+    if q.__name__ != "q_pdf_info_meta":
+        assert "ArrowEvalPython" not in plan
