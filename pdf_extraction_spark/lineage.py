@@ -27,11 +27,14 @@ by the rule; an anti-join restart over a lineage table is):
 3. extract remaining buckets; write parquet partitioned by ``bucket`` with
    dynamic partition overwrite, so a re-run of a half-written bucket
    replaces only its own directory (idempotent restart, no duplicates).
-4. read back the just-written buckets (cheap: column-pruned scan of
-   url/error) and append ``done`` rows carrying per-bucket metrics
-   (n_docs, n_errors, n_chars, wall seconds) — the A13 metrics-table analog
+4. append ``done`` rows carrying per-bucket metrics (n_docs, n_errors,
+   n_chars, wall seconds) — the A13 metrics-table analog
    (complete_multimodal_rag_evaluation.py:217-245 rebuilt as a table, not
-   prints).
+   prints). The counts come from a :class:`.pipeline.BucketTally`
+   accumulator that the kernel stage fills while it builds each batch, not
+   from a read-back of the written wave: the kernel runs in the write job's
+   result stage, where Spark applies each successful task's accumulator
+   update exactly once (a failed or retried attempt adds nothing).
 
 A crash between 3 and 4 leaves no ``done`` row → the bucket re-runs and its
 partition directory is overwritten. A crash before 3 costs nothing. Restart
@@ -57,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pipeline import extract_corpus, host_col, local_df
+from .pipeline import BucketTally, extract_corpus, host_col, local_df
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
@@ -83,10 +86,15 @@ def _lineage_path(output_path: str) -> str:
 
 
 def read_lineage(spark: SparkSession, output_path: str) -> DataFrame | None:
-    try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_path(output_path))
-    except Exception:
+    """The ``_lineage`` table, or None when it does not exist. Any other
+    failure (an unknown scheme, a listing error) raises: it must not read
+    as "no lineage", which would rerun every bucket."""
+    path = _lineage_path(output_path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
         return None
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
@@ -186,6 +194,7 @@ def run_resumable(
             tagged if len(waves) == 1 and not done
             else tagged.filter(F.col("bucket").isin(*[int(b) for b in wave]))
         )
+        tally = spark.sparkContext.accumulator({}, BucketTally())
         extracted = extract_corpus(
             wave_in.select("url", "html", "bucket"), partitions=partitions,
             salt=salt, keep_cols=("bucket",),
@@ -197,6 +206,7 @@ def run_resumable(
             partition_exprs=[
                 F.col("bucket"), F.pmod(F.xxhash64(F.col("url")), F.lit(salt)),
             ],
+            tally=tally,
         )
         if fb:
             def _bomb(batches):
@@ -221,36 +231,24 @@ def run_resumable(
         )
         wall_ex = time.monotonic() - t_ex
 
-        # metrics read-back: column-pruned, partition-pruned scan of the
-        # just-written wave
-        out = spark.read.parquet(docs_path).filter(
-            F.col("bucket").isin(*[int(b) for b in wave])
-        )
-        stats = {
-            r["bucket"]: r
-            for r in out.groupBy("bucket").agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-                F.sum(F.length("extracted_text")).alias("n_chars"),
-            ).collect()
-        }
+        # the kernel ran in the write job's result stage, so each successful
+        # task's counts were added exactly once
+        stats = tally.value
         ts = datetime.datetime.now(datetime.timezone.utc)
         _append_lineage(
             spark, output_path,
             [
                 (
                     run_id, int(b), "done", int(prior.get(b, 0)) + 1, n_buckets,
-                    int(stats[b]["n_docs"]) if b in stats else 0,
-                    int(stats[b]["n_errors"]) if b in stats else 0,
-                    int(stats[b]["n_chars"]) if b in stats else 0,
+                    *stats.get(b, (0, 0, 0)),
                     round(wall_ex / max(len(wave), 1), 4), ts,
                 )
                 for b in wave
             ],
         )
         summary["buckets_run"] += len(wave)
-        summary["n_docs"] += sum(int(s["n_docs"]) for s in stats.values())
-        summary["n_errors"] += sum(int(s["n_errors"]) for s in stats.values())
+        summary["n_docs"] += sum(s[0] for s in stats.values())
+        summary["n_errors"] += sum(s[1] for s in stats.values())
         summary["extract_phase_s"] = round(summary["extract_phase_s"] + wall_ex, 3)
 
     summary["wall_s"] = round(time.monotonic() - t0, 3)

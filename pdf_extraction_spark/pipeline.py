@@ -16,6 +16,10 @@ across ``salt`` partitions while keeping host locality for everything else.
 
 from __future__ import annotations
 
+import sys
+import zipimport
+
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -173,26 +177,75 @@ def _resolve(url: str, res: dict, links: bool, meta: bool) -> None:
         )
 
 
+def _drop_zip_finders() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    A Python worker calls ``importlib.invalidate_caches()`` at the start of
+    every task, and on CPython 3.11 that makes each cached ``zipimporter``
+    re-read its whole archive directory: ``pyspark.zip`` and its package
+    sub-paths, the shipped ``--py-files`` zips and the spark-core jar
+    (~0.25 s per task with PySpark 4.1.2 on CPython 3.11.7). With the
+    finders gone there is nothing to re-read; an import that needs one
+    builds it again from ``zipimport._zip_directory_cache``, which is
+    cheap. This assumes Spark never rewrites a shipped archive in place
+    during an application.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
+class BucketTally(AccumulatorParam):
+    """Accumulator of ``{bucket: [n_docs, n_errors, n_chars]}``, summed
+    elementwise: the per-bucket counts of the documents a kernel stage
+    built, with ``n_chars`` in code points like Spark's ``length``."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for bucket, counts in other.items():
+            acc[bucket] = [a + b for a, b in zip(acc.get(bucket, (0, 0, 0)), counts)]
+        return acc
+
+
+def _bucket_counts(buckets, texts, errors) -> dict:
+    """``{bucket: [n_docs, n_errors, n_chars]}`` over one batch's rows."""
+    counts = {}
+    for b, text, err in zip(buckets, texts, errors):
+        c = counts.setdefault(b, [0, 0, 0])
+        c[0] += 1
+        c[1] += err is not None
+        c[2] += len(text) if text is not None else 0
+    return counts
+
+
 # output column -> key of the extract_document result it is built from
 _KERNEL_COLS = {"extracted_text": "text", "spans": "spans", "n_elements": "n_elements",
                 "method": "method", "error": "error", "links": "links", "meta": "meta"}
 
 
-def _make_extract_batches(schema: T.StructType):
+def _make_extract_batches(schema: T.StructType, tally=None):
     """mapInArrow worker factory: one kernel pass per Arrow batch, building
     each ``schema`` column that ``_KERNEL_COLS`` names straight from the
     kernel results (``links``/``meta`` resolved first, see
     :func:`_resolve`) and carrying every other column (``url``, the
     lineage bucket) through from the input batch untouched. Payloads reach
     the kernels as zero-copy memoryviews into the Arrow buffer; no pandas
-    round-trip."""
+    round-trip. With a :class:`BucketTally` accumulator ``tally`` (the
+    schema then holds ``extracted_text``, ``error`` and ``bucket``), each
+    batch adds its per-bucket counts to it."""
     built = [f for f in schema.fields if f.name in _KERNEL_COLS]
+    names = [f.name for f in built]
     links, meta = "links" in schema.names, "meta" in schema.names
 
     def _extract_batches(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
+        # every task of a reused worker would otherwise re-read each zip
+        # on sys.path (safe while no shipped archive changes in place)
+        _drop_zip_finders()
         types = [to_arrow_type(f.dataType) for f in built]
         for batch in batches:
             urls = batch.column("url").to_pylist() if links or meta else None
@@ -204,7 +257,11 @@ def _make_extract_batches(schema: T.StructType):
                     _resolve(urls[i], res, links, meta)
                 for col, key in sinks:
                     col.append(res[key])
-            arrays = dict(zip([f.name for f in built], map(pa.array, cols, types)))
+            if tally is not None:
+                tally.add(_bucket_counts(batch.column("bucket").to_pylist(),
+                                         cols[names.index("extracted_text")],
+                                         cols[names.index("error")]))
+            arrays = dict(zip(names, map(pa.array, cols, types)))
             yield pa.RecordBatch.from_arrays(
                 [arrays[n] if n in arrays else batch.column(n) for n in schema.names],
                 names=schema.names,
@@ -214,17 +271,18 @@ def _make_extract_batches(schema: T.StructType):
 
 
 def _extract_stage(
-    df: DataFrame, schema: T.StructType, keep_cols: tuple[str, ...] = ()
+    df: DataFrame, schema: T.StructType, keep_cols: tuple[str, ...] = (), tally=None
 ) -> DataFrame:
     """The one Spark stage that runs the kernels: ``df``'s ``(url, html)``
     rows through ``extract_document``, emitting the columns of ``schema``
     (``OUTPUT_SCHEMA``, ``LINKS_SCHEMA`` or ``META_SCHEMA``) followed by
     ``keep_cols`` carried through. Operators that need a document's links
     or head metadata project this stage's output instead of calling the
-    kernel themselves."""
+    kernel themselves. ``tally`` is the lineage runner's
+    :class:`BucketTally` (see :func:`_make_extract_batches`)."""
     schema = T.StructType(schema.fields + [df.schema[c] for c in keep_cols])
     return df.select("url", "html", *keep_cols).mapInArrow(
-        _make_extract_batches(schema), schema=schema
+        _make_extract_batches(schema, tally), schema=schema
     )
 
 
@@ -235,6 +293,7 @@ def extract_corpus(
     repartition: bool = True,
     keep_cols: tuple[str, ...] = (),
     partition_exprs: list | None = None,
+    tally=None,
 ) -> DataFrame:
     """Run the extraction pipeline over a corpus DataFrame.
 
@@ -246,7 +305,9 @@ def extract_corpus(
     repartition keys — the lineage runner passes (bucket, url-salt) so the
     extraction output lands already clustered for the bucket-partitioned
     sink and the per-host skew defusal is preserved at salt granularity,
-    with no second full-output shuffle before the write.
+    with no second full-output shuffle before the write. It also passes
+    ``tally``, a :class:`BucketTally` accumulator that the kernel stage
+    fills with per-bucket counts (``keep_cols`` then holds ``bucket``).
     """
     pruned = corpus.select("url", "html", *keep_cols)
     if repartition:
@@ -256,5 +317,5 @@ def extract_corpus(
             pruned = pruned.repartition(partitions, *partition_exprs)
         else:
             pruned = salted_repartition(pruned, partitions, salt)
-    return _extract_stage(pruned, OUTPUT_SCHEMA, keep_cols)
+    return _extract_stage(pruned, OUTPUT_SCHEMA, keep_cols, tally)
 

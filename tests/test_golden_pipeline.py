@@ -99,6 +99,40 @@ def test_iter_binary_views_zero_copy_and_fallbacks():
     ] == vals
 
 
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path, monkeypatch):
+    """After the drop no ``zipimporter`` is left for a task's
+    ``invalidate_caches()`` to re-read, and a not-yet-imported submodule of
+    the zip still imports, through a finder rebuilt on demand."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pdf_extraction_spark.pipeline import _drop_zip_finders
+
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/first.py", "VALUE = 1\n")
+        z.writestr("zpkg/second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("zpkg.first").VALUE == 1
+        assert any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        _drop_zip_finders()
+        assert not any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        importlib.invalidate_caches()
+        assert importlib.import_module("zpkg.second").VALUE == 2
+    finally:
+        for name in ("zpkg", "zpkg.first", "zpkg.second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+
 def test_legacy_lane_excludes_c1_codepoints(spark, tmp_path):
     """The undeclared-ISO-8859-1 lane of corpus_from_documents must skip any
     doc whose text carries C1 controls U+0080-U+009F: latin-1 encodes them

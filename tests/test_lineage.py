@@ -163,10 +163,10 @@ def test_lineage_without_grid_refuses(spark, corpus_df, tmp_path):
 
 def test_spark_job_budget(spark, corpus_df, tmp_path):
     """Bookkeeping jobs are a fixed cost on every run: a fresh single-wave run
-    is 7 jobs (pending append, 3 for the shuffled sink write, 2 for the
-    read-back aggregate, done append) and a no-op resume is the one aggregate
-    lineage read (2 jobs). Either count going up means a new pass over the
-    tables."""
+    is 4 jobs (pending append, 2 for the shuffled sink write, done append;
+    the done rows' counts come from the kernel stage, with no read-back of
+    the wave) and a no-op resume is the one aggregate lineage read (2 jobs).
+    Either count going up means a new pass over the tables."""
     df, _ = corpus_df
     sc = spark.sparkContext
     out = str(tmp_path / "run7")
@@ -182,9 +182,51 @@ def test_spark_job_budget(spark, corpus_df, tmp_path):
     fresh, fresh_jobs = n_jobs(f"fresh-{tmp_path.name}")
     noop, noop_jobs = n_jobs(f"noop-{tmp_path.name}")
     assert fresh["buckets_run"] == N_BUCKETS and noop["buckets_run"] == 0
-    assert fresh_jobs <= 7
+    assert fresh_jobs <= 4
     assert noop_jobs <= 2
     assert sorted(os.listdir(out)) == ["_lineage", "docs"]
+
+
+def test_done_rows_equal_the_written_docs(spark, tmp_path):
+    """Each bucket's ``done`` row carries exactly what a ``groupBy`` over
+    the written ``docs/`` gives: 0/0/0 for an empty bucket, error rows
+    counted, and ``n_chars`` in code points (a non-BMP character is one)."""
+    html = "<html><body><p>grin \U0001F600 and \u00e9t\u00e9</p></body></html>"
+    payloads = [html.encode(), None, b"%PDF-1.4 garbage", bytes(range(256)) * 4,
+                b"<html><body><p>plain words</p></body></html>"]
+    corpus = spark.createDataFrame(
+        [(f"https://h{i % 3}.x/d{i}", None, payloads[i % len(payloads)], None, None)
+         for i in range(30)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    out = str(tmp_path / "counts")
+    summary = lineage.run_resumable(corpus, out, n_buckets=N_BUCKETS, partitions=4)
+
+    docs = spark.read.parquet(out + "/docs")
+    want = {b: (0, 0, 0) for b in range(N_BUCKETS)}
+    for r in docs.groupBy("bucket").agg(
+        F.count("*"), F.count("error"), F.sum(F.length("extracted_text"))
+    ).collect():
+        want[r[0]] = (r[1], r[2], r[3])
+    done = lineage.read_lineage(spark, out).filter("status = 'done'")
+    got = {r["bucket"]: (r["n_docs"], r["n_errors"], r["n_chars"]) for r in done.collect()}
+    assert got == want
+    assert (0, 0, 0) in want.values()  # three hosts over eight buckets
+    assert summary["n_docs"] == 30 and summary["n_errors"] == sum(v[1] for v in want.values()) > 0
+    texts = [r[0] for r in docs.select("extracted_text").collect()]
+    assert any("\U0001F600" in t for t in texts)
+
+
+def test_read_lineage_missing_vs_failing(spark, tmp_path):
+    """Only a missing ``_lineage`` reads as "no lineage"; a path that
+    cannot be listed raises instead of rerunning every bucket."""
+    from py4j.protocol import Py4JJavaError
+
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        lineage.completed_buckets(spark, "nosuchfs://b/out")
+    assert lineage.completed_buckets(spark, str(tmp_path / "missing")) == set()
+    with pytest.raises(FileNotFoundError):
+        lineage.metrics_summary(spark, str(tmp_path / "missing"))
 
 
 @pytest.fixture
