@@ -25,6 +25,7 @@ import pandas as pd
 
 from .kernels import pdf_write
 from .kernels.dispatch import extract_document
+from .operators.common import tbl
 
 # ~50 synthetic hosts; host[0] is the pathological heavy one (~30% of rows).
 HOSTS = ["heavy-portal.example.com"] + [f"site-{i:02d}.example.org" for i in range(1, 50)]
@@ -308,7 +309,7 @@ def corpus_from_documents(spark, sf_dir: str, payload: str = "html"):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet"))
+    docs = spread_docs(tbl(spark, sf_dir, "documents"))
     base = docs.select(
         doc_url().alias("url"),
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpus import doc_url, spread_docs
-from ..pipeline import META_SCHEMA, _extract_stage
+from ..pipeline import META_SCHEMA, _extract_stage, fanout
 from .common import tbl
 from .textops import QUALITY_EXPR_SQL
 
@@ -849,7 +849,7 @@ def q_indexable_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verdict are JVM column algebra around the extraction stage's
     ``meta`` column, so at 10^12 docs this is a narrow map with zero
     shuffle."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select(
         "doc_id", "source"
     )
     i = F.col("doc_id")
@@ -949,47 +949,33 @@ def q_warc_http_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     every crawl pipeline applies before extraction. One Arrow pass."""
     import io
 
-    import pandas as pd
-
     from ..sources.warc import http_envelope_meta, iter_warc_records
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "status": [], "content_type": [],
-                    "keep": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                status = 404 if i % 4 == 0 else 200
-                ctype = "application/pdf" if i % 5 == 0 else "text/html"
-                body = b"<html><body>x</body></html>"
-                http = (
-                    b"HTTP/1.1 %d X\r\nContent-Type: %s; charset=utf-8\r\n\r\n"
-                    % (status, ctype.encode())
-                ) + body
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: response\r\n"
-                    b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
-                    b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
-                    b"WARC-Target-URI: https://%s.example.com/doc/%d\r\n"
-                    b"Content-Length: %d\r\n\r\n"
-                    % (i, str(source).encode(), i, len(http))
-                ) + http + b"\r\n\r\n"
-                for headers, payload in iter_warc_records(io.BytesIO(rec)):
-                    st, ct = http_envelope_meta(payload)
-                    rows["doc_id"].append(i)
-                    rows["status"].append(st)
-                    rows["content_type"].append(ct)
-                    rows["keep"].append(st == 200 and ct == "text/html")
-            yield pd.DataFrame(rows)
+    def envelope(i, source):
+        status = 404 if i % 4 == 0 else 200
+        ctype = "application/pdf" if i % 5 == 0 else "text/html"
+        body = b"<html><body>x</body></html>"
+        http = (
+            b"HTTP/1.1 %d X\r\nContent-Type: %s; charset=utf-8\r\n\r\n"
+            % (status, ctype.encode())
+        ) + body
+        rec = (
+            b"WARC/1.0\r\n"
+            b"WARC-Type: response\r\n"
+            b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
+            b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
+            b"WARC-Target-URI: https://%s.example.com/doc/%d\r\n"
+            b"Content-Length: %d\r\n\r\n"
+            % (i, str(source).encode(), i, len(http))
+        ) + http + b"\r\n\r\n"
+        for _headers, payload in iter_warc_records(io.BytesIO(rec)):
+            st, ct = http_envelope_meta(payload)
+            yield i, st, ct, st == 200 and ct == "text/html"
 
-    return docs.mapInPandas(
-        gen,
-        schema="doc_id long, status int, content_type string, keep boolean",
+    return fanout(
+        docs, envelope, "doc_id long, status int, content_type string, keep boolean"
     )
 
 

@@ -13,11 +13,13 @@ starve the cores — see :func:`..corpus.spread_docs`).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import corpus_from_documents, spread_docs
-from ..pipeline import META_SCHEMA, _extract_stage
-from .common import first_words, sql_fold_ws
+from ..pipeline import META_SCHEMA, _extract_stage, fanout
+from .common import first_words, sql_fold_ws, tbl
 
 
 def _meta_df(corpus: DataFrame) -> DataFrame:
@@ -68,41 +70,24 @@ def q_pdf_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's first 4 words become a 2-level outline tree written into a real
     PDF and parsed back: depth-first order, nesting levels, and decoded
     titles all land in the DuckDB oracle. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels import pdf_write
     from ..kernels.pdf_extract import extract_pdf_outline
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "level": [], "title": [],
-                    "page": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 4)
-                outline = [(1, w[0], 0), (2, w[1], 0), (2, w[2], 0),
-                           (1, w[3], 0)]
-                payload = pdf_write.build_pdf(
-                    " ".join(w), outline=outline,
-                    outline_named=(i % 3 == 0),
-                    compress=(i % 2 == 0), objstm=(i % 5 == 0),
-                    encrypt=("aes-128" if i % 13 == 0 else None),
-                )
-                for pos, item in enumerate(extract_pdf_outline(payload)):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["level"].append(item["level"])
-                    rows["title"].append(item["title"])
-                    rows["page"].append(item["page"])
-            yield pd.DataFrame(rows)
+    def toc(i, text):
+        w = first_words(text, 4)
+        outline = [(1, w[0], 0), (2, w[1], 0), (2, w[2], 0), (1, w[3], 0)]
+        payload = pdf_write.build_pdf(
+            " ".join(w), outline=outline,
+            outline_named=(i % 3 == 0),
+            compress=(i % 2 == 0), objstm=(i % 5 == 0),
+            encrypt=("aes-128" if i % 13 == 0 else None),
+        )
+        for pos, item in enumerate(extract_pdf_outline(payload)):
+            yield i, pos, item["level"], item["title"], item["page"]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, level int, title string, page int"
-    )
+    return fanout(docs, toc, "doc_id long, pos int, level int, title string, page int")
 
 
 SQL_PDF_TOC = """
@@ -122,37 +107,23 @@ def q_html_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a (pos, level, title) table of contents per document, exactly
     the structure readers/search snippets build from heading hierarchies.
     One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_html
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "level": [], "title": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 4)
-                html = (
-                    "<html><body><main>"
-                    f"<h1>{w[0]}</h1><p>padding paragraph body long enough"
-                    f" to clear the content gates in place</p>"
-                    f"<h2>{w[1]}</h2><h3>{w[2]}</h3><h2>{w[3]}</h2>"
-                    "</main></body></html>"
-                )
-                for pos, (lvl, title) in enumerate(extract_html(html)["headings"]):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["level"].append(lvl)
-                    rows["title"].append(title)
-            yield pd.DataFrame(rows)
+    def toc(i, text):
+        w = first_words(text, 4)
+        html = (
+            "<html><body><main>"
+            f"<h1>{w[0]}</h1><p>padding paragraph body long enough"
+            f" to clear the content gates in place</p>"
+            f"<h2>{w[1]}</h2><h3>{w[2]}</h3><h2>{w[3]}</h2>"
+            "</main></body></html>"
+        )
+        for pos, (lvl, title) in enumerate(extract_html(html)["headings"]):
+            yield i, pos, lvl, title
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, level int, title string"
-    )
+    return fanout(docs, toc, "doc_id long, pos int, level int, title string")
 
 
 SQL_HTML_TOC = """
@@ -170,51 +141,34 @@ def q_jsonld_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     author / datePublished pulled from ``application/ld+json`` blocks —
     the machine-readable metadata layer harvesting pipelines prefer over
     scraped text when present. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_jsonld
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text", "source")
 
-    def gen(batches):
-        import json as _json
+    def jsonld(i, text, source):
+        w = first_words(text, 2)
+        obj = {
+            "@context": "https://schema.org",
+            "@type": "NewsArticle",
+            "headline": " ".join(w),
+            "author": {"@type": "Person", "name": str(source)},
+            "datePublished": "2025-01-0%d" % (1 + i % 9),
+        }
+        html = (
+            "<html><head><script type='application/ld+json'>"
+            + json.dumps(obj)
+            + "</script></head><body><p>x</p></body></html>"
+        )
+        for o in extract_jsonld(html):
+            author = o.get("author")
+            yield (i, o.get("@type"), o.get("headline"),
+                   author.get("name") if isinstance(author, dict) else None,
+                   o.get("datePublished"))
 
-        for pdf in batches:
-            rows = {"doc_id": [], "ld_type": [], "headline": [],
-                    "author_name": [], "date_published": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                obj = {
-                    "@context": "https://schema.org",
-                    "@type": "NewsArticle",
-                    "headline": " ".join(w),
-                    "author": {"@type": "Person", "name": str(source)},
-                    "datePublished": "2025-01-0%d" % (1 + i % 9),
-                }
-                html = (
-                    "<html><head><script type='application/ld+json'>"
-                    + _json.dumps(obj)
-                    + "</script></head><body><p>x</p></body></html>"
-                )
-                for o in extract_jsonld(html):
-                    rows["doc_id"].append(i)
-                    rows["ld_type"].append(o.get("@type"))
-                    rows["headline"].append(o.get("headline"))
-                    author = o.get("author")
-                    rows["author_name"].append(
-                        author.get("name") if isinstance(author, dict) else None
-                    )
-                    rows["date_published"].append(o.get("datePublished"))
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, ld_type string, headline string, "
-                "author_name string, date_published string"),
+    return fanout(
+        docs, jsonld,
+        "doc_id long, ld_type string, headline string, author_name string, "
+        "date_published string",
     )
 
 
@@ -234,52 +188,36 @@ def q_opengraph_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-wins meta capture (:func:`extract_meta_map`) — the social-card
     metadata layer that often carries a cleaner title and canonical image
     than the page body. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_meta_map
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "og_title": [], "og_type": [],
-                    "og_image": [], "og_url": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                # attribute content: escape so a quote in a word cannot
-                # truncate the attribute (same fix as image_alt_pairs; the
-                # kernel decodes entities back and folds whitespace, which
-                # the oracle mirrors with sql_fold_ws)
-                w = [
-                    x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
-                    for x in first_words(text, 2)
-                ]
-                html = (
-                    "<html><head>"
-                    f"<meta property='og:title' content='{w[0]} {w[1]}'>"
-                    "<meta property='og:type' content='article'>"
-                    f"<meta property='og:image' content='https://{source}"
-                    f".example.com/img/{i}.jpg'>"
-                    f"<meta property='og:url' content='https://{source}"
-                    f".example.com/doc/{i}'>"
-                    "<meta property='og:title' content='ignored duplicate'>"
-                    "</head><body><p>x</p></body></html>"
-                )
-                m = extract_meta_map(html)
-                rows["doc_id"].append(i)
-                rows["og_title"].append(m.get("og:title"))
-                rows["og_type"].append(m.get("og:type"))
-                rows["og_image"].append(m.get("og:image"))
-                rows["og_url"].append(m.get("og:url"))
-            yield pd.DataFrame(rows)
+    def card(i, text, source):
+        # attribute content: escape so a quote in a word cannot truncate
+        # the attribute (same fix as image_alt_pairs; the kernel decodes
+        # entities back and folds whitespace, which the oracle mirrors
+        # with sql_fold_ws)
+        w = [
+            x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
+            for x in first_words(text, 2)
+        ]
+        html = (
+            "<html><head>"
+            f"<meta property='og:title' content='{w[0]} {w[1]}'>"
+            "<meta property='og:type' content='article'>"
+            f"<meta property='og:image' content='https://{source}"
+            f".example.com/img/{i}.jpg'>"
+            f"<meta property='og:url' content='https://{source}"
+            f".example.com/doc/{i}'>"
+            "<meta property='og:title' content='ignored duplicate'>"
+            "</head><body><p>x</p></body></html>"
+        )
+        m = extract_meta_map(html)
+        yield i, m.get("og:title"), m.get("og:type"), m.get("og:image"), m.get("og:url")
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, og_title string, og_type string, "
-                "og_image string, og_url string"),
+    return fanout(
+        docs, card,
+        "doc_id long, og_title string, og_type string, og_image string, og_url string",
     )
 
 
@@ -300,40 +238,25 @@ def q_pdf_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
     content — the PDF/A-3 pattern (machine-readable payloads riding a
     document). Every 13th doc is AES-encrypted and every 5th ObjStm-packed
     so the stream decrypt/unpack paths run under the oracle."""
-    import pandas as pd
-
     from ..kernels import pdf_write
     from ..kernels.pdf_extract import extract_pdf_attachments
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "filename": [], "size": [],
-                    "content": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                atts = [("a.txt", w[0].encode()), ("b.txt", w[1].encode())]
-                payload = pdf_write.build_pdf(
-                    " ".join(w), attachments=atts,
-                    compress=(i % 2 == 0), objstm=(i % 5 == 0),
-                    encrypt=("aes-128" if i % 13 == 0 else None),
-                )
-                for pos, a in enumerate(extract_pdf_attachments(payload)):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["filename"].append(a["filename"])
-                    rows["size"].append(a["size"])
-                    rows["content"].append(a["data"].decode("utf-8"))
-            yield pd.DataFrame(rows)
+    def attachments(i, text):
+        w = first_words(text, 2)
+        atts = [("a.txt", w[0].encode()), ("b.txt", w[1].encode())]
+        payload = pdf_write.build_pdf(
+            " ".join(w), attachments=atts,
+            compress=(i % 2 == 0), objstm=(i % 5 == 0),
+            encrypt=("aes-128" if i % 13 == 0 else None),
+        )
+        for pos, a in enumerate(extract_pdf_attachments(payload)):
+            yield i, pos, a["filename"], a["size"], a["data"].decode("utf-8")
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, pos int, filename string, size long, "
-                "content string"),
+    return fanout(
+        docs, attachments,
+        "doc_id long, pos int, filename string, size long, content string",
     )
 
 
@@ -357,37 +280,23 @@ def q_pdf_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled values — the document-processing surface (invoices, applications)
     where the data lives in /V strings, not the page text. Every 13th doc
     AES-encrypted, every 5th ObjStm-packed, under the oracle."""
-    import pandas as pd
-
     from ..kernels import pdf_write
     from ..kernels.pdf_extract import extract_pdf_form_fields
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "name": [], "value": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                fields = [("field_a", w[0]), ("field_b", w[1])]
-                payload = pdf_write.build_pdf(
-                    " ".join(w), acroform=fields,
-                    compress=(i % 2 == 0), objstm=(i % 5 == 0),
-                    encrypt=("aes-128" if i % 13 == 0 else None),
-                )
-                for pos, f in enumerate(extract_pdf_form_fields(payload)):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["name"].append(f["name"])
-                    rows["value"].append(f["value"])
-            yield pd.DataFrame(rows)
+    def form_fields(i, text):
+        w = first_words(text, 2)
+        fields = [("field_a", w[0]), ("field_b", w[1])]
+        payload = pdf_write.build_pdf(
+            " ".join(w), acroform=fields,
+            compress=(i % 2 == 0), objstm=(i % 5 == 0),
+            encrypt=("aes-128" if i % 13 == 0 else None),
+        )
+        for pos, f in enumerate(extract_pdf_form_fields(payload)):
+            yield i, pos, f["name"], f["value"]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, name string, value string"
-    )
+    return fanout(docs, form_fields, "doc_id long, pos int, name string, value string")
 
 
 SQL_PDF_FORM_FIELDS = """
@@ -433,49 +342,35 @@ def q_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern alone (no BOM, no meta — the ISO variant is even valid 7-bit
     ASCII, and the last variant must clear the lead-shape rung) and
     return the paragraph byte-identically. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import detect_charset, extract_html
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "charset": [], "extracted": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                codec, phrase = _SNIFF_VARIANTS[i % 7]
-                # the appended words must be encodable in EVERY lane codec
-                # (a non-ASCII word would crash the whole Arrow batch on
-                # e.g. cp949); keep their printable-ASCII subset (the kernel
-                # folds tabs and other control whitespace into one space,
-                # which the oracle cannot see), drop words that become
-                # empty — identity on the driver corpus, and the oracle
-                # applies the same transform in SQL
-                words = [
-                    s for s in (
-                        "".join(c for c in x if "!" <= c <= "~")
-                        for x in str(text).split(" ")[:4]
-                    )
-                    if s
-                ]
-                # rstrip(" ") is DuckDB's rtrim; the kept words are element
-                # content, so & and < are escaped (the kernel decodes them)
-                para = (phrase + " " + " ".join(words)).rstrip(" ")
-                page = ("<html><body><main><p>"
-                        + para.replace("&", "&amp;").replace("<", "&lt;")
-                        + "</p></main></body></html>")
-                payload = page.encode(_SNIFF_ENCODE.get(codec, codec))
-                rows["doc_id"].append(i)
-                rows["charset"].append(detect_charset(payload))
-                rows["extracted"].append(extract_html(payload)["text"])
-            yield pd.DataFrame(rows)
+    def sniff(i, text):
+        codec, phrase = _SNIFF_VARIANTS[i % 7]
+        # the appended words must be encodable in EVERY lane codec (a
+        # non-ASCII word would crash the whole Arrow batch on e.g. cp949);
+        # keep their printable-ASCII subset (the kernel folds tabs and
+        # other control whitespace into one space, which the oracle cannot
+        # see), drop words that become empty — identity on the driver
+        # corpus, and the oracle applies the same transform in SQL
+        words = [
+            s for s in (
+                "".join(c for c in x if "!" <= c <= "~")
+                for x in str(text).split(" ")[:4]
+            )
+            if s
+        ]
+        # rstrip(" ") is DuckDB's rtrim; the kept words are element
+        # content, so & and < are escaped (the kernel decodes them)
+        para = (phrase + " " + " ".join(words)).rstrip(" ")
+        page = ("<html><body><main><p>"
+                + para.replace("&", "&amp;").replace("<", "&lt;")
+                + "</p></main></body></html>")
+        payload = page.encode(_SNIFF_ENCODE.get(codec, codec))
+        yield i, detect_charset(payload), extract_html(payload)["text"]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, charset string, extracted string"
-    )
+    return fanout(docs, sniff, "doc_id long, charset string, extracted string")
 
 
 SQL_CHARSET_SNIFF = """
@@ -514,43 +409,30 @@ def q_pdf_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise; every 5th page rotated, every 13th AES-128-encrypted, every
     7th carries no caption (NULL lane). One Arrow pass, zero shuffle; at
     10^12 docs this is embarrassingly parallel."""
-    import pandas as pd
-
     from ..kernels import pdf_write
     from ..kernels.pdf_extract import extract_pdf_images
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
+    cols = ("width", "height", "fmt", "caption", "x0", "y0", "x1", "y1")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "width": [], "height": [], "fmt": [],
-                    "caption": [], "x0": [], "y0": [], "x1": [], "y1": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                words = str(text).split(" ")[:6]
-                cap = (None if i % 7 == 0
-                       else "Figure 1: " + " ".join(words[:3]))
-                payload = pdf_write.build_pdf(
-                    " ".join(words), figure=True, caption=cap,
-                    image_fmt=("jpeg" if i % 2 == 0 else "gray"),
-                    image_dims=(16 + i % 97, 9 + i % 53),
-                    compress=(i % 3 == 0),
-                    rotate=(90 if i % 5 == 0 else 0),
-                    encrypt=("aes-128" if i % 13 == 0 else None),
-                )
-                for img in extract_pdf_images(payload):
-                    rows["doc_id"].append(i)
-                    for c in ("width", "height", "fmt", "caption",
-                              "x0", "y0", "x1", "y1"):
-                        rows[c].append(img[c])
-            yield pd.DataFrame(rows)
+    def pairs(i, text):
+        words = str(text).split(" ")[:6]
+        cap = None if i % 7 == 0 else "Figure 1: " + " ".join(words[:3])
+        payload = pdf_write.build_pdf(
+            " ".join(words), figure=True, caption=cap,
+            image_fmt=("jpeg" if i % 2 == 0 else "gray"),
+            image_dims=(16 + i % 97, 9 + i % 53),
+            compress=(i % 3 == 0),
+            rotate=(90 if i % 5 == 0 else 0),
+            encrypt=("aes-128" if i % 13 == 0 else None),
+        )
+        for img in extract_pdf_images(payload):
+            yield (i, *(img[c] for c in cols))
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, width int, height int, fmt string, "
-                "caption string, x0 double, y0 double, x1 double, y1 double"),
+    return fanout(
+        docs, pairs,
+        "doc_id long, width int, height int, fmt string, caption string, "
+        "x0 double, y0 double, x1 double, y1 double",
     )
 
 

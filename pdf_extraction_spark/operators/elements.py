@@ -28,14 +28,14 @@ from pyspark.sql import types as T
 
 from ..corpus import doc_url, spread_docs
 from ..kernels import pdf_write
-from ..pipeline import extract_corpus
-from .common import first_words
+from ..pipeline import extract_corpus, fanout
+from .common import first_words, tbl
 
 
 def _titled_pdf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF corpus with a title block per doc (>= 2 elements each), so the
     element graph has pairs to relate."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet"))
+    docs = spread_docs(tbl(spark, sf_dir, "documents"))
 
     @F.pandas_udf(T.BinaryType())
     def make_pdf(text: pd.Series, doc_id: pd.Series) -> pd.Series:
@@ -80,7 +80,7 @@ def elements_df(extracted: DataFrame) -> DataFrame:
 def _figured_pdf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF corpus where every doc carries the full element taxonomy: title,
     header/footer chrome, a figure XObject, and a proximity caption."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet"))
+    docs = spread_docs(tbl(spark, sf_dir, "documents"))
 
     @F.pandas_udf(T.BinaryType())
     def make_pdf(text: pd.Series, doc_id: pd.Series) -> pd.Series:
@@ -183,30 +183,18 @@ def q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf_vector_utils.py:169-192), and emit one row per cell. The DuckDB
     oracle recomputes every cell's text directly from ``documents`` —
     cell (r, c) must equal word r*3+c+1 of the document."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    from ..kernels import pdf_extract as px
 
-    def _cells(batches):
-        from ..kernels import pdf_extract as px
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-        for pdf in batches:
-            out = {"doc_id": [], "cell_row": [], "cell_col": [], "cell_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = first_words(text, 9)
-                rows = [words[0:3], words[3:6], words[6:9]]
-                payload = pdf_write.build_pdf("", table_rows=rows)
-                for t in px.extract_table_cells(payload):
-                    for c in t["cells"]:
-                        out["doc_id"].append(int(doc_id))
-                        out["cell_row"].append(c["row"])
-                        out["cell_col"].append(c["col"])
-                        out["cell_text"].append(c["text"])
-            yield pd.DataFrame(out)
+    def cells(doc_id, text):
+        words = first_words(text, 9)
+        payload = pdf_write.build_pdf("", table_rows=[words[0:3], words[3:6], words[6:9]])
+        for t in px.extract_table_cells(payload):
+            for c in t["cells"]:
+                yield doc_id, c["row"], c["col"], c["text"]
 
-    return docs.mapInPandas(
-        _cells, schema="doc_id long, cell_row int, cell_col int, cell_text string"
-    )
+    return fanout(docs, cells, "doc_id long, cell_row int, cell_col int, cell_text string")
 
 
 SQL_TABLE_CELLS = """
@@ -305,57 +293,39 @@ def q_html_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     use a rowspan/colspan variant so WHATWG span occupancy (cells sliding
     past rowspan-claimed slots, spans clamped) is exercised under the DuckDB
     oracle, not just unit goldens."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    from ..kernels import html_extract as hx
 
-    def _cells(batches):
-        from ..kernels import html_extract as hx
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "cell_row": [], "cell_col": [],
-                "rowspan": [], "colspan": [], "is_header": [], "cell_text": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 9)
-                if i % 3 == 0:
-                    body = (
-                        f"<tr><th rowspan=2>{w[0]}</th><th>{w[1]}</th>"
-                        f"<th>{w[2]}</th></tr>"
-                        f"<tr><td>{w[3]}</td><td>{w[4]}</td></tr>"
-                        f"<tr><td colspan=\"2\">{w[5]}</td><td>{w[6]}</td></tr>"
-                    )
-                else:
-                    rows = [w[0:3], w[3:6], w[6:9]]
-                    body = "".join(
-                        "<tr>"
-                        + "".join(
-                            f"<{'th' if r == 0 else 'td'}>{c}</{'th' if r == 0 else 'td'}>"
-                            for c in row
-                        )
-                        + "</tr>"
-                        for r, row in enumerate(rows)
-                    )
-                html = f"<html><body><table>{body}</table></body></html>"
-                for t in hx.extract_html_tables(html):
-                    for c in t["cells"]:
-                        out["doc_id"].append(i)
-                        out["cell_row"].append(c["row"])
-                        out["cell_col"].append(c["col"])
-                        out["rowspan"].append(c["rowspan"])
-                        out["colspan"].append(c["colspan"])
-                        out["is_header"].append(c["header"])
-                        out["cell_text"].append(c["text"])
-            yield pd.DataFrame(out)
+    def cells(i, text):
+        w = first_words(text, 9)
+        if i % 3 == 0:
+            body = (
+                f"<tr><th rowspan=2>{w[0]}</th><th>{w[1]}</th>"
+                f"<th>{w[2]}</th></tr>"
+                f"<tr><td>{w[3]}</td><td>{w[4]}</td></tr>"
+                f"<tr><td colspan=\"2\">{w[5]}</td><td>{w[6]}</td></tr>"
+            )
+        else:
+            rows = [w[0:3], w[3:6], w[6:9]]
+            body = "".join(
+                "<tr>"
+                + "".join(
+                    f"<{'th' if r == 0 else 'td'}>{c}</{'th' if r == 0 else 'td'}>"
+                    for c in row
+                )
+                + "</tr>"
+                for r, row in enumerate(rows)
+            )
+        for t in hx.extract_html_tables(f"<html><body><table>{body}</table></body></html>"):
+            for c in t["cells"]:
+                yield (i, c["row"], c["col"], c["rowspan"], c["colspan"], c["header"],
+                       c["text"])
 
-    return docs.mapInPandas(
-        _cells,
-        schema=(
-            "doc_id long, cell_row int, cell_col int, rowspan int, "
-            "colspan int, is_header boolean, cell_text string"
-        ),
+    return fanout(
+        docs, cells,
+        "doc_id long, cell_row int, cell_col int, rowspan int, colspan int, "
+        "is_header boolean, cell_text string",
     )
 
 
@@ -396,7 +366,7 @@ def q_confidence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid confidence, the admitted count, and which gate path fired.
     (Figure leniency — conf ≥ 0.6 admits, reference :407-415 — is pinned
     by the per-kind constants in tests/test_pdf_kernel.py.)"""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
 

@@ -22,14 +22,12 @@ cardinality is sub-linear in corpus size. No driver-side collection.
 from __future__ import annotations
 
 import re as _re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import corpus_from_documents, doc_url, spread_docs
-from ..pipeline import LINKS_SCHEMA, META_SCHEMA, _extract_stage
+from ..pipeline import LINKS_SCHEMA, META_SCHEMA, _extract_stage, fanout
 from .common import first_words, sql_fold_ws, tbl
 
 
@@ -126,7 +124,7 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     its target). Docs with ``doc_id % 4 == 0`` carry no refresh and must
     emit nothing. The shell page is JVM column algebra and its head meta a
     projection of the extraction stage; zero shuffle."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select(
         "doc_id", "text", "source"
     )
     i = F.col("doc_id")
@@ -176,54 +174,37 @@ def q_image_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag, src resolved against the document URL. Chrome images (logos,
     banners) are flagged so downstream keeps only content figures. One
     Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_html_assets
     from ..kernels.urlnorm import resolve_link
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "src": [], "alt": [],
-                    "chrome": [], "srcset_n": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                # words are ATTRIBUTE content: escape &/'/< so a word
-                # containing the quote delimiter cannot truncate the
-                # attribute (the kernel decodes entities back and folds
-                # whitespace, which the oracle mirrors with sql_fold_ws)
-                w = [
-                    x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
-                    for x in first_words(text, 4)
-                ]
-                html = (
-                    "<html><body>"
-                    "<nav><img src='/logo.png' alt='logo'></nav>"
-                    f"<main><img src='/img/{i}.jpg' alt='{w[0]} {w[1]}'"
-                    f" srcset='/img/{i}-1x.jpg 1x, /img/{i}-2x.jpg 2x'>"
-                    f"<img src='/img/{i}.png' alt='{w[2]} {w[3]}'></main>"
-                    "</body></html>"
-                )
-                for pos, a in enumerate(extract_html_assets(html)):
-                    if not a["src"]:
-                        continue
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["src"].append(resolve_link(url, a["src"]))
-                    rows["alt"].append(a["alt"])
-                    rows["chrome"].append(a["chrome"])
-                    rows["srcset_n"].append(len(a["srcset"]))
-            yield pd.DataFrame(rows)
+    def pairs(i, text, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        # words are ATTRIBUTE content: escape &/'/< so a word containing
+        # the quote delimiter cannot truncate the attribute (the kernel
+        # decodes entities back and folds whitespace, which the oracle
+        # mirrors with sql_fold_ws)
+        w = [
+            x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
+            for x in first_words(text, 4)
+        ]
+        html = (
+            "<html><body>"
+            "<nav><img src='/logo.png' alt='logo'></nav>"
+            f"<main><img src='/img/{i}.jpg' alt='{w[0]} {w[1]}'"
+            f" srcset='/img/{i}-1x.jpg 1x, /img/{i}-2x.jpg 2x'>"
+            f"<img src='/img/{i}.png' alt='{w[2]} {w[3]}'></main>"
+            "</body></html>"
+        )
+        for pos, a in enumerate(extract_html_assets(html)):
+            if a["src"]:
+                yield (i, pos, resolve_link(url, a["src"]), a["alt"], a["chrome"],
+                       len(a["srcset"]))
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, pos int, src string, alt string, "
-                "chrome boolean, srcset_n int"),
+    return fanout(
+        docs, pairs,
+        "doc_id long, pos int, src string, alt string, chrome boolean, srcset_n int",
     )
 
 
@@ -252,42 +233,25 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-frontier feed: sitemap XML entries (loc/lastmod/priority) per
     host, parsed with the total sitemap scanner — the seed list crawlers
     refresh frontiers from. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..sources.sitemap import parse_sitemap
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "loc": [], "lastmod": [],
-                    "priority": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                xml = (
-                    "<?xml version='1.0'?><urlset>"
-                    f"<url><loc>https://{source}.example.com/{w[0]}</loc>"
-                    f"<lastmod>2025-01-0{1 + i % 9}</lastmod>"
-                    f"<priority>0.{i % 10}</priority></url>"
-                    f"<url><loc>https://{source}.example.com/{w[1]}</loc></url>"
-                    "</urlset>"
-                )
-                for pos, e in enumerate(parse_sitemap(xml)["entries"]):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["loc"].append(e["loc"])
-                    rows["lastmod"].append(e["lastmod"])
-                    rows["priority"].append(e["priority"])
-            yield pd.DataFrame(rows)
+    def urls(i, text, source):
+        w = first_words(text, 2)
+        xml = (
+            "<?xml version='1.0'?><urlset>"
+            f"<url><loc>https://{source}.example.com/{w[0]}</loc>"
+            f"<lastmod>2025-01-0{1 + i % 9}</lastmod>"
+            f"<priority>0.{i % 10}</priority></url>"
+            f"<url><loc>https://{source}.example.com/{w[1]}</loc></url>"
+            "</urlset>"
+        )
+        for pos, e in enumerate(parse_sitemap(xml)["entries"]):
+            yield i, pos, e["loc"], e["lastmod"], e["priority"]
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, pos int, loc string, lastmod string, "
-                "priority double"),
+    return fanout(
+        docs, urls, "doc_id long, pos int, loc string, lastmod string, priority double"
     )
 
 
@@ -312,38 +276,21 @@ def q_robots_allowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule wins, allow wins ties). At 10^12 docs this is the broadcast policy
     side of a frontier join; here the verdicts themselves are value-checked.
     One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.robots import is_allowed, parse_robots
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "path": [], "allowed": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                robots = (
-                    "User-agent: *\n"
-                    "Disallow: /private/\n"
-                    f"Allow: /private/{w[0]}\n"
-                )
-                rules = parse_robots(robots)
-                for pos, path in enumerate(
-                    (f"/{w[0]}", f"/private/{w[0]}", f"/private/{w[1]}")
-                ):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["path"].append(path)
-                    rows["allowed"].append(is_allowed(rules, "anybot", path))
-            yield pd.DataFrame(rows)
+    def verdicts(i, text):
+        w = first_words(text, 2)
+        rules = parse_robots(
+            "User-agent: *\n"
+            "Disallow: /private/\n"
+            f"Allow: /private/{w[0]}\n"
+        )
+        for pos, path in enumerate((f"/{w[0]}", f"/private/{w[0]}", f"/private/{w[1]}")):
+            yield i, pos, path, is_allowed(rules, "anybot", path)
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, path string, allowed boolean"
-    )
+    return fanout(docs, verdicts, "doc_id long, pos int, path string, allowed boolean")
 
 
 SQL_ROBOTS_ALLOWED = """
@@ -366,61 +313,44 @@ def q_feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     host — the channel news crawls find fresh documents through. Docs
     alternate between an RSS 2.0 and an Atom rendering of the same two
     entries, so both dialects are value-checked. One Arrow pass."""
-    import pandas as pd
-
     from ..sources.feeds import parse_feed
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "text", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "text", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "kind": [], "title": [],
-                    "link": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                # words land in XML text AND the Atom href ATTRIBUTE: a
-                # quote in a word truncated the single-quoted href (the
-                # 300-doc parity soak caught it); entity-escape &/'/< —
-                # the parser decodes them back, so parsed values equal
-                # the raw words the oracle emits
-                w = [
-                    x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
-                    for x in first_words(text, 2)
-                ]
-                base = f"https://{source}.example.com"
-                if i % 2 == 0:
-                    xml = (
-                        "<rss version='2.0'><channel><title>c</title>"
-                        f"<item><title>{w[0]}</title>"
-                        f"<link>{base}/{w[0]}</link></item>"
-                        f"<item><title>{w[1]}</title>"
-                        f"<link>{base}/{w[1]}</link></item>"
-                        "</channel></rss>"
-                    )
-                else:
-                    xml = (
-                        "<feed><title>c</title>"
-                        f"<entry><title>{w[0]}</title>"
-                        f"<link href='{base}/{w[0]}'/></entry>"
-                        f"<entry><title>{w[1]}</title>"
-                        f"<link href='{base}/{w[1]}'/></entry>"
-                        "</feed>"
-                    )
-                parsed = parse_feed(xml)
-                for pos, e in enumerate(parsed["entries"]):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["kind"].append(parsed["kind"])
-                    rows["title"].append(e["title"])
-                    rows["link"].append(e["link"])
-            yield pd.DataFrame(rows)
+    def entries(i, text, source):
+        # words land in XML text AND the Atom href ATTRIBUTE: a quote in a
+        # word truncated the single-quoted href (the 300-doc parity soak
+        # caught it); entity-escape &/'/< — the parser decodes them back,
+        # so parsed values equal the raw words the oracle emits
+        w = [
+            x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
+            for x in first_words(text, 2)
+        ]
+        base = f"https://{source}.example.com"
+        if i % 2 == 0:
+            xml = (
+                "<rss version='2.0'><channel><title>c</title>"
+                f"<item><title>{w[0]}</title>"
+                f"<link>{base}/{w[0]}</link></item>"
+                f"<item><title>{w[1]}</title>"
+                f"<link>{base}/{w[1]}</link></item>"
+                "</channel></rss>"
+            )
+        else:
+            xml = (
+                "<feed><title>c</title>"
+                f"<entry><title>{w[0]}</title>"
+                f"<link href='{base}/{w[0]}'/></entry>"
+                f"<entry><title>{w[1]}</title>"
+                f"<link href='{base}/{w[1]}'/></entry>"
+                "</feed>"
+            )
+        parsed = parse_feed(xml)
+        for pos, e in enumerate(parsed["entries"]):
+            yield i, pos, parsed["kind"], e["title"], e["link"]
 
-    return docs.mapInPandas(
-        gen,
-        schema="doc_id long, pos int, kind string, title string, link string",
+    return fanout(
+        docs, entries, "doc_id long, pos int, kind string, title string, link string"
     )
 
 
@@ -441,36 +371,21 @@ def _robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle can restate. The table is tiny (|hosts| × |paths|), so
     the frontier broadcasts it; at 10^12 docs the policy side stays
     per-host — millions of rows, still broadcast range."""
-    import pandas as pd
+    from ..kernels.robots import is_allowed, parse_robots
 
-    hosts = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("source")
-        .distinct()
-    )
+    hosts = tbl(spark, sf_dir, "documents").select("source").distinct()
 
-    def gen(batches):
-        from ..kernels.robots import is_allowed, parse_robots
+    def policy(s):
+        s = str(s)
+        # FIRST digit run, like the oracle's regexp_extract — a host like
+        # 'a1b2' must not read '12' here and '1' there
+        m = _re.search(r"[0-9]+", s)
+        d = int(m.group()) if m else 1  # digitless -> odd -> allow
+        rules = parse_robots("User-agent: *\n" + ("Disallow: /about\n" if d % 2 == 0 else ""))
+        for p in ("/", "/about"):
+            yield f"{s}.example.com", p, is_allowed(rules, "anybot", p)
 
-        for pdf in batches:
-            rows = {"host": [], "path": [], "allowed": []}
-            for s in pdf["source"]:
-                s = str(s)
-                # FIRST digit run, like the oracle's regexp_extract — a
-                # host like 'a1b2' must not read '12' here and '1' there
-                m = _re.search(r"[0-9]+", s)
-                d = int(m.group()) if m else 1  # digitless -> odd -> allow
-                robots = "User-agent: *\n" + (
-                    "Disallow: /about\n" if d % 2 == 0 else ""
-                )
-                rules = parse_robots(robots)
-                for p in ("/", "/about"):
-                    rows["host"].append(f"{s}.example.com")
-                    rows["path"].append(p)
-                    rows["allowed"].append(is_allowed(rules, "anybot", p))
-            yield pd.DataFrame(rows)
-
-    return hosts.mapInPandas(gen, "host string, path string, allowed boolean")
+    return fanout(hosts, policy, "host string, path string, allowed boolean")
 
 
 def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,9 +402,7 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lk = q_extract_outlinks(spark, sf_dir).filter(~F.col("nofollow"))
-    crawled = spark.read.parquet(
-        f"{sf_dir.rstrip('/')}/documents.parquet"
-    ).select(doc_url().alias("url"))
+    crawled = tbl(spark, sf_dir, "documents").select(doc_url().alias("url"))
     cand = lk.select(
         F.col("resolved").alias("target"),
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long").alias("discoverer"),
@@ -528,39 +441,25 @@ def q_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     rss+xml|atom+xml>` declarations per page, resolved against the doc URL
     — the hook that connects page crawling to the feed source
     (:mod:`..sources.feeds`). One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_feed_links
     from ..kernels.urlnorm import resolve_link
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "source")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "feed_url": [], "kind": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                html = (
-                    "<html><head>"
-                    "<link rel='alternate' type='application/rss+xml'"
-                    " href='/feed.xml'>"
-                    + ("<link rel='alternate' type='application/atom+xml'"
-                       " href='/atom.xml'>" if i % 2 == 0 else "")
-                    + "</head><body><p>x</p></body></html>"
-                )
-                for pos, f in enumerate(extract_feed_links(html)):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["feed_url"].append(resolve_link(url, f["href"]))
-                    rows["kind"].append(f["kind"])
-            yield pd.DataFrame(rows)
+    def feeds(i, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        html = (
+            "<html><head>"
+            "<link rel='alternate' type='application/rss+xml'"
+            " href='/feed.xml'>"
+            + ("<link rel='alternate' type='application/atom+xml'"
+               " href='/atom.xml'>" if i % 2 == 0 else "")
+            + "</head><body><p>x</p></body></html>"
+        )
+        for pos, f in enumerate(extract_feed_links(html)):
+            yield i, pos, resolve_link(url, f["href"]), f["kind"]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, feed_url string, kind string"
-    )
+    return fanout(docs, feeds, "doc_id long, pos int, feed_url string, kind string")
 
 
 SQL_FEED_DISCOVERY = """
@@ -609,7 +508,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     table re-joined to the static edge list each round; ``localCheckpoint``
     per round caps logical-plan growth exactly like
     ``dedup.connected_components``."""
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select(
         "doc_id", "source"
     )
     nodes = docs.select(F.col("source").alias("host")).distinct()
@@ -775,46 +674,23 @@ def q_robots_crawl_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sitemap lines). The scheduler joins this tiny per-host table broadcast
     against the frontier to budget fetch slots. One Arrow pass over the
     distinct hosts, zero shuffle."""
-    import pandas as pd
+    from ..kernels.robots import parse_robots
 
-    hosts = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        .select("source")
-        .distinct()
-    )
+    hosts = tbl(spark, sf_dir, "documents").select("source").distinct()
 
-    def gen(batches):
-        from ..kernels.robots import parse_robots
+    def politeness(s):
+        s = str(s)
+        m = _re.search(r"[0-9]+", s)
+        d = int(m.group()) if m else 0  # first run, like the oracle
+        robots = "User-agent: *\n"
+        if d % 5:
+            robots += f"Crawl-delay: {d % 5}\n"
+        for k in range(1 + d % 2):
+            robots += f"Sitemap: https://{s}.example.com/sitemap{k}.xml\n"
+        parsed = parse_robots(robots)
+        yield f"{s}.example.com", parsed["crawl_delay"].get("*"), len(parsed["sitemaps"])
 
-        for pdf in batches:
-            rows = {"host": [], "crawl_delay": [], "n_sitemaps": []}
-            for s in pdf["source"]:
-                s = str(s)
-                m = _re.search(r"[0-9]+", s)
-                d = int(m.group()) if m else 0  # first run, like the oracle
-                robots = "User-agent: *\n"
-                if d % 5:
-                    robots += f"Crawl-delay: {d % 5}\n"
-                for k in range(1 + d % 2):
-                    robots += f"Sitemap: https://{s}.example.com/sitemap{k}.xml\n"
-                parsed = parse_robots(robots)
-                delay = parsed["crawl_delay"].get("*")
-                rows["host"].append(f"{s}.example.com")
-                rows["crawl_delay"].append(
-                    None if delay is None else float(delay)
-                )
-                rows["n_sitemaps"].append(len(parsed["sitemaps"]))
-            yield pd.DataFrame(
-                {
-                    "host": rows["host"],
-                    "crawl_delay": pd.array(rows["crawl_delay"], dtype="float64"),
-                    "n_sitemaps": pd.array(rows["n_sitemaps"], dtype="int32"),
-                }
-            )
-
-    return hosts.mapInPandas(
-        gen, schema="host string, crawl_delay double, n_sitemaps int"
-    )
+    return fanout(hosts, politeness, "host string, crawl_delay double, n_sitemaps int")
 
 
 SQL_ROBOTS_CRAWL_DELAY = """
@@ -851,50 +727,41 @@ def q_redirect_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..kernels.urlnorm import resolve_link
     from ..sources.warc import http_header, http_envelope_meta, iter_warc_records
 
-    docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
-        "doc_id", "source"
-    )
+    docs = spread_docs(tbl(spark, sf_dir, "documents")).select("doc_id", "source")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "status": [], "target": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                lane = i % 3
-                if lane == 0:
-                    status, loc = 301, b"/moved/%d" % i
-                elif lane == 1:
-                    status, loc = 302, b"https://hub.example.com/r/%d" % i
-                else:
-                    status, loc = 200, None
-                head = b"HTTP/1.1 %d X\r\n" % status
-                if loc is not None:
-                    head += b"Location: %s\r\n" % loc
-                http = head + b"Content-Type: text/html\r\n\r\nx"
-                uri = "https://%s.example.com/doc/%d" % (source, i)
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: response\r\n"
-                    b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
-                    b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
-                    b"WARC-Target-URI: %s\r\n"
-                    b"Content-Length: %d\r\n\r\n"
-                    % (i, uri.encode(), len(http))
-                ) + http + b"\r\n\r\n"
-                for headers, payload in iter_warc_records(io.BytesIO(rec)):
-                    st, _ct = http_envelope_meta(payload)
-                    location = http_header(payload, "location")
-                    target = (
-                        resolve_link(headers.get("warc-target-uri", uri), location)
-                        if location and st and 300 <= st < 400
-                        else None
-                    )
-                    rows["doc_id"].append(i)
-                    rows["status"].append(st)
-                    rows["target"].append(target)
-            yield pd.DataFrame(rows)
+    def redirects(i, source):
+        lane = i % 3
+        if lane == 0:
+            status, loc = 301, b"/moved/%d" % i
+        elif lane == 1:
+            status, loc = 302, b"https://hub.example.com/r/%d" % i
+        else:
+            status, loc = 200, None
+        head = b"HTTP/1.1 %d X\r\n" % status
+        if loc is not None:
+            head += b"Location: %s\r\n" % loc
+        http = head + b"Content-Type: text/html\r\n\r\nx"
+        uri = "https://%s.example.com/doc/%d" % (source, i)
+        rec = (
+            b"WARC/1.0\r\n"
+            b"WARC-Type: response\r\n"
+            b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
+            b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
+            b"WARC-Target-URI: %s\r\n"
+            b"Content-Length: %d\r\n\r\n"
+            % (i, uri.encode(), len(http))
+        ) + http + b"\r\n\r\n"
+        for headers, payload in iter_warc_records(io.BytesIO(rec)):
+            st, _ct = http_envelope_meta(payload)
+            location = http_header(payload, "location")
+            target = (
+                resolve_link(headers.get("warc-target-uri", uri), location)
+                if location and st and 300 <= st < 400
+                else None
+            )
+            yield i, st, target
 
-    return docs.mapInPandas(gen, schema="doc_id long, status int, target string")
+    return fanout(docs, redirects, "doc_id long, status int, target string")
 
 
 SQL_REDIRECT_MAP = """

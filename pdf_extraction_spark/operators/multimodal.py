@@ -1,11 +1,11 @@
 """Multimodal (binary) column plumbing.
 
 Image/audio/video payloads are opaque ``binary`` columns with typed metadata
-extracted by Arrow-batched ``mapInPandas`` stages. The container-header
-decode is REAL (VERDICT r2 item 3): PNG IHDR with CRC verification, JPEG
-marker walk to the SOF frame header, RIFF/WAVE fmt chunk —
-:mod:`..kernels.containers`. Only pixel/sample payload decode is out of
-scope (no media libraries in this container).
+extracted by per-row :func:`..pipeline.fanout` stages (one ``mapInArrow``
+each). The container-header decode is REAL (VERDICT r2 item 3): PNG IHDR
+with CRC verification, JPEG marker walk to the SOF frame header, RIFF/WAVE
+fmt chunk — :mod:`..kernels.containers`. Only pixel/sample payload decode
+is out of scope (no media libraries in this container).
 
 The fixture corpus interleaves real container payloads (built
 deterministically from doc_id by the same module's builders, so the DuckDB
@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import containers
+from ..pipeline import fanout
 from .common import tbl
 
 META_SCHEMA = (
@@ -57,55 +57,36 @@ def _fixture_payload(doc_id: int, text: str) -> bytes:
     return text.encode("utf-8")
 
 
-def _payload_batches(batches):
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    _fixture_payload(int(d), str(t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])
-                ],
-            }
-        )
+def _payload(doc_id, text):
+    yield doc_id, _fixture_payload(doc_id, str(text))
 
 
-def _meta_batches(batches):
-    for pdf in batches:
-        out = {
-            "doc_id": [], "n_bytes": [], "width": [], "height": [],
-            "sample_rate": [], "channels": [], "duration_ms": [], "fmt": [],
+def _meta(doc_id, payload):
+    try:
+        meta = containers.decode_container(payload)
+    except ValueError:
+        # not a media container: synthetic metadata from the digest
+        digest = hashlib.md5(payload).hexdigest()
+        meta = {
+            "fmt": "synthetic",
+            "width": 64 + ord(digest[0]) % 64,
+            "height": 64 + ord(digest[1]) % 64,
+            "sample_rate": -1,
+            "channels": -1,
+            "duration_ms": -1,
         }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(payload)
-            try:
-                meta = containers.decode_container(payload)
-            except ValueError:
-                # not a media container: synthetic metadata from the digest
-                digest = hashlib.md5(payload).hexdigest()
-                meta = {
-                    "fmt": "synthetic",
-                    "width": 64 + ord(digest[0]) % 64,
-                    "height": 64 + ord(digest[1]) % 64,
-                    "sample_rate": -1,
-                    "channels": -1,
-                    "duration_ms": -1,
-                }
-            out["doc_id"].append(int(doc_id))
-            out["n_bytes"].append(len(payload))
-            for k in ("width", "height", "sample_rate", "channels", "duration_ms", "fmt"):
-                out[k].append(meta[k])
-        yield pd.DataFrame(out)
+    yield (doc_id, len(payload), *(meta[k] for k in (
+        "width", "height", "sample_rate", "channels", "duration_ms", "fmt")))
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column metadata extraction: deterministic payload source stage
-    (binary column through Arrow) → mapInPandas header decode → typed
-    metadata. Both stages are narrow (no shuffle): at 100 TB this is a pure
-    scan-side map over the payload column."""
+    (binary column through Arrow) → per-row header decode → typed metadata,
+    two :func:`..pipeline.fanout` stages. Both are narrow (no shuffle): at
+    100 TB this is a pure scan-side map over the payload column."""
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = docs.mapInPandas(_payload_batches, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(_meta_batches, schema=META_SCHEMA)
+    payloads = fanout(docs, _payload, "doc_id long, payload binary")
+    return fanout(payloads, _meta, META_SCHEMA)
 
 
 SQL_MULTIMODAL_META = f"""
@@ -148,7 +129,7 @@ FRAMES_SCHEMA = (
 )
 
 
-def _frame_batches(batches):
+def _frames(doc_id, text):
     """Frame-sampling plumbing: one input document → N frame rows (video
     frame-sampling shape). The 'frame' is a character-stride slice and its
     signature an md5 prefix over the slice's UTF-8 bytes — character-based
@@ -156,31 +137,20 @@ def _frame_batches(batches):
     text too (ADVICE r1). A real decoder would emit decoded frame tensors
     here; the Spark-side fan-out schema, batching, and ordering are exactly
     what that decoder would need."""
-    for pdf in batches:
-        out = {"doc_id": [], "frame_idx": [], "frame_off": [], "frame_sig": []}
-        for doc_id, text in zip(pdf["doc_id"], pdf["payload"]):
-            text = str(text)
-            n_frames = min(max(len(text) // FRAME_STRIDE, 1), MAX_FRAMES)
-            for i in range(n_frames):
-                off = i * FRAME_STRIDE
-                sig = hashlib.md5(
-                    text[off : off + FRAME_STRIDE].encode("utf-8")
-                ).hexdigest()[:8]
-                out["doc_id"].append(int(doc_id))
-                out["frame_idx"].append(i)
-                out["frame_off"].append(off)
-                out["frame_sig"].append(sig)
-        yield pd.DataFrame(out)
+    text = str(text)
+    for i in range(min(max(len(text) // FRAME_STRIDE, 1), MAX_FRAMES)):
+        off = i * FRAME_STRIDE
+        sig = hashlib.md5(text[off : off + FRAME_STRIDE].encode("utf-8")).hexdigest()[:8]
+        yield doc_id, i, off, sig
 
 
 def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over document payloads: mapInPandas fan-out (1 → N
-    rows) with deterministic per-frame signatures the oracle reproduces with
-    substring+md5 arithmetic (both sides character-based)."""
-    docs = tbl(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").alias("payload")
-    )
-    return docs.mapInPandas(_frame_batches, schema=FRAMES_SCHEMA)
+    """Frame sampling over document payloads: a per-row
+    :func:`..pipeline.fanout` (1 → N rows) with deterministic per-frame
+    signatures the oracle reproduces with substring+md5 arithmetic (both
+    sides character-based)."""
+    docs = tbl(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("payload"))
+    return fanout(docs, _frames, FRAMES_SCHEMA)
 
 
 SQL_MULTIMODAL_FRAMESAMPLE = f"""

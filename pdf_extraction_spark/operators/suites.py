@@ -161,9 +161,10 @@ def _unpivot(df: DataFrame, parts) -> DataFrame:
     v_str, v_num) struct array. All parts share the key columns.
 
     A union branch per value column would re-execute the subtree once per
-    column, and the shuffle-free mapInPandas parts (docmeta/crawl extraction)
-    have no exchange for Spark to reuse, so full document extraction would
-    run 2-4x per part; parts derived from the same expensive subtree (one
+    column, and the shuffle-free Python parts (the extraction stage and the
+    docmeta/crawl ``fanout`` stages, one ``mapInArrow`` each) have no
+    exchange for Spark to reuse, so full document extraction would run 2-4x
+    per part; parts derived from the same expensive subtree (one
     HTML extraction pass) likewise cost one execution, not one per part."""
     keys = parts[0][1]
     key = F.concat_ws(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..pipeline import local_df
+from ..pipeline import fanout, local_df
 from .common import first_words, tbl
 
 # deterministic per-language stopword lists (literal dimension table; the
@@ -239,43 +239,36 @@ WINNOW_B = 257  # rolling-hash base; hash = sum(code * B^j) mod 2^32
 _WINNOW_POWS = [pow(WINNOW_B, WINNOW_K - 1 - j, 1 << 32) for j in range(WINNOW_K)]
 
 
-def _winnow_batches(batches):
-    """Arrow-batched winnowing kernel — fully numpy-vectorized (VERDICT r2
-    item 2: the r2 version ran one hashlib.md5 call per character position).
+def _winnow(doc_id, text):
+    """Winnowing kernel for one document — fully numpy-vectorized (VERDICT
+    r2 item 2: the r2 version ran one hashlib.md5 call per character
+    position).
 
-    Per document: decode to code points via utf-32-le (no per-char Python),
-    polynomial hash of every char k-gram as one sliding-window matmul mod
-    2^32, per-window minimum via sliding_window_view(...).min(axis=1) with a
+    Decode to code points via utf-32-le (no per-char Python), polynomial
+    hash of every char k-gram as one sliding-window matmul mod 2^32,
+    per-window minimum via sliding_window_view(...).min(axis=1) with a
     reverse-cummin tail for the shrinking trailing windows (matching the
     oracle's CURRENT ROW .. W-1 FOLLOWING frame), then np.unique for the
     distinct count. Docs shorter than K emit no row (the oracle's
     generate_series is empty for them)."""
     import numpy as np
-    import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
 
-    pows = np.asarray(_WINNOW_POWS, dtype=np.uint64)
-    for pdf in batches:
-        out = {"doc_id": [], "n_fp": [], "min_fp": []}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            text = str(text)
-            L = len(text) - (WINNOW_K - 1)
-            if L <= 0:
-                continue
-            codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-            grams = sliding_window_view(codes, WINNOW_K).astype(np.uint64)
-            # max term: codepoint (<2^21) * pow (<2^32) summed 8x — fits u64
-            hs = (grams @ pows) & np.uint64(0xFFFFFFFF)
-            if L > WINNOW_W:
-                full = sliding_window_view(hs, WINNOW_W).min(axis=1)
-                tail = np.minimum.accumulate(hs[: L - WINNOW_W : -1])[::-1]
-                sel = np.concatenate([full, tail])
-            else:
-                sel = np.minimum.accumulate(hs[::-1])[::-1]
-            out["doc_id"].append(int(doc_id))
-            out["n_fp"].append(int(np.unique(sel).size))
-            out["min_fp"].append(int(sel.min()))
-        yield pd.DataFrame(out)
+    text = str(text)
+    L = len(text) - (WINNOW_K - 1)
+    if L <= 0:
+        return
+    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+    grams = sliding_window_view(codes, WINNOW_K).astype(np.uint64)
+    # max term: codepoint (<2^21) * pow (<2^32) summed 8x — fits u64
+    hs = (grams @ np.asarray(_WINNOW_POWS, dtype=np.uint64)) & np.uint64(0xFFFFFFFF)
+    if L > WINNOW_W:
+        full = sliding_window_view(hs, WINNOW_W).min(axis=1)
+        tail = np.minimum.accumulate(hs[: L - WINNOW_W : -1])[::-1]
+        sel = np.concatenate([full, tail])
+    else:
+        sel = np.minimum.accumulate(hs[::-1])[::-1]
+    yield doc_id, int(np.unique(sel).size), int(sel.min())
 
 
 def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -283,16 +276,14 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     polynomial rolling hash over char 8-grams, per-window minimum, distinct
     selected hashes.
 
-    Computed inside an Arrow-batched mapInPandas kernel: winnowing is
+    Computed by a per-row :func:`..pipeline.fanout` kernel: winnowing is
     per-document-local, so exploding one row per character position through
     a doc_id-partitioned window shuffle (the r1 shape — ~L shuffle rows per
     doc) is pure inflation; the kernel emits the per-doc reduction directly
     with zero shuffle, and the hash/window math is numpy array algebra, not
     per-char Python (VERDICT r1 perf item; VERDICT r2 item 2)."""
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        _winnow_batches, schema="doc_id long, n_fp long, min_fp long"
-    )
+    return fanout(docs, _winnow, "doc_id long, n_fp long, min_fp long")
 
 
 _WINNOW_HASH_SQL = " + ".join(
@@ -380,28 +371,14 @@ FROM n, LATERAL (SELECT unnest(generate_series(0, n_chunks - 1)) AS chunk_id)
 """
 
 
-def _recursive_chunk_batches(batches):
+def _recursive_chunks(doc_id, text):
     """UDTF-shaped fan-out: one doc row → one row per recursive chunk, with
     offsets and a slice-equality flag (chunk text really is text[start:end])."""
-    import pandas as pd
-
     from ..kernels.chunking import recursive_chunks
 
-    for pdf in batches:
-        out = {
-            "doc_id": [], "chunk_idx": [], "start": [], "end": [],
-            "doc_len": [], "slice_ok": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            text = str(text)
-            for ci, (a, b) in enumerate(recursive_chunks(text)):
-                out["doc_id"].append(int(doc_id))
-                out["chunk_idx"].append(ci)
-                out["start"].append(a)
-                out["end"].append(b)
-                out["doc_len"].append(len(text))
-                out["slice_ok"].append(0 <= a <= b <= len(text))
-        yield pd.DataFrame(out)
+    text = str(text)
+    for ci, (a, b) in enumerate(recursive_chunks(text)):
+        yield doc_id, ci, a, b, len(text), 0 <= a <= b <= len(text)
 
 
 def q_chunk_split_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,12 +414,9 @@ def q_chunk_split_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    chunks = docs.mapInPandas(
-        _recursive_chunk_batches,
-        schema=(
-            "doc_id long, chunk_idx int, start long, end long, "
-            "doc_len long, slice_ok boolean"
-        ),
+    chunks = fanout(
+        docs, _recursive_chunks,
+        "doc_id long, chunk_idx int, start long, end long, doc_len long, slice_ok boolean",
     )
     # slice_ok pins that the chunk CONTENT matches the offsets
     # (text[start:end] really is the chunk) — the r3 invariant, kept
@@ -914,35 +888,25 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     an identity pass.
 
     NFC has no JVM builtin, so this is one of the few documented
-    Arrow-batch Python stages (``unicodedata.normalize`` over mapInPandas);
-    everything else stays in the batch. Zero shuffle."""
+    Arrow-batch Python stages (``unicodedata.normalize`` in a per-row
+    :func:`..pipeline.fanout`); everything else stays in the batch. Zero
+    shuffle."""
     import re as _re
     import unicodedata
-
-    import pandas as pd
 
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
     ctrl = _re.compile("[\x01-\x08\x0b\x0c\x0e-\x1f\x7f]")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "norm_text": [], "changed": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = first_words(text, 3)
-                raw = ("a\u0301 " + w[0] + "\u00a0" + w[1] + "\x07"
-                       + "  " + w[2])
-                norm = unicodedata.normalize("NFC", raw)
-                norm = ctrl.sub("", norm)
-                norm = norm.replace("\u00a0", " ")
-                norm = _re.sub(" +", " ", norm).strip()
-                rows["doc_id"].append(int(doc_id))
-                rows["norm_text"].append(norm)
-                rows["changed"].append(norm != raw)
-            yield pd.DataFrame(rows)
+    def normalize(doc_id, text):
+        w = first_words(text, 3)
+        raw = "a\u0301 " + w[0] + "\u00a0" + w[1] + "\x07" + "  " + w[2]
+        norm = unicodedata.normalize("NFC", raw)
+        norm = ctrl.sub("", norm)
+        norm = norm.replace("\u00a0", " ")
+        norm = _re.sub(" +", " ", norm).strip()
+        yield doc_id, norm, norm != raw
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, norm_text string, changed boolean"
-    )
+    return fanout(docs, normalize, "doc_id long, norm_text string, changed boolean")
 
 
 SQL_NORMALIZE_TEXT = """

@@ -112,6 +112,44 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> Da
     return spark.createDataFrame(table, schema)
 
 
+ROWS_PER_BATCH = 2048  # output Arrow-batch bound of every fanout stage
+
+
+def fanout(df: DataFrame, fn, schema: T.StructType | str) -> DataFrame:
+    """Per-row Python operator as one ``mapInArrow`` stage: ``fn(*row)``
+    runs over every ``df`` row (its columns in order, as Python values) and
+    each tuple it yields is one output row of ``schema`` (a ``StructType``
+    or DDL string). Columns are built as typed Arrow arrays, so an all-NULL
+    column keeps its type, and flushed every ``ROWS_PER_BATCH`` rows: an
+    input row that fans out to a whole WARC file holds one batch in memory.
+    Timestamp values must be timezone-aware (see :func:`local_df`)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+
+    def _fanout_batches(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+
+        def build(rows):
+            cols = map(pa.array, zip(*rows), arrow.types)
+            return pa.RecordBatch.from_arrays(list(cols), schema=arrow)
+
+        out = []
+        for batch in batches:
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                for r in fn(*row):
+                    out.append(r)
+                    if len(out) == ROWS_PER_BATCH:
+                        yield build(out)
+                        out = []
+        if out:
+            yield build(out)
+
+    return df.mapInArrow(_fanout_batches, schema)
+
+
 def salted_repartition(df: DataFrame, partitions: int, salt: int = 8) -> DataFrame:
     """Explicit salted repartition on url-host (SURVEY.md §4 item 2).
 

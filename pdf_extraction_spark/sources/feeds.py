@@ -16,6 +16,7 @@ from __future__ import annotations
 import gzip
 import re
 
+from ..pipeline import fanout
 from . import paths_df
 
 _ITEM = re.compile(r"<(item|entry)\b[^>]*>(.*?)</\1\s*>", re.DOTALL | re.IGNORECASE)
@@ -122,27 +123,18 @@ def parse_feed(payload: bytes | str) -> dict:
 
 def read_feeds(spark, paths: list[str], partitions: int | None = None):
     """DataFrame of ``(feed_path, kind, feed_title, title, link, published,
-    entry_id)`` — one row per entry, parsed on executors."""
-    import pandas as pd  # noqa: F401
+    entry_id)`` — one row per entry, parsed on executors by a per-path
+    :func:`..pipeline.fanout`."""
 
-    def _parse(batches):
-        import pandas as pd
+    def entries(path):
+        with open(path, "rb") as f:
+            parsed = parse_feed(f.read())
+        for e in parsed["entries"]:
+            yield (path, parsed["kind"], parsed["title"], e["title"], e["link"],
+                   e["published"], e["entry_id"])
 
-        cols = ["feed_path", "kind", "feed_title", "title", "link",
-                "published", "entry_id"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    parsed = parse_feed(f.read())
-                for e in parsed["entries"]:
-                    out.append({"feed_path": p, "kind": parsed["kind"],
-                                "feed_title": parsed["title"], **e})
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df(spark, paths, partitions).mapInPandas(
-        _parse,
-        schema=("feed_path string, kind string, feed_title string, "
-                "title string, link string, published string, "
-                "entry_id string"),
+    return fanout(
+        paths_df(spark, paths, partitions), entries,
+        "feed_path string, kind string, feed_title string, title string, link string, "
+        "published string, entry_id string",
     )

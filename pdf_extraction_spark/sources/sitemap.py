@@ -17,6 +17,7 @@ from __future__ import annotations
 import gzip
 import re
 
+from ..pipeline import fanout
 from . import paths_df
 
 _LOC_BLOCK = re.compile(
@@ -95,25 +96,17 @@ def parse_sitemap(payload: bytes | str) -> dict:
 
 def read_sitemaps(spark, paths: list[str], partitions: int | None = None):
     """DataFrame of ``(sitemap_path, kind, loc, lastmod, changefreq,
-    priority)`` — one row per entry, parsed on executors."""
-    import pandas as pd  # noqa: F401
+    priority)`` — one row per entry, parsed on executors by a per-path
+    :func:`..pipeline.fanout`."""
 
-    def _parse(batches):
-        import pandas as pd
+    def entries(path):
+        with open(path, "rb") as f:
+            parsed = parse_sitemap(f.read())
+        for e in parsed["entries"]:
+            yield path, parsed["kind"], e["loc"], e["lastmod"], e["changefreq"], e["priority"]
 
-        cols = ["sitemap_path", "kind", "loc", "lastmod", "changefreq",
-                "priority"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    parsed = parse_sitemap(f.read())
-                for e in parsed["entries"]:
-                    out.append({"sitemap_path": p, "kind": parsed["kind"], **e})
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df(spark, paths, partitions).mapInPandas(
-        _parse,
-        schema=("sitemap_path string, kind string, loc string, "
-                "lastmod string, changefreq string, priority double"),
+    return fanout(
+        paths_df(spark, paths, partitions), entries,
+        "sitemap_path string, kind string, loc string, lastmod string, "
+        "changefreq string, priority double",
     )

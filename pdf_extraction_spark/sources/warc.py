@@ -9,11 +9,12 @@ BASELINE.json corpus shape ``(url, warc_ts, html, text, lang)``
 or may not carry).
 
 Spark-first design: the file list is parallelized as a DataFrame of paths
-and each WARC is parsed inside ``mapInPandas`` (one Arrow batch of paths in,
-one batch of records out) — the WARC parser is per-executor pure Python, no
-per-row JVM crossings, and a 1000-executor cluster splits a file listing the
-same way it splits any other scan. Record parsing is streaming (never holds
-a whole WARC in memory beyond one record payload).
+and each WARC is parsed by a per-path :func:`..pipeline.fanout` function
+(one ``mapInArrow`` stage: paths in, Arrow batches of at most
+``pipeline.ROWS_PER_BATCH`` records out) — the WARC parser is per-executor pure
+Python, no per-row JVM crossings, and a 1000-executor cluster splits a file
+listing the same way it splits any other scan. Record parsing is streaming
+(never holds a whole WARC in memory beyond one record payload).
 
 Writer (:func:`write_warc`) exists for tests/fixtures: deterministic WARC
 bytes (fixed-format timestamps, sorted headers) so golden tests can
@@ -30,6 +31,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..pipeline import fanout
 from . import paths_df
 
 CRLF = b"\r\n"
@@ -145,6 +147,26 @@ def _strip_http_envelope(payload: bytes) -> bytes:
     return body
 
 
+def parse_warc_date(raw: str) -> datetime.datetime | None:
+    """``WARC-Date`` (``2025-01-01T00:00:00Z``) as a UTC-aware instant, or
+    None when malformed. Aware, so no session or process zone can shift it
+    on the way into a Spark timestamp."""
+    try:
+        return datetime.datetime.strptime(raw, "%Y-%m-%dT%H:%M:%SZ").replace(
+            tzinfo=datetime.timezone.utc
+        )
+    except ValueError:
+        return None
+
+
+def maybe_gunzip(f):
+    """Binary file ``f`` as a raw byte stream: a streaming gunzip when it
+    starts with the gzip magic, else ``f`` itself (rewound)."""
+    gz = f.read(2) == b"\x1f\x8b"
+    f.seek(0)
+    return gzip.GzipFile(fileobj=f) if gz else f
+
+
 def parse_warc_stream(stream) -> "iter[dict]":
     """Yield corpus rows from a raw (decompressed) WARC byte stream, one
     record at a time — holds at most one record payload in memory. A corrupt
@@ -164,14 +186,9 @@ def parse_warc_stream(stream) -> "iter[dict]":
         url = headers.get("warc-target-uri")
         if not url:
             continue
-        ts_raw = headers.get("warc-date", "")
-        try:
-            ts = datetime.datetime.strptime(ts_raw, "%Y-%m-%dT%H:%M:%SZ")
-        except ValueError:
-            ts = None
         yield {
             "url": url,
-            "warc_ts": ts,
+            "warc_ts": parse_warc_date(headers.get("warc-date", "")),
             "html": _strip_http_envelope(payload),
             "text": None,
             "lang": None,
@@ -190,39 +207,19 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
 # -- Spark connector -------------------------------------------------------------
 
 
-ROWS_PER_BATCH = 2048  # output Arrow-batch bound, independent of WARC size
-
-
 def read_warc(spark: SparkSession, paths: list[str], partitions: int | None = None) -> DataFrame:
     """DataFrame of corpus rows from WARC file paths, parsed on executors.
 
     Each file is parsed incrementally from a (gzip) file stream — a ~1 GB
     compressed Common Crawl WARC never materializes whole in executor
     memory; output rows are yielded in bounded Arrow batches."""
-    import pandas as pd  # noqa: F401 — needed by the worker closure
 
-    def _parse(batches):
-        import pandas as pd
+    def records(path):
+        with open(path, "rb") as f:
+            for row in parse_warc_stream(maybe_gunzip(f)):
+                yield tuple(row[c] for c in CORPUS_SCHEMA.names)
 
-        cols = ["url", "warc_ts", "html", "text", "lang"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    stream = f
-                    if f.read(2) == b"\x1f\x8b":
-                        f.seek(0)
-                        stream = gzip.GzipFile(fileobj=f)
-                    else:
-                        f.seek(0)
-                    for row in parse_warc_stream(stream):
-                        out.append(row)
-                        if len(out) >= ROWS_PER_BATCH:
-                            yield pd.DataFrame(out, columns=cols)
-                            out = []
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df(spark, paths, partitions).mapInPandas(_parse, schema=CORPUS_SCHEMA)
+    return fanout(paths_df(spark, paths, partitions), records, CORPUS_SCHEMA)
 
 
 # -- deterministic writer (fixtures/tests) ----------------------------------------

@@ -13,8 +13,12 @@ segment, so the engine both emits and re-ingests it:
   WET segment blob per Arrow batch, carried as ``(segment, n_docs,
   wet_gz)`` rows (the object-store layout, one object per segment);
 * :func:`read_wet` — Spark source: ``.wet``/``.wet.gz`` file paths parsed
-  incrementally on executors (streamed, one record in memory at a time),
-  reusing the WARC record machinery of :mod:`.warc`.
+  incrementally on executors by a per-path :func:`..pipeline.fanout`
+  (streamed, one record in memory at a time), reusing the WARC record
+  machinery of :mod:`.warc`.
+
+``warc_ts`` is a UTC instant both ways: parsed ``WARC-Date`` values are
+UTC-aware, and the sink formats the instant, whatever the session zone.
 
 100 TB shape: both directions are embarrassingly parallel over
 segments/batches; no shuffle anywhere.
@@ -27,9 +31,9 @@ import gzip
 import io
 import zlib
 
+from ..pipeline import fanout
 from . import paths_df
-from . import warc as warcmod
-from .warc import CRLF, iter_warc_records
+from .warc import CRLF, iter_warc_records, maybe_gunzip, parse_warc_date
 
 WET_SCHEMA = "url string, warc_ts timestamp, text string"
 
@@ -91,15 +95,9 @@ def parse_wet_stream(stream) -> "iter[dict]":
         url = headers.get("warc-target-uri")
         if not url:
             continue
-        try:
-            ts = datetime.datetime.strptime(
-                headers.get("warc-date", ""), "%Y-%m-%dT%H:%M:%SZ"
-            )
-        except ValueError:
-            ts = None
         yield {
             "url": url,
-            "warc_ts": ts,
+            "warc_ts": parse_warc_date(headers.get("warc-date", "")),
             "text": payload.decode("utf-8", errors="replace"),
         }
 
@@ -116,24 +114,26 @@ def parse_wet_bytes(data: bytes) -> list[dict]:
 def to_wet_segments(extracted):
     """Spark sink stage: extraction output → ``(segment, n_docs, wet_gz)``
     rows, one gzipped WET segment per Arrow batch. Embarrassingly parallel;
-    the segment name is content-addressed (xxhash of member urls) so
-    re-runs and speculative tasks produce identical objects."""
+    the segment name is content-addressed (md5 of member urls) so
+    re-runs and speculative tasks produce identical objects. ``warc_ts``
+    crosses as epoch seconds (pandas would hand over session-local wall
+    time) and is written as that UTC instant."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     def gen(batches):
         import hashlib
 
+        utc = datetime.timezone.utc
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame({"segment": [], "n_docs": [], "wet_gz": []})
                 continue
             rows = [
                 {"url": u,
-                 "warc_ts": ts.to_pydatetime() if ts is not None and not pd.isna(ts) else None,
+                 "warc_ts": None if pd.isna(s) else datetime.datetime.fromtimestamp(int(s), utc),
                  "text": t}
-                for u, ts, t in zip(pdf["url"], pdf["warc_ts"],
-                                    pdf["extracted_text"])
+                for u, s, t in zip(pdf["url"], pdf["warc_s"], pdf["extracted_text"])
             ]
             rows.sort(key=lambda r: r["url"])  # order-independent segments
             blob = gzip.compress(wet_bytes(rows), 6, mtime=0)
@@ -143,11 +143,11 @@ def to_wet_segments(extracted):
             )
 
     ts = (
-        F.col("warc_ts")
+        F.unix_seconds("warc_ts")
         if "warc_ts" in extracted.columns
-        else F.lit(None).cast("timestamp").alias("warc_ts")
+        else F.lit(None).cast("long")
     )
-    return extracted.select("url", ts, "extracted_text").mapInPandas(
+    return extracted.select("url", ts.alias("warc_s"), "extracted_text").mapInPandas(
         gen, schema="segment string, n_docs long, wet_gz binary"
     )
 
@@ -155,30 +155,13 @@ def to_wet_segments(extracted):
 def read_wet(spark, paths: list[str], partitions: int | None = None):
     """DataFrame of ``(url, warc_ts, text)`` from WET file paths, parsed
     incrementally on executors (mirror of :func:`.warc.read_warc`)."""
-    import pandas as pd  # noqa: F401
 
-    def _parse(batches):
-        import pandas as pd
+    def records(path):
+        with open(path, "rb") as f:
+            for row in parse_wet_stream(maybe_gunzip(f)):
+                yield row["url"], row["warc_ts"], row["text"]
 
-        cols = ["url", "warc_ts", "text"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    stream = f
-                    if f.read(2) == b"\x1f\x8b":
-                        f.seek(0)
-                        stream = gzip.GzipFile(fileobj=f)
-                    else:
-                        f.seek(0)
-                    for row in parse_wet_stream(stream):
-                        out.append(row)
-                        if len(out) >= warcmod.ROWS_PER_BATCH:
-                            yield pd.DataFrame(out, columns=cols)
-                            out = []
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df(spark, paths, partitions).mapInPandas(_parse, schema=WET_SCHEMA)
+    return fanout(paths_df(spark, paths, partitions), records, WET_SCHEMA)
 
 
 def q_wet_roundtrip(spark, sf_dir: str):
@@ -188,26 +171,17 @@ def q_wet_roundtrip(spark, sf_dir: str):
     ``documents.text`` byte-identically per url. The r3 pin was
     golden-test-only; this runs the full serialize/parse cycle inside the
     DuckDB-checked correctness gate."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-
     from ..corpus import corpus_from_documents
     from ..pipeline import extract_corpus
 
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
-    extracted = extract_corpus(corpus, repartition=False)
-    segs = to_wet_segments(extracted)
+    segs = to_wet_segments(extract_corpus(corpus, repartition=False))
 
-    def _back(batches):
-        cols = ["url", "extracted_text"]
-        for pdf in batches:
-            out = []
-            for blob in pdf["wet_gz"]:
-                for row in parse_wet_bytes(bytes(blob)):
-                    out.append({"url": row["url"], "extracted_text": row["text"]})
-            yield pd.DataFrame(out, columns=cols)
+    def back(blob):
+        for row in parse_wet_bytes(blob):
+            yield row["url"], row["text"]
 
-    return segs.mapInPandas(_back, schema="url string, extracted_text string")
+    return fanout(segs.select("wet_gz"), back, "url string, extracted_text string")
 
 
 SQL_WET_ROUNDTRIP = """

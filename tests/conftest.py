@@ -18,3 +18,21 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def shifted_zones(spark, monkeypatch):
+    """Process ``TZ`` and Spark session zone both off UTC and off each other,
+    so a timestamp built or read in the wrong zone lands hours away."""
+    import time
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        monkeypatch.undo()
+        time.tzset()

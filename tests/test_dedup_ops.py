@@ -12,7 +12,7 @@ from pdf_extraction_spark.operators.textops import (
     WINNOW_B,
     WINNOW_K,
     WINNOW_W,
-    _winnow_batches,
+    _winnow,
 )
 
 
@@ -82,13 +82,12 @@ def _winnow_reference(text: str):
     ],
 )
 def test_winnow_kernel_matches_reference(text):
-    pdf = pd.DataFrame({"doc_id": [7], "text": [text]})
-    out = pd.concat(list(_winnow_batches([pdf])), ignore_index=True)
+    out = list(_winnow(7, text))
     ref = _winnow_reference(text)
     if ref is None:
-        assert out.empty
+        assert out == []
     else:
-        assert (int(out.n_fp[0]), int(out.min_fp[0])) == ref
+        assert out == [(7, *ref)]
 
 
 def test_component_labels_per_node(spark):

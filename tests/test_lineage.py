@@ -229,24 +229,6 @@ def test_read_lineage_missing_vs_failing(spark, tmp_path):
         lineage.metrics_summary(spark, str(tmp_path / "missing"))
 
 
-@pytest.fixture
-def shifted_zones(spark, monkeypatch):
-    """Process ``TZ`` and Spark session zone both off UTC and off each other,
-    so a timestamp built or read in the wrong zone lands hours away."""
-    import time
-
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    monkeypatch.setenv("TZ", "America/New_York")
-    time.tzset()
-    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
-        monkeypatch.undo()
-        time.tzset()
-
-
 def _micros(ts) -> int:
     epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
     return (ts - epoch) // datetime.timedelta(microseconds=1)

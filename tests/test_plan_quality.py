@@ -173,7 +173,8 @@ def test_redirect_map_zero_shuffle(spark):
 
     plan = plan_of(links.q_redirect_map(spark, SF))
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "ENSURE_REQUIREMENTS" not in plan
 
 

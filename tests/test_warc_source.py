@@ -1,5 +1,6 @@
 """WARC connector tests: corpus → WARC → corpus → extraction round-trip."""
 
+import datetime
 import gzip
 
 import pytest
@@ -24,7 +25,10 @@ def test_roundtrip_pure_python(warc_files):
     got = warc.parse_warc_bytes(open(root / "crawl-00000.warc", "rb").read())
     assert [g["url"] for g in got] == [r["url"] for r in rows[:30]]
     assert all(g["html"] == r["html"] for g, r in zip(got, rows[:30]))
-    assert got[0]["warc_ts"] == rows[0]["warc_ts"].replace(microsecond=0, second=rows[0]["warc_ts"].second)
+    # WARC-Date is second-precision UTC; parsed back as the aware instant
+    assert got[0]["warc_ts"] == rows[0]["warc_ts"].replace(
+        microsecond=0, tzinfo=datetime.timezone.utc
+    )
 
 
 def test_gzip_member(warc_files):

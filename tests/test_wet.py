@@ -83,3 +83,41 @@ def test_read_wet_streams_files(spark, tmp_path):
     df = read_wet(spark, [str(p1), str(p2)])
     got = {r["url"]: r["text"] for r in df.collect()}
     assert got == {r["url"]: r["text"] for r in rows}
+
+
+# not 2025-01-01T00:00:00Z: that is the fixed date of every warcinfo record
+_INSTANT = datetime.datetime(2025, 3, 1, 12, tzinfo=datetime.timezone.utc)
+_EPOCH_S = 1740830400
+
+
+def test_warc_and_wet_sources_read_the_utc_instant(spark, tmp_path, shifted_zones):
+    """``WARC-Date: 2025-03-01T12:00:00Z`` lands as that epoch second under
+    any session zone: the parsers hand Spark UTC-aware instants, not naive
+    wall time for the session zone to reinterpret."""
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_spark.sources.warc import read_warc, write_warc
+
+    w, t = tmp_path / "a.warc", tmp_path / "a.wet"
+    write_warc([{"url": "https://a.example.com/1", "warc_ts": _INSTANT,
+                 "html": b"<p>x</p>"}], str(w))
+    t.write_bytes(wet_bytes([{"url": "https://a.example.com/1",
+                              "warc_ts": _INSTANT, "text": "x"}]))
+    for df in (read_warc(spark, [str(w)]), read_wet(spark, [str(t)])):
+        assert df.select(F.unix_seconds("warc_ts")).first()[0] == _EPOCH_S
+
+
+def test_wet_sink_writes_the_utc_instant(spark, shifted_zones):
+    """The segment sink writes the row's instant as UTC ``WARC-Date``, not
+    its session-local wall time."""
+    from pyspark.sql import functions as F
+
+    extracted = spark.range(1).select(
+        F.lit("https://a.example.com/1").alias("url"),
+        F.timestamp_seconds(F.lit(_EPOCH_S)).alias("warc_ts"),
+        F.lit("x").alias("extracted_text"),
+    )
+    (seg,) = to_wet_segments(extracted).collect()
+    assert b"WARC-Date: 2025-03-01T12:00:00Z" in gzip.decompress(seg["wet_gz"])
+    (row,) = parse_wet_bytes(seg["wet_gz"])
+    assert row["warc_ts"] == _INSTANT
