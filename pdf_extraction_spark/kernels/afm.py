@@ -72,14 +72,12 @@ class Metrics:
         self.widths = widths
         self.default = default
         self.fixed = fixed  # monospace: every glyph this wide
-        self._cache: dict[str, int] = {}
+        # width of every character seen: the table, plus NFD fallbacks
+        self._cache: dict[str, int] = dict(widths)
 
     def char_width(self, ch: str) -> int:
         if self.fixed is not None:
             return self.fixed
-        w = self.widths.get(ch)
-        if w is not None:
-            return w
         w = self._cache.get(ch)
         if w is None:
             base = unicodedata.normalize("NFD", ch)[0]
@@ -91,7 +89,14 @@ class Metrics:
         """Total glyph-space advance of a string (no Tc/Tw), 1/1000 units."""
         if self.fixed is not None:
             return self.fixed * len(s)
-        return sum(map(self.char_width, s))
+        # one dict lookup per character; a miss fills the cache once
+        cache = self._cache
+        try:
+            return sum(map(cache.__getitem__, s))
+        except KeyError:
+            for ch in s:
+                self.char_width(ch)
+            return sum(map(cache.__getitem__, s))
 
 
 def _table(ascii_widths, extras) -> dict[str, int]:

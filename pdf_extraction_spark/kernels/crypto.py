@@ -17,18 +17,25 @@ from __future__ import annotations
 def rc4(key: bytes, data: bytes) -> bytes:
     S = list(range(256))
     j = 0
-    klen = len(key)
-    for i in range(256):
-        j = (j + S[i] + key[i % klen]) & 0xFF
-        S[i], S[j] = S[j], S[i]
-    out = bytearray(len(data))
+    # the key repeated out to the 256 schedule steps: no modulo per step
+    for i, k in zip(range(256), key * (256 // len(key) + 1)):
+        si = S[i]
+        j = (j + si + k) & 0xFF
+        S[i] = S[j]
+        S[j] = si
+    ks = bytearray(len(data))
     i = j = 0
-    for n, c in enumerate(data):
+    for n in range(len(data)):
         i = (i + 1) & 0xFF
-        j = (j + S[i]) & 0xFF
-        S[i], S[j] = S[j], S[i]
-        out[n] = c ^ S[(S[i] + S[j]) & 0xFF]
-    return bytes(out)
+        si = S[i]
+        j = (j + si) & 0xFF
+        sj = S[i] = S[j]
+        S[j] = si
+        ks[n] = S[(si + sj) & 0xFF]
+    # XOR the whole keystream in as one big-int step
+    return (int.from_bytes(data, "big") ^ int.from_bytes(ks, "big")).to_bytes(
+        len(data), "big"
+    )
 
 
 # -- AES-128 --------------------------------------------------------------------------

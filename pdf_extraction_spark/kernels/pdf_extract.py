@@ -10,9 +10,19 @@ reconstruction — line grouping, column clustering via 1-D gap sessionization
 138-149), and reading-order reconstruction (filling the reference's stub at
 advanced_layout_extractor.py:546-552).
 
+Two lexers share one token grammar. Content streams, where the tokens
+are, go through ``_content_ops``: one compiled alternation (``_CTOK``)
+matches a whitespace/comment run plus one whole token per call, so the
+common tokens (numbers, operators, names, flat strings, number/string
+arrays) cost one regex match each. ``_Lexer`` is the recursive-descent
+lexer for the object layer (xref, dictionaries, object streams) and the
+content tokenizer's one slow path for every other token shape.
+
 Zero third-party imports. Total: malformed input degrades to partial or
 empty output with the error recorded (advanced_layout_extractor.py:690-691
-posture, logged not silenced).
+posture, logged not silenced). Work is bounded: each stream's decoded
+bytes are capped, and so are each page's content-stream tokens; a
+document past either bound fails closed with a ``budget`` error.
 
 Element typing rules carried from the reference:
 
@@ -32,8 +42,6 @@ import zlib
 
 from . import afm
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 _LIT_SPECIAL = re.compile(rb"[\\()]")
 _LIT_ESCAPES = {0x6E: 0x0A, 0x72: 0x0D, 0x74: 0x09, 0x62: 0x08, 0x66: 0x0C}
 _WS_RUN = re.compile(rb"[\x00\t\n\x0c\r ]+")
@@ -42,9 +50,105 @@ for _b in b"\x00\t\n\x0c\r %":
     _WS_OR_PCT[_b] = 1
 _COMMENT_RUN = re.compile(rb"%[^\r\n]*")
 _NUM_RUN = re.compile(rb"[+\-.0-9eE]+")
-_DIGIT_RUN = re.compile(rb"[0-9]+")
 _NAME_RUN = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 _INLINE_EI = re.compile(rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ]|$)")
+_HEX_JUNK = re.compile(rb"[^0-9A-Fa-f]")
+# ASCII85 runs: z's, or whole 5-char groups (a partial group only at the end)
+_A85_RUN = re.compile(rb"z{1,16384}|[^z]{1,81920}")
+
+# -- token grammar shared by the content tokenizer and the object lexer --------
+# Possessive quantifiers keep each piece from backtracking into a shape
+# _Lexer would not produce (a comment re-read as whitespace and digits).
+_WSC = rb"\x00\t\n\x0c\r "  # PDF whitespace, inside a [...] class
+_DLC = rb"()<>\[\]{}/%"  # PDF delimiters, inside a [...] class
+_SKIP = rb"(?:[" + _WSC + rb"]++|%[^\r\n]*+)*+"  # what _Lexer._skip_ws skips
+_RUN_END = rb"(?![+\-.0-9eE])"  # a _NUM_RUN run ends here
+# the run int() accepts; 640 digits is the lowest int_max_str_digits limit,
+# so a longer run takes the slow path, which falls back to float()
+_INT = rb"[+\-]?[0-9]{1,640}+" + _RUN_END
+# the runs float() accepts that int() does not
+_REAL = (
+    rb"[+\-]?(?:[0-9]++\.[0-9]*+|\.[0-9]++|[0-9]++(?=[eE]))"
+    rb"(?:[eE][+\-]?[0-9]++)?" + _RUN_END
+)
+_LIT_BODY = rb"(?:[^()\\]++|\\[\s\S])*+"  # no nested parens; escapes allowed
+_HEX_BODY = rb"[^>]*+"
+# "G R" after an integer: _number_or_ref's lookahead, as one match
+_REF_TAIL = (
+    _SKIP + rb"[0-9]++" + _SKIP + rb"R(?=[" + _WSC + _DLC + rb"]|\Z)"
+)
+_REF_AFTER = re.compile(_REF_TAIL)
+# a flat array of numbers and strings: TJ operands, /Widths, /MediaBox,
+# matrices, /ID. Whitespace only between items, so a comment, name, ref or
+# nested array leaves it to _Lexer's item-at-a-time loop.
+_ARR_BODY = (
+    rb"(?:[" + _WSC + rb"]++|" + _INT + rb"|" + _REAL
+    + rb"|\(" + _LIT_BODY + rb"\)|<(?!<)" + _HEX_BODY + rb">)*+"
+)
+_ARRAY = re.compile(rb"\[(" + _ARR_BODY + rb")\]")
+# one element of an array body _ARR_BODY accepted
+_ARR_ITEM = re.compile(
+    rb"(?P<int>[+\-]?[0-9]++(?![.eE]))|(?P<real>[+\-.0-9eE]++)"
+    rb"|\((?P<lit>" + _LIT_BODY + rb")\)|<(?P<hex>" + _HEX_BODY + rb")>"
+)
+
+# Content-stream tokenizer: one match at p consumes a whitespace/comment
+# run and one token, named by the group that matched. Shapes the fast
+# groups do not fully accept (nested parens, names with #, << dicts, arrays
+# holding refs/names/comments/arrays, an integer followed by "G R",
+# unterminated tokens, malformed numbers) reach `slow`, which _Lexer.parse
+# lexes at that position; `skip` is a stray delimiter byte.
+_CTOK = re.compile(
+    _SKIP + rb"(?:"
+    rb"(?P<int>" + _INT + rb"(?!" + _REF_TAIL + rb"))"
+    rb"|(?P<real>" + _REAL + rb")"
+    rb"|(?P<op>[^" + _WSC + _DLC + rb"+\-.0-9][^" + _WSC + _DLC + rb"]*+)"
+    rb"|/(?P<name>[^" + _WSC + _DLC + rb"#]*+)(?!#)"
+    rb"|\((?P<lit>" + _LIT_BODY + rb")\)"
+    rb"|<(?!<)(?P<hex>" + _HEX_BODY + rb")>"
+    rb"|\[(?P<arr>" + _ARR_BODY + rb")\]"
+    rb"|(?P<slow>[/<(\[+\-.0-9])"
+    rb"|(?P<skip>[\s\S])"
+    rb")"
+)
+
+# literal-string escapes (§7.3.4.2) → bytes: octal of 1-3 digits (& 0xFF),
+# \n \r \t \b \f, line continuation (\r, \n or \r\n), any other byte itself
+_LIT_ESC = re.compile(rb"\\([0-7]{1,3}|\r\n|[\s\S])")
+_LIT_ESC_TABLE = {bytes([c]): bytes([c]) for c in range(256)}
+_LIT_ESC_TABLE.update({b"\r": b"", b"\n": b"", b"\r\n": b""})
+_LIT_ESC_TABLE.update({bytes([k]): bytes([v]) for k, v in _LIT_ESCAPES.items()})
+for _k in range(512):
+    for _w in range(len(f"{_k:o}"), 4):
+        _LIT_ESC_TABLE[f"{_k:0{_w}o}".encode()] = bytes([_k & 0xFF])
+
+
+def _unescape(body: bytes) -> bytes:
+    """Bytes of a literal string body with no unescaped parens."""
+    if b"\\" not in body:
+        return body
+    # split() interleaves plain runs with the escapes' captured bodies
+    parts = _LIT_ESC.split(body)
+    parts[1::2] = map(_LIT_ESC_TABLE.__getitem__, parts[1::2])
+    return b"".join(parts)
+
+
+def _unhex(body: bytes) -> bytes:
+    """Bytes of a hex string body: non-hex bytes dropped, odd tail padded."""
+    hx = _HEX_JUNK.sub(b"", body)
+    if len(hx) % 2:
+        hx += b"0"
+    return bytes.fromhex(hx.decode("ascii"))
+
+
+def _flat_array(d: bytes, start: int, end: int) -> list:
+    """Elements of an array body ``d[start:end]`` that ``_ARR_BODY``
+    accepted. ``()`` and ``<>`` match no group text, and both are
+    ``b""``."""
+    return [
+        int(i) if i else float(r) if r else _unescape(s) if s else _unhex(h)
+        for i, r, s, h in _ARR_ITEM.findall(d, start, end)
+    ]
 
 # TJ kern offsets (glyph-space thousandths) at or past this magnitude read
 # back as one space: a typical space advance is ~250/1000 em, so 180 sits
@@ -55,6 +159,45 @@ KERN_SPACE_TJ = 180.0
 # the cap (with the object-number cycle guard) makes hostile self-
 # referential form graphs terminate instead of recursing.
 _FORM_MAX_DEPTH = 8
+
+# Work bounds, per stream and per page, so a document's length never
+# counts against them: bytes one stream's filter chain may produce (a
+# 24 KiB Flate stream can inflate to gigabytes), and content-stream tokens
+# one page may run, its forms' included (a form re-runs its stream at each
+# Do). Tokens count operators and operands both, as a stream of bare
+# operands has no operators. Over the benchmark corpora the largest stream
+# decodes to 11.7 KiB and the largest page runs 1,076 tokens; the caps
+# leave room for shapes those corpora lack, such as embedded CJK font
+# programs (5-20 MiB) and dense vector pages. A document past either cap
+# fails closed with a "budget" error, the discipline of
+# dispatch._GUNZIP_CAP.
+_STREAM_BYTES_CAP = 32 << 20
+_PAGE_TOKENS_CAP = 1 << 20
+
+
+class _BudgetExceeded(Exception):
+    """A document overran one of its work bounds (see :class:`_Budget`)."""
+
+
+class _Budget:
+    """A document's work bounds: the content tokens its current page may
+    still run, and ``error``, the first overrun. That is kept so one raised
+    under a swallowing ``except`` (a font program, a form) still fails the
+    document closed."""
+
+    __slots__ = ("tokens_left", "error")
+
+    def __init__(self):
+        self.tokens_left = _PAGE_TOKENS_CAP
+        self.error = None
+
+    def start_page(self) -> None:
+        self.tokens_left = _PAGE_TOKENS_CAP
+
+    def overrun(self, what: str) -> _BudgetExceeded:
+        if self.error is None:
+            self.error = f"budget: {what}"
+        return _BudgetExceeded(self.error)
 
 
 def _pdf_text(b: bytes) -> str:
@@ -125,7 +268,10 @@ class _Name(str):
 
 
 class _Lexer:
-    """Recursive-descent lexer for PDF COS objects."""
+    """Recursive-descent lexer for PDF COS objects: the object layer (xref
+    trailers, object and object-stream bodies, dictionaries) and the one
+    slow path of the content tokenizer, which hands it every token shape
+    ``_CTOK`` does not take whole."""
 
     def __init__(self, data: bytes, pos: int = 0):
         self.d = data
@@ -190,6 +336,10 @@ class _Lexer:
                 out[str(key)] = val
 
     def _array(self):
+        m = _ARRAY.match(self.d, self.p)
+        if m is not None:  # flat: numbers and strings only
+            self.p = m.end()
+            return _flat_array(self.d, m.start(1), m.end(1))
         self.p += 1
         out = []
         while True:
@@ -219,20 +369,10 @@ class _Lexer:
             num = int(tok)
         except ValueError:
             return float(tok)
-        # lookahead for "G R" indirect reference
-        save = self.p
-        self._skip_ws()
-        m2 = _DIGIT_RUN.match(d, self.p)
-        if m2 is not None:
-            self.p = m2.end()
-            self._skip_ws()
-            p = self.p
-            if d[p : p + 1] == b"R" and (
-                p + 1 >= len(d) or d[p + 1] in _WS or d[p + 1 : p + 2] in _DELIM
-            ):
-                self.p = p + 1
-                return _Ref(num)
-        self.p = save
+        m = _REF_AFTER.match(d, self.p)  # "G R": an indirect reference
+        if m is not None:
+            self.p = m.end()
+            return _Ref(num)
         return num
 
     def _lit_string(self):
@@ -302,11 +442,8 @@ class _Lexer:
         end = d.find(b">", p)
         if end < 0:
             end = len(d)
-        hx = re.sub(rb"[^0-9A-Fa-f]", b"", d[p:end])
-        if len(hx) % 2:
-            hx += b"0"
         self.p = end + 1
-        return bytes.fromhex(hx.decode("ascii"))
+        return _unhex(d[p:end])
 
 
 def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
@@ -344,8 +481,10 @@ def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes:
-    """PDF LZWDecode: 9→12-bit variable codes, EarlyChange per spec."""
+def _lzw_decode(data: bytes, early: int, max_length: int) -> bytes:
+    """PDF LZWDecode: 9→12-bit variable codes, EarlyChange per spec.
+    Decoding stops once ``max_length`` bytes are out, as
+    ``zlib.decompressobj().decompress`` does."""
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -373,6 +512,8 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
                 entry = prev + prev[:1]
                 table.append(entry)
             out += entry
+            if len(out) >= max_length:
+                return bytes(out[:max_length])
             prev = entry
             # width bumps when the NEXT code to assign (len(table)) plus the
             # EarlyChange offset no longer fits: 511/1023/2047 for the PDF
@@ -384,7 +525,10 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
     return bytes(out)
 
 
-def _runlength_decode(data: bytes) -> bytes:
+def _runlength_decode(data: bytes, max_length: int) -> bytes:
+    """PDF RunLengthDecode, stopping once ``max_length`` bytes are out: a
+    two-byte run gives 128 bytes, so a bounded input alone does not bound
+    the output."""
     out = bytearray()
     p = 0
     n = len(data)
@@ -400,18 +544,21 @@ def _runlength_decode(data: bytes) -> bytes:
             if p < n:
                 out += bytes([data[p]]) * (257 - l)
                 p += 1
+        if len(out) >= max_length:
+            return bytes(out[:max_length])
     return bytes(out)
 
 
 def _asciihex_decode(data: bytes) -> bytes:
     end = data.find(b">")
-    hx = re.sub(rb"[^0-9A-Fa-f]", b"", data[: end if end >= 0 else len(data)])
-    if len(hx) % 2:
-        hx += b"0"
-    return bytes.fromhex(hx.decode("ascii"))
+    return _unhex(data[: end if end >= 0 else len(data)])
 
 
-def _ascii85_decode(data: bytes) -> bytes:
+def _ascii85_decode(data: bytes, max_length: int) -> bytes:
+    """PDF ASCII85Decode, stopping once ``max_length`` bytes are out. A run
+    of ``z`` (four zero bytes each) is filled in one step, and the other
+    groups are decoded a bounded run at a time, so neither costs a Python
+    step or a list entry per output group past the bound."""
     import base64
 
     body = re.sub(rb"\s", b"", data)
@@ -419,10 +566,25 @@ def _ascii85_decode(data: bytes) -> bytes:
         body = body[2:]
     if body.endswith(b"~>"):
         body = body[:-2]
-    return base64.a85decode(b"<~" + body + b"~>", adobe=True)
+    out = bytearray()
+    for m in _A85_RUN.finditer(body):
+        run = m[0]
+        if run[0] == 0x7A:  # z
+            out += bytes(4 * len(run))
+        elif len(run) % 5 and m.end() < len(body):
+            raise ValueError("z inside Ascii85 5-tuple")
+        else:
+            out += base64.a85decode(run)
+        if len(out) >= max_length:
+            return bytes(out[:max_length])
+    return bytes(out)
 
 
-def _decode_stream(sdict: dict, raw: bytes, resolve=None) -> bytes:
+def _decode_stream(sdict: dict, raw: bytes, resolve, budget: _Budget) -> bytes:
+    """Run a stream's filter chain. No decoding filter produces more than
+    one byte past ``_STREAM_BYTES_CAP``, and an output past the cap raises
+    :class:`_BudgetExceeded`, recorded in ``budget``; image codecs pass
+    through unbounded, as they decode nothing."""
     # /Filter and /DecodeParms values may be indirect references
     # (§7.3.8.2, same as /Length) — resolve them when the caller can
     def rs(v):
@@ -438,6 +600,7 @@ def _decode_stream(sdict: dict, raw: bytes, resolve=None) -> bytes:
     parms = rs(sdict.get("DecodeParms", sdict.get("DP")))
     parms_list = [parms] if not isinstance(parms, list) else parms
     data = raw
+    cap = _STREAM_BYTES_CAP + 1  # one byte past the cap: an overrun
     for i, f in enumerate(filters):
         f = rs(f)
         if f is None:
@@ -448,20 +611,25 @@ def _decode_stream(sdict: dict, raw: bytes, resolve=None) -> bytes:
             dp = {}
         try:
             if name == "FlateDecode":
-                try:
-                    data = zlib.decompress(data)
-                except zlib.error:
-                    data = zlib.decompressobj().decompress(data)  # tolerate truncation
+                # one inflate path for whole and truncated streams alike
+                data = zlib.decompressobj().decompress(data, cap)
             elif name == "LZWDecode":
-                data = _lzw_decode(data, int(dp.get("EarlyChange", 1) or 1))
+                data = _lzw_decode(data, int(dp.get("EarlyChange", 1) or 1), cap)
             elif name == "RunLengthDecode":
-                data = _runlength_decode(data)
-            elif name == "ASCIIHexDecode":
+                data = _runlength_decode(data, cap)
+            elif name == "ASCIIHexDecode":  # half its input at most
                 data = _asciihex_decode(data)
             elif name == "ASCII85Decode":
-                data = _ascii85_decode(data)
-            # other filters (DCT/JBIG2/CCITT image codecs): pass through —
-            # image payloads are opaque to the text path (degrade, don't crash)
+                data = _ascii85_decode(data, cap)
+            else:
+                # other filters (DCT/JBIG2/CCITT image codecs): pass through
+                # — image payloads are opaque to the text path (degrade,
+                # don't crash)
+                continue
+            if len(data) > _STREAM_BYTES_CAP:
+                raise budget.overrun(
+                    f"decoded stream over {_STREAM_BYTES_CAP >> 20} MiB"
+                )
             pred = int(dp.get("Predictor", 1) or 1)
             if pred >= 10 and name in ("FlateDecode", "LZWDecode"):
                 data = _png_unpredict(
@@ -470,6 +638,8 @@ def _decode_stream(sdict: dict, raw: bytes, resolve=None) -> bytes:
                     int(dp.get("BitsPerComponent", 8) or 8),
                     int(dp.get("Columns", 1) or 1),
                 )
+        except _BudgetExceeded:
+            raise
         except Exception:
             # corrupt filter payload: keep the bytes we have (total behavior)
             pass
@@ -484,16 +654,22 @@ class _Doc:
         self.offsets: dict[int, int] = {}
         self.in_objstm: dict[int, tuple[int, int]] = {}  # num -> (stream obj, idx)
         self._objstm_cache: dict[int, dict[int, object]] = {}
+        self._form_content: dict[int, bytes] = {}  # form obj num -> decoded
         self.cache: dict[int, object] = {}
         self.trailer: dict = {}
         self.errors: list[str] = []
         self.decryptor = None  # set by try_decrypt()
+        self.budget = _Budget()
         try:
             self._load_xref()
         except Exception as exc:
             self.errors.append(f"xref: {type(exc).__name__}: {exc}")
         if not self.offsets:
             self._scan_objects()
+
+    def decode(self, sdict: dict, raw: bytes) -> bytes:
+        """A stream's decoded bytes, an overrun recorded in the budget."""
+        return _decode_stream(sdict, raw, self.resolve, self.budget)
 
     def try_decrypt(self) -> bool:
         """Open the document's standard encryption with the EMPTY user
@@ -600,7 +776,7 @@ class _Doc:
         if not isinstance(sdict, dict):
             raise ValueError("xref stream: no dict")
         raw = self._read_stream_bytes(lex, sdict)
-        data = _decode_stream(sdict, raw, self.resolve)
+        data = self.decode(sdict, raw)
         w = [int(x) for x in sdict.get("W", [1, 1, 1])]
         size = int(sdict.get("Size", 0))
         index = sdict.get("Index", [0, size])
@@ -710,7 +886,7 @@ class _Doc:
                 if isinstance(stream_obj, tuple) and stream_obj[0] == "stream":
                     sdict, raw = stream_obj[1], stream_obj[2]
                     try:
-                        data = _decode_stream(sdict, raw, self.resolve)
+                        data = self.decode(sdict, raw)
                         n = int(self.resolve(sdict.get("N")) or 0)
                         first = int(self.resolve(sdict.get("First")) or 0)
                         lex = _Lexer(data, 0)
@@ -771,7 +947,7 @@ class _Doc:
         for it in items:
             obj = self.resolve(it)
             if isinstance(obj, tuple) and obj[0] == "stream":
-                chunks.append(_decode_stream(obj[1], obj[2], self.resolve))
+                chunks.append(self.decode(obj[1], obj[2]))
         return b"\n".join(chunks)
 
     def page_paint(self, page: dict) -> tuple:
@@ -803,10 +979,14 @@ class _Doc:
                 if sub == "Image":
                     images.add(str(name))
                 elif sub == "Form" and depth < _FORM_MAX_DEPTH and key not in seen:
-                    try:
-                        content = _decode_stream(sdict, obj[2], self.resolve)
-                    except Exception:
-                        continue
+                    content = self._form_content.get(key)
+                    if content is None:
+                        try:
+                            content = self.decode(sdict, obj[2])
+                        except Exception:
+                            continue
+                        if isinstance(ref, _Ref):  # pages share their forms
+                            self._form_content[key] = content
                     mat = self.resolve(sdict.get("Matrix"))
                     try:
                         matrix = (
@@ -859,10 +1039,7 @@ class _Doc:
                     if isinstance(obj, tuple) and obj[0] == "stream":
                         obj = obj[1]
                     cache[key] = (
-                        build_font_decoder(
-                            obj, self.resolve,
-                            lambda sd, rw: _decode_stream(sd, rw, self.resolve),
-                        )
+                        build_font_decoder(obj, self.resolve, self.decode)
                         if isinstance(obj, dict)
                         else None
                     )
@@ -975,7 +1152,7 @@ class _Doc:
                     fs = self.resolve(ef.get("UF")) or self.resolve(ef.get("F"))
                     if isinstance(fs, tuple) and fs[0] == "stream":
                         try:
-                            data = _decode_stream(fs[1], fs[2], self.resolve)
+                            data = self.decode(fs[1], fs[2])
                         except Exception:
                             data = None
                 if data is None:
@@ -1207,11 +1384,74 @@ def _normalize_rotation(rotate, pw, ph, runs, hl, vl, rects, images):
     return pw, ph, runs, hl, vl, rects, images
 
 
+def _content_ops(content: bytes, budget: _Budget):
+    """Yield ``(operator, operands)`` for each operator of a content stream,
+    operands in stream order as :meth:`_Lexer.parse` returns them.
+
+    An inline image (``BI <dict> ID <raw binary> EI``) yields one ``BI``
+    after its binary is skipped to the whitespace-delimited ``EI``; with no
+    ``ID`` the stream ends there. Every token is charged to the page's
+    tokens in ``budget``; past them, :class:`_BudgetExceeded`."""
+    match = _CTOK.match
+    n = len(content)
+    p = 0
+    left = budget.tokens_left
+    operands: list = []
+    while True:
+        m = match(content, p)
+        if m is None:  # only trailing whitespace and comments were left
+            budget.tokens_left = left
+            return
+        left -= 1
+        if left < 0:
+            raise budget.overrun(
+                f"content tokens over {_PAGE_TOKENS_CAP >> 20} Mi on a page"
+            )
+        p = m.end()
+        kind = m.lastgroup
+        if kind == "int":
+            operands.append(int(m[kind]))
+        elif kind == "op":
+            op = m[kind]
+            if op == b"BI":
+                idp = content.find(b"ID", p)
+                if idp == -1:
+                    budget.tokens_left = left
+                    return
+                ei = _INLINE_EI.search(content, idp + 2)
+                p = n if ei is None else ei.end()
+            # a form this operator paints spends the page's tokens meanwhile
+            budget.tokens_left = left
+            yield op, operands
+            left = budget.tokens_left
+            operands = []
+        elif kind == "real":
+            operands.append(float(m[kind]))
+        elif kind == "lit":
+            operands.append(_unescape(m[kind]))
+        elif kind == "name":
+            operands.append(_Name(m[kind].decode("latin-1")))
+        elif kind == "arr":
+            operands.append(_flat_array(content, m.start(kind), m.end(kind)))
+        elif kind == "hex":
+            operands.append(_unhex(m[kind]))
+        elif kind == "slow":
+            lex = _Lexer(content, m.start(kind))
+            try:
+                operands.append(lex.parse())
+                p = lex.p
+            except Exception:
+                p = lex.p + 1
+        # "skip": a stray delimiter byte, the empty operator
+
+
 def _interpret_content(
     content: bytes,
     image_names: frozenset = frozenset(),
     fonts: dict | None = None,
     forms: dict | None = None,
+    *,
+    budget: _Budget,
     _ctm0: tuple | None = None,
     _out: tuple | None = None,
     _depth: int = 0,
@@ -1236,13 +1476,14 @@ def _interpret_content(
     the form's content stream inline — its /Matrix composed into the CTM,
     its own resources scoping the recursion (``None`` markers inherit the
     invoking context's), all geometry landing in the shared output lists.
+
+    ``budget`` is the document's; a form spends the tokens of the page that
+    paints it. Past them, :class:`_BudgetExceeded` propagates.
     """
     if _out is not None:
         runs, hlines, vlines, rects, images = _out
     else:
         runs, hlines, vlines, rects, images = [], [], [], [], []
-    lex = _Lexer(content, 0)
-    stack: list = []
     _ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
     tlm = _ID  # text line matrix (start of current line)
     tm = _ID   # text matrix (current show position)
@@ -1299,26 +1540,7 @@ def _interpret_content(
     ctm = _ctm0 if _ctm0 is not None else (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
     forms = forms or {}
     gs_stack: list[tuple] = []
-    n = len(content)
-    while lex.p < n:
-        lex._skip_ws()
-        if lex.p >= n:
-            break
-        c = content[lex.p : lex.p + 1]
-        if c in b"/<([+-.0123456789" or c.isdigit():
-            try:
-                stack.append(lex.parse())
-            except Exception:
-                lex.p += 1
-            continue
-        # operator token
-        start = lex.p
-        while lex.p < n and content[lex.p] not in _WS and content[lex.p : lex.p + 1] not in _DELIM:
-            lex.p += 1
-        op = content[start : lex.p]
-        if not op:
-            lex.p += 1
-            continue
+    for op, stack in _content_ops(content, budget):
         try:
             if op == b"Tf" and len(stack) >= 2:
                 size = float(stack[-1])
@@ -1442,25 +1664,20 @@ def _interpret_content(
                         _ctm0=sub_ctm,
                         _out=(runs, hlines, vlines, rects, images),
                         _depth=_depth + 1,
+                        budget=budget,
                     )
             elif op == b"BI":
-                # inline image: "BI <dict> ID <raw binary> EI" — the binary
-                # is NOT operator soup; skip to the whitespace-delimited EI.
+                # inline image, its binary already skipped by _content_ops.
                 # Like an XObject Do, the image paints the CTM-mapped unit
                 # square, so it lands in the figure-placement list (§8.9.7).
-                idp = content.find(b"ID", lex.p)
-                if idp == -1:
-                    lex.p = n
-                else:
-                    m = _INLINE_EI.search(content, idp + 2)
-                    lex.p = n if m is None else m.end()
-                    a, b_, c_, d, e, f = ctm
-                    xs = (e, a + e, c_ + e, a + c_ + e)
-                    ys = (f, b_ + f, d + f, b_ + d + f)
-                    images.append((min(xs), min(ys), max(xs), max(ys), None))
+                a, b_, c_, d, e, f = ctm
+                xs = (e, a + e, c_ + e, a + c_ + e)
+                ys = (f, b_ + f, d + f, b_ + d + f)
+                images.append((min(xs), min(ys), max(xs), max(ys), None))
+        except _BudgetExceeded:
+            raise
         except Exception:
             pass
-        stack = []
     return runs, hlines, vlines, rects, images
 
 
@@ -1695,8 +1912,9 @@ def extract_table_cells(payload: bytes) -> list[dict]:
             if not content:
                 continue
             img_names, fts, frms = doc.page_paint(page)
+            doc.budget.start_page()
             runs, hl, vl, rects, _ = _interpret_content(
-                content, img_names, fonts=fts, forms=frms
+                content, img_names, fonts=fts, forms=frms, budget=doc.budget
             )
             rot = doc.page_rotate(page)
             if rot:
@@ -1752,7 +1970,7 @@ def extract_table_cells(payload: bytes) -> list[dict]:
                         ],
                     }
                 )
-        return out
+        return [] if doc.budget.error else out
     except Exception:
         return []
 
@@ -1794,6 +2012,13 @@ def _near_caption_region(line: dict, regions: list[tuple], ph: float) -> bool:
     return False
 
 
+def _failed(error: str) -> dict:
+    """The record of a PDF that yields no text at all: encrypted, over its
+    work budget, or unparseable."""
+    return {"text": "", "spans": [], "n_elements": 0, "method": "pdf",
+            "error": error, "links": [], "headings": [], "meta": {}}
+
+
 def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
     """Extract text + typed spans from one PDF payload. Never raises.
 
@@ -1825,16 +2050,7 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
             # a real password (or unsupported handler) is required:
             # strings/streams stay ciphertext — emitting "extracted text"
             # from them would be garbage; degrade explicitly
-            return {
-                "text": "",
-                "spans": [],
-                "n_elements": 0,
-                "method": "pdf",
-                "error": "encrypted",
-                "links": [],
-                "headings": [],
-                "meta": {},
-            }
+            return _failed("encrypted")
         pages = doc.pages()
         blocks: list[dict] = []  # {kind, page, texts: [line...], bbox}
         for pno, page in enumerate(pages):
@@ -1843,8 +2059,9 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
             if not content:
                 continue
             img_names, fts, frms = doc.page_paint(page)
+            doc.budget.start_page()
             runs, hl, vl, rects, images = _interpret_content(
-                content, img_names, fonts=fts, forms=frms
+                content, img_names, fonts=fts, forms=frms, budget=doc.budget
             )
             rot = doc.page_rotate(page)
             if rot:
@@ -1975,20 +2192,24 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
             tuple(s) + (lvl, parent) for s, (lvl, parent) in zip(spans, levels)
         ]
         err = "; ".join(doc.errors[:3]) if doc.errors else None
+        links = _annot_links(doc, pages)
+        meta = doc.info()
+        if doc.budget.error:  # overran where an except swallowed it
+            return _failed(doc.budget.error)
         return {
             "text": "\n\n".join(texts),
             "spans": spans,
             "n_elements": len(spans),
             "method": "pdf",
             "error": err,
-            "links": _annot_links(doc, pages),
+            "links": links,
             "headings": [],
-            "meta": doc.info(),
+            "meta": meta,
         }
+    except _BudgetExceeded as exc:
+        return _failed(str(exc))
     except Exception as exc:
-        return {"text": "", "spans": [], "n_elements": 0, "method": "pdf",
-                "error": f"{type(exc).__name__}: {exc}", "links": [],
-                "headings": [], "meta": {}}
+        return _failed(f"{type(exc).__name__}: {exc}")
 
 
 def _annot_links(doc: _Doc, pages: list[dict]) -> list[dict]:
@@ -2080,7 +2301,7 @@ def _image_intrinsics(doc: "_Doc", sdict: dict, raw: bytes) -> dict:
         from .containers import decode_container
 
         try:
-            info = decode_container(_decode_stream(sdict, raw, doc.resolve))
+            info = decode_container(doc.decode(sdict, raw))
             fmt = info["fmt"]  # 'jpeg', or 'corrupt' on a lying header
             if info["width"] >= 0:
                 w, h = info["width"], info["height"]
@@ -2140,7 +2361,7 @@ def extract_pdf_images(payload: bytes) -> list[dict]:
         # re-interpret every page just to re-derive the same image tuples
         collected: list[dict] = []
         full = extract_pdf(payload, _collect_images=collected)
-        if full["error"] == "encrypted":
+        if (full["error"] or "").startswith(("encrypted", "budget")):
             return []
         # caption spans per page: (cy0, cy1, cx0, cx1, text)
         caps: dict[int, list] = {}

@@ -5,6 +5,8 @@ needing a real password must still degrade to error='encrypted'."""
 import functools
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pdf_extraction_spark.kernels import pdf_crypt
 from pdf_extraction_spark.kernels.crypto import (
@@ -29,6 +31,30 @@ def test_aes_fips197_vector():
 
 def test_rc4_vector():
     assert rc4(b"Key", b"Plaintext").hex().upper() == "BBF316E8D940AF0AD3"
+    assert rc4(b"Key", b"") == b""
+
+
+def _rc4_textbook(key: bytes, data: bytes) -> bytes:
+    S = list(range(256))
+    j = 0
+    for i in range(256):
+        j = (j + S[i] + key[i % len(key)]) & 0xFF
+        S[i], S[j] = S[j], S[i]
+    out = bytearray()
+    i = j = 0
+    for c in data:
+        i = (i + 1) & 0xFF
+        j = (j + S[i]) & 0xFF
+        S[i], S[j] = S[j], S[i]
+        out.append(c ^ S[(S[i] + S[j]) & 0xFF])
+    return bytes(out)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.binary(min_size=1, max_size=300), st.binary(max_size=600))
+def test_rc4_matches_textbook(key, data):
+    """Leading zero bytes survive the one-step big-int XOR."""
+    assert rc4(key, data) == _rc4_textbook(key, data)
 
 
 def test_cbc_roundtrip_and_padding_errors():

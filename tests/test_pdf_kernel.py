@@ -1,9 +1,19 @@
 """Unit + property tests for the pure PDF writer/parser pair."""
 
-from hypothesis import given, settings
+import re
+
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from pdf_extraction_spark.kernels.pdf_extract import extract_pdf
+from pdf_extraction_spark.kernels.pdf_extract import (
+    _INLINE_EI,
+    _NUM_RUN,
+    _Budget,
+    _Lexer,
+    _Ref,
+    extract_pdf,
+)
 from pdf_extraction_spark.kernels.pdf_write import build_pdf, build_truncated_pdf, wrap_words
 
 TEXT = (
@@ -299,9 +309,12 @@ def test_stream_filters_roundtrip():
 
     import base64
     hexed = plain.hex().encode() + b">"
-    assert _decode_stream({"Filter": "ASCIIHexDecode"}, hexed) == plain
+    def decode(sdict, data):
+        return _decode_stream(sdict, data, None, _Budget())
+
+    assert decode({"Filter": "ASCIIHexDecode"}, hexed) == plain
     a85 = base64.a85encode(plain, adobe=True)
-    assert _decode_stream({"Filter": "ASCII85Decode"}, a85) == plain
+    assert decode({"Filter": "ASCII85Decode"}, a85) == plain
 
     # RunLength: literal-run encoding (chunks of <=128 literal bytes)
     rl = bytearray()
@@ -309,9 +322,9 @@ def test_stream_filters_roundtrip():
         chunk = plain[i : i + 120]
         rl += bytes([len(chunk) - 1]) + chunk
     rl.append(128)
-    assert _decode_stream({"Filter": "RunLengthDecode"}, bytes(rl)) == plain
+    assert decode({"Filter": "RunLengthDecode"}, bytes(rl)) == plain
     # RunLength: repeat runs
-    assert _decode_stream({"Filter": "RunLengthDecode"}, b"\xfeZ\x80") == b"ZZZ"
+    assert decode({"Filter": "RunLengthDecode"}, b"\xfeZ\x80") == b"ZZZ"
 
     # LZW: minimal encoder (emits 9-bit codes, table never grows past 511)
     def lzw_encode(data: bytes) -> bytes:
@@ -334,7 +347,7 @@ def test_stream_filters_roundtrip():
             out.append((acc << (8 - nbits)) & 0xFF)
         return bytes(out)
 
-    assert _lzw_decode(lzw_encode(plain)) == plain[:200]
+    assert _lzw_decode(lzw_encode(plain), 1, 1 << 20) == plain[:200]
 
     # Flate + PNG Up predictor (the layout real xref streams use)
     columns, rows = 7, 9
@@ -347,7 +360,7 @@ def test_stream_filters_roundtrip():
         filtered += bytes((row[i] - prev[i]) & 0xFF for i in range(columns))
         prev = row
     enc = zlib.compress(bytes(filtered))
-    got = _decode_stream(
+    got = decode(
         {"Filter": "FlateDecode", "DecodeParms": {"Predictor": 12, "Columns": columns}},
         enc,
     )
@@ -379,13 +392,15 @@ def test_inline_image_binary_is_skipped():
         b"BI /W 4 /H 4 /BPC 8 /CS /G ID \xff(evil) Tj\x00\x01garbage\xfe EI\n"
         b"BT /F1 12 Tf 72 680 Td (after) Tj ET"
     )
-    runs, hl, vl, rects, images = _interpret_content(content)
+    runs, hl, vl, rects, images = _interpret_content(content, budget=_Budget())
     texts = [r[3] for r in runs]
     assert "before" in texts and "after" in texts
     assert not any("evil" in t for t in texts)
 
     # EI missing entirely: skip to end, never hang or raise
-    runs2, *_ = _interpret_content(b"BT (ok) Tj ET BI /W 1 ID \xff\xfe no end")
+    runs2, *_ = _interpret_content(
+        b"BT (ok) Tj ET BI /W 1 ID \xff\xfe no end", budget=_Budget()
+    )
     assert [r[3] for r in runs2] == ["ok"]
 
 
@@ -402,7 +417,9 @@ def test_text_string_encodings():
         (b"<48656C6C6F>", "Hello"),                                 # hex string
     ]
     for raw, want in cases:
-        runs, *_ = _interpret_content(b"BT /F1 12 Tf 72 700 Td " + raw + b" Tj ET")
+        runs, *_ = _interpret_content(
+            b"BT /F1 12 Tf 72 700 Td " + raw + b" Tj ET", budget=_Budget()
+        )
         assert [r[3] for r in runs] == [want], (raw, runs)
 
 
@@ -505,12 +522,14 @@ def test_tj_kern_threshold_separates_kerning_from_word_gaps():
     )
 
     runs, *_ = _interpret_content(
-        b"BT /F1 10 Tf 72 700 Td [(Hel) -30 (lo) -300 (world) -179.9 (!)] TJ ET"
+        b"BT /F1 10 Tf 72 700 Td [(Hel) -30 (lo) -300 (world) -179.9 (!)] TJ ET",
+        budget=_Budget(),
     )
     assert runs[0][3] == "Hello world!"
     runs, *_ = _interpret_content(
         b"BT /F1 10 Tf 72 700 Td [(a) %d (b) %d (c)] TJ ET"
-        % (-int(KERN_SPACE_TJ), -1000)
+        % (-int(KERN_SPACE_TJ), -1000),
+        budget=_Budget(),
     )
     assert runs[0][3] == "a b c"
 
@@ -586,7 +605,8 @@ def test_form_without_resources_inherits_page_context():
                     "matrix": (1.0, 0.0, 0.0, 1.0, 100.0, 200.0),
                     "image_names": None, "fonts": None, "forms": None}}
     runs, _hl, _vl, _re, images = _interpret_content(
-        b"/Fx Do", image_names=frozenset({"Im1"}), forms=forms)
+        b"/Fx Do", image_names=frozenset({"Im1"}), forms=forms,
+        budget=_Budget())
     assert [r[:4] for r in runs] == [(105.0, 205.0, 10.0, "in")]
     assert images == [(100.0, 200.0, 104.0, 204.0, "Im1")]
 
@@ -601,7 +621,7 @@ def test_form_self_reference_terminates():
     forms = {"F": {"content": b"/F Do BT /F1 10 Tf 0 0 Td (x) Tj ET",
                    "matrix": None, "image_names": None, "fonts": None,
                    "forms": None}}
-    runs, *_ = _interpret_content(b"/F Do", forms=forms)
+    runs, *_ = _interpret_content(b"/F Do", forms=forms, budget=_Budget())
     assert len(runs) == _FORM_MAX_DEPTH
 
 
@@ -704,22 +724,24 @@ def test_advance_formula_operators():
     from pdf_extraction_spark.kernels.pdf_extract import _interpret_content
     from pdf_extraction_spark.kernels import afm
 
+    def runs_of(content):
+        return _interpret_content(content, budget=_Budget())[0]
+
     base_units = afm.text_units("a b") / 1000.0 * 10.0
-    runs, *_ = _interpret_content(b"BT /F1 10 Tf 0 0 Td (a b) Tj ET")
+    runs = runs_of(b"BT /F1 10 Tf 0 0 Td (a b) Tj ET")
     assert abs(runs[0][4] - base_units) < 1e-9
 
-    runs, *_ = _interpret_content(b"2 Tc BT /F1 10 Tf 0 0 Td (a b) Tj ET")
+    runs = runs_of(b"2 Tc BT /F1 10 Tf 0 0 Td (a b) Tj ET")
     assert abs(runs[0][4] - (base_units + 3 * 2)) < 1e-9
 
-    runs, *_ = _interpret_content(b"5 Tw BT /F1 10 Tf 0 0 Td (a b) Tj ET")
+    runs = runs_of(b"5 Tw BT /F1 10 Tf 0 0 Td (a b) Tj ET")
     assert abs(runs[0][4] - (base_units + 5)) < 1e-9
 
-    runs, *_ = _interpret_content(b"50 Tz BT /F1 10 Tf 0 0 Td (a b) Tj ET")
+    runs = runs_of(b"50 Tz BT /F1 10 Tf 0 0 Td (a b) Tj ET")
     assert abs(runs[0][4] - base_units * 0.5) < 1e-9
 
     # q/Q restores spacing state
-    runs, *_ = _interpret_content(
-        b"q 2 Tc Q BT /F1 10 Tf 0 0 Td (a b) Tj ET")
+    runs = runs_of(b"q 2 Tc Q BT /F1 10 Tf 0 0 Td (a b) Tj ET")
     assert abs(runs[0][4] - base_units) < 1e-9
 
 
@@ -925,11 +947,11 @@ def test_lzw_width_boundary_cross_parity():
     rng = random.Random(7)
     for n in (300, 3000, 30000, 120000):
         data = bytes(rng.choice(b"abcdefgh \n") for _ in range(n))
-        assert _lzw_decode(_lzw_encode_ref(data), 1) == data, n
+        assert _lzw_decode(_lzw_encode_ref(data), 1, 1 << 20) == data, n
     data = b"the quick brown fox jumps over the lazy dog " * 3000
-    assert _lzw_decode(_lzw_encode_ref(data), 1) == data
+    assert _lzw_decode(_lzw_encode_ref(data), 1, 1 << 20) == data
     data = bytes(rng.choice(b"xyz01 ") for _ in range(20000))
-    assert _lzw_decode(_lzw_encode_ref(data, early=0), 0) == data
+    assert _lzw_decode(_lzw_encode_ref(data, early=0), 0, 1 << 20) == data
 
 
 def _hand_pdf(objs: dict) -> bytes:
@@ -1000,7 +1022,7 @@ def test_q_restores_font_state():
     content = (b"BT /F1 10 Tf 72 700 Td (body before text here okay) Tj ET "
                b"q BT /F1 30 Tf 72 600 Td (HUGE BANNER) Tj ET Q "
                b"BT 72 500 Td (body after text here okay) Tj ET")
-    runs, _, _, _, _ = _interpret_content(content, frozenset())
+    runs, _, _, _, _ = _interpret_content(content, frozenset(), budget=_Budget())
     sizes = {txt: size for _x, _y, size, txt, _w in runs}
     assert sizes["HUGE BANNER"] == 30.0
     assert sizes["body after text here okay"] == 10.0
@@ -1087,3 +1109,331 @@ def test_type3_fontmatrix_scales_widths():
     assert t3(b"[0.001 0 0 0.001 0 0]", b"[600 600 600 600]") == "abcd dd"
     assert t3(b"[0.01 0 0 0.01 0 0]", b"[60 60 60 60]") == "abcd dd"
     assert t3(b"[1 0 0 1 0 0]", b"[0.6 0.6 0.6 0.6]") == "abcd dd"
+
+
+# -- content tokenizer and object-lexer fast paths ------------------------------------
+
+
+def _norm(v):
+    """A parsed operand as plain comparable data: the type travels with the
+    value (a name is a str, a Ref has no equality of its own)."""
+    if isinstance(v, list):
+        return ("list", [_norm(x) for x in v])
+    if isinstance(v, dict):
+        return ("dict", {k: _norm(x) for k, x in v.items()})
+    if isinstance(v, _Ref):
+        return ("ref", v.num)
+    return (type(v).__name__, v)
+
+
+def _parse_loop_ops(content: bytes):
+    """The parse()-per-token content loop: an operand start goes through
+    _Lexer.parse (one more byte skipped past an exception), any other run
+    of non-delimiters is an operator, a lone delimiter is dropped, and BI
+    skips its binary to the whitespace-delimited EI (no ID ends the
+    stream)."""
+    ws, delim = b"\x00\t\n\x0c\r ", b"()<>[]{}/%"
+    lex = _Lexer(content, 0)
+    n = len(content)
+    stack = []
+    while lex.p < n:
+        lex._skip_ws()
+        if lex.p >= n:
+            break
+        if content[lex.p] in b"/<([+-.0123456789":
+            try:
+                stack.append(lex.parse())
+            except Exception:
+                lex.p += 1
+            continue
+        start = lex.p
+        while lex.p < n and content[lex.p] not in ws + delim:
+            lex.p += 1
+        op = content[start : lex.p]
+        if not op:
+            lex.p += 1
+            continue
+        if op == b"BI":
+            idp = content.find(b"ID", lex.p)
+            if idp == -1:
+                return
+            m = _INLINE_EI.search(content, idp + 2)
+            lex.p = n if m is None else m.end()
+        yield op, stack
+        stack = []
+
+
+_TOKEN_BYTES = st.sampled_from(
+    [bytes([c]) for c in b"0123456789+-.eE()\\\r\n <>[]/#%RTjfA\x00{}\x80\xff"]
+    + [b"Tj", b"TJ", b"Td", b"BI", b"ID", b" EI", b"\\0", b"\\777", b"\\\r\n"]
+)
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.lists(_TOKEN_BYTES, max_size=40).map(b"".join))
+@example(b"(a(b)c) Tj (x\\)y) Tj")
+@example(b"(\\777\\0\\12\\1234\\n\\r\\t\\b\\f\\q\\\\\\(\\)) Tj")
+@example(b"(line\\\ncont\\\r\nin\\\rued) '")
+@example(b"1 0 R Do 1 %c\n 0 R 7 8R/ 1 2 Rx")
+@example(b"1-2 5. .5 1e5 1.e5 1e 1.5.5 -.5e-2 +3 Td")
+@example(b"/A#20B Tf /#zz / Tf")
+@example(b"/S << /A 1 /B (x) >> BDC")
+@example(b"[1 %c\n 2] TJ [(a) -250 <41 42> (b)] TJ [/N 1] TJ [[1]] TJ")
+@example(b"BI /W 1 ID \xff(x) Tj\x00 EI (after) Tj BI no id")
+@example(b"(unterminated")
+@example(b"[(a) 1")
+@example(b"<41")
+@example(b"12")
+@example(b"1 0")
+@example(b"T* ) ] > } { 7 ' 8 \"")
+def test_content_ops_match_parse_loop(content):
+    """The one-regex tokenizer yields exactly the (operator, operands)
+    stream of the parse()-per-token loop it replaced: every shape its fast
+    groups do not take whole goes to _Lexer.parse at that position."""
+    from pdf_extraction_spark.kernels.pdf_extract import _content_ops
+
+    def norm(ops):
+        return [(op, [_norm(v) for v in args]) for op, args in ops]
+
+    assert norm(_content_ops(content, _Budget())) == norm(_parse_loop_ops(content))
+
+
+_DIGITS = re.compile(rb"[0-9]+")
+
+
+class _SlowLexer(_Lexer):
+    """_Lexer with its one-match fast paths (the "G R" lookahead, flat
+    arrays) replaced by the token-at-a-time code they stand for."""
+
+    def _number_or_ref(self):
+        d = self.d
+        m = _NUM_RUN.match(d, self.p)
+        tok = m.group(0)
+        self.p = m.end()
+        try:
+            num = int(tok)
+        except ValueError:
+            return float(tok)
+        save = self.p
+        self._skip_ws()
+        m2 = _DIGITS.match(d, self.p)
+        if m2 is not None:
+            self.p = m2.end()
+            self._skip_ws()
+            p = self.p
+            if d[p : p + 1] == b"R" and (
+                p + 1 >= len(d) or d[p + 1] in b"\x00\t\n\x0c\r ()<>[]{}/%"
+            ):
+                self.p = p + 1
+                return _Ref(num)
+        self.p = save
+        return num
+
+    def _array(self):
+        self.p += 1
+        out = []
+        while True:
+            self._skip_ws()
+            if self.d[self.p : self.p + 1] == b"]":
+                self.p += 1
+                return out
+            out.append(self.parse())
+
+
+def _parse_all(lex) -> tuple:
+    out = []
+    while True:
+        try:
+            out.append(_norm(lex.parse()))
+        except Exception as exc:
+            return out, type(exc).__name__, lex.p
+
+
+_OBJ_BYTES = st.sampled_from(
+    [bytes([c]) for c in b"0123456789+-.eE \n\r%R[]/()<>\\aF"]
+    + [b"<<", b">>", b"true", b"null", b"R/", b"/Widths", b"%c\n"]
+)
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.lists(_OBJ_BYTES, max_size=40).map(b"".join))
+@example(b"1 0 R 1 %c\n 0 R 1 0R/ 1 0 Rx 12 34 R")
+@example(b"[1 2 3.5 -4 +.5e1 1e5 2E-1 3.] [] [ ]")
+@example(b"[1 0 R] [1 %c\n 2] [1-2] [1.5.5] [/N] [(s)] [1 [2]]")
+@example(b"<< /Widths [250 333 500] /MediaBox [0 0 612.0 792] /P 4 0 R >>")
+@example(b"[" + b"9" * 700 + b"]")
+@example(b"/ID [<0a1B> <C d>] [(a\\)b\\101) <41 4> () <> 2.5] [(a(b)c)] [<<>>]")
+def test_lexer_fast_paths_match_slow_paths(data):
+    """_Lexer's one-match "G R" lookahead and flat-array parse give the
+    objects, the end position and the error of the per-token code."""
+    assert _parse_all(_Lexer(data, 0)) == _parse_all(_SlowLexer(data, 0))
+
+
+def _flate_page_pdf(content: bytes, then: bytes = b"") -> bytes:
+    """A one-page PDF whose content stream is ``content`` deflated, then
+    decoded by the filter ``then`` names, if any."""
+    import zlib
+
+    body = zlib.compress(content, 9)
+    objs = dict(_HAND_BASE)
+    objs[5] = (b"<< /Length %d /Filter [/FlateDecode %s] >>\nstream\n"
+               % (len(body), then) + body + b"\nendstream")
+    return _hand_pdf(objs)
+
+
+@pytest.mark.parametrize("unit,size,then", [
+    (b"0 0 m\n", 16 << 20, b""),                                  # operators
+    (b"BT /F1 12 Tf 72 700 Td (bomb) Tj ET\n", 16 << 20, b""),    # text runs
+    (b"0 ", 16 << 20, b""),                                       # bare operands
+    (b"\x00", 48 << 20, b""),                                     # inflation
+    (b"\x81\x00", 32 << 20, b"/RunLengthDecode"),  # 128 bytes per pair
+    (b"z", 16 << 20, b"/ASCII85Decode"),           # 4 zero bytes per z
+])
+def test_stream_bomb_fails_closed_on_budget(unit, size, then):
+    """A PDF under 100 KiB whose content stream decodes to 16 MiB-2 GiB
+    stops at the stream's byte cap or the page's token cap, then fails
+    closed: no text, a "budget" error. Without the caps the first shape
+    alone keeps one core busy for tens of seconds, and the run-length one
+    allocates gigabytes."""
+    import time
+
+    pdf = _flate_page_pdf(unit * (size // len(unit)), then)
+    assert len(pdf) < 100 << 10
+    t0 = time.process_time()
+    r = extract_pdf(pdf)
+    assert time.process_time() - t0 < 10.0
+    assert r["error"].startswith("budget"), r["error"]
+    assert r["text"] == "" and r["spans"] == []
+
+
+def test_budget_overrun_swallowed_by_form_still_fails_closed():
+    """A form XObject whose stream overruns the byte cap is decoded under
+    an except that skips the form; the document still fails closed."""
+    import zlib
+
+    bomb = zlib.compress(b"\x00" * (40 << 20), 9)
+    objs = dict(_HAND_BASE)
+    objs[3] = objs[3].replace(b"/F1 6 0 R >>", b"/F1 6 0 R >> /XObject << /X 7 0 R >>")
+    page = b"BT /F1 12 Tf 72 700 Td (visible text) Tj ET /X Do"
+    objs[5] = b"<< /Length %d >>\nstream\n" % len(page) + page + b"\nendstream"
+    objs[7] = (b"<< /Subtype /Form /Length %d /Filter /FlateDecode >>\nstream\n"
+               % len(bomb) + bomb + b"\nendstream")
+    r = extract_pdf(_hand_pdf(objs))
+    assert r["error"].startswith("budget") and r["text"] == ""
+    assert "visible text" in extract_pdf(_hand_pdf({**objs, 7: objs[6]}))["text"]
+
+
+def test_long_document_sharing_a_form_stays_within_budget(monkeypatch):
+    """200 pages share one form: a 256 KiB logo (an inline image) and
+    6,000 path tokens, painted on every page. Together the pages decode
+    51 MiB of form and run 1.2 M tokens, past either cap were it per
+    document; per stream and per page the document is well inside both.
+    The form is decoded once, not once per page."""
+    import zlib
+
+    from pdf_extraction_spark.kernels import pdf_extract
+
+    n_pages = 200
+    logo = b"BI /W 512 /H 512 /BPC 8 /CS /G ID " + bytes(range(256)) * 1024 + b" EI"
+    form = (b"q 72 0 0 72 500 720 cm " + logo + b" Q\n" + b"0 0 m\n" * 2000
+            + b"BT /F1 8 Tf 72 30 Td (shared footer) Tj ET")
+    assert len(form) >= 256 << 10
+    packed = zlib.compress(form, 9)
+    objs = {1: _HAND_BASE[1], 6: _HAND_BASE[6]}
+    kids = []
+    for i in range(n_pages):
+        page, content = 10 + 2 * i, 11 + 2 * i
+        kids.append(b"%d 0 R" % page)
+        objs[page] = (b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R /Resources"
+                      b" << /Font << /F1 6 0 R >> /XObject << /X 7 0 R >> >> >>"
+                      % content)
+        text = b"BT /F1 12 Tf 72 700 Td (page %d body) Tj ET /X Do" % i
+        objs[content] = (b"<< /Length %d >>\nstream\n" % len(text) + text
+                         + b"\nendstream")
+    objs[2] = (b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 612 792] >>"
+               % (b" ".join(kids), n_pages))
+    objs[7] = (b"<< /Subtype /Form /BBox [0 0 612 792] /Length %d "
+               b"/Filter /FlateDecode >>\nstream\n" % len(packed)
+               + packed + b"\nendstream")
+    forms_decoded = []
+    decode = pdf_extract._decode_stream
+
+    def counting(sdict, raw, resolve, budget):
+        out = decode(sdict, raw, resolve, budget)
+        if str(sdict.get("Subtype")) == "Form":
+            forms_decoded.append(len(out))
+        return out
+
+    monkeypatch.setattr(pdf_extract, "_decode_stream", counting)
+    r = extract_pdf(_hand_pdf(objs))
+    assert r["error"] is None
+    assert forms_decoded == [len(form)]
+    for i in range(n_pages):
+        assert f"page {i} body" in r["text"]
+    assert r["text"].count("shared footer") == n_pages
+
+
+def test_decoders_stop_at_max_length():
+    from pdf_extraction_spark.kernels.pdf_extract import (
+        _ascii85_decode,
+        _lzw_decode,
+        _runlength_decode,
+    )
+
+    data = bytes(range(256)) * 8
+    enc = _lzw_encode_ref(data)
+    assert _lzw_decode(enc, 1, 100) == data[:100]
+    assert _lzw_decode(enc, 1, len(data)) == data
+    assert _runlength_decode(b"\x81A" * 10 + b"\x80", 300) == b"A" * 300
+    assert _runlength_decode(b"\x81A" * 2 + b"\x80", 300) == b"A" * 256
+    assert _ascii85_decode(b"z" * 100_000 + b"~>", 10) == bytes(10)
+    assert _ascii85_decode(b"<~87cURD]i,\"Ebo80~>", 5) == b"Hello"
+
+
+def _a85_whole(data: bytes) -> bytes:
+    """ASCII85Decode as one stdlib call over the whole stream."""
+    import base64
+
+    body = re.sub(rb"\s", b"", data)
+    if body.startswith(b"<~"):
+        body = body[2:]
+    if body.endswith(b"~>"):
+        body = body[:-2]
+    return base64.a85decode(b"<~" + body + b"~>", adobe=True)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.one_of(
+    st.binary(max_size=64).map(
+        lambda b: __import__("base64").a85encode(b.replace(b"\x01", bytes(4)),
+                                                 adobe=True, wrapcol=7)),
+    st.lists(st.sampled_from(list(b"!uz~>< \n0Aaty\x00")), max_size=40).map(bytes),
+))
+@example(b"zz!!!!!z~>")
+@example(b"!!z")
+@example(b"!!!!!!z")
+@example(b"<~s8W-\"~>")
+def test_ascii85_run_decode_matches_whole_decode(data):
+    """Run-at-a-time ASCII85 gives the whole-stream decode's bytes, or
+    fails where it fails (a z inside a group, an overflow, a stray byte)."""
+    from pdf_extraction_spark.kernels.pdf_extract import _ascii85_decode
+
+    def outcome(fn):
+        try:
+            return fn()
+        except ValueError:
+            return ValueError
+
+    assert outcome(lambda: _ascii85_decode(data, 1 << 20)) == outcome(
+        lambda: _a85_whole(data))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(max_size=30))
+def test_text_units_is_sum_of_char_widths(s):
+    """The cached per-character table gives char_width's values exactly,
+    including NFD fallbacks and the default width."""
+    from pdf_extraction_spark.kernels import afm
+
+    for mt in (afm.HELVETICA, afm.TIMES, afm.COURIER, afm.SYMBOL):
+        assert mt.text_units(s) == sum(mt.char_width(ch) for ch in s)

@@ -914,7 +914,7 @@ def test_lzw_reference_encoder_parity(data):
     from pdf_extraction_spark.kernels.pdf_extract import _lzw_decode
     from test_pdf_kernel import _lzw_encode_ref
 
-    assert _lzw_decode(_lzw_encode_ref(data), 1) == data
+    assert _lzw_decode(_lzw_encode_ref(data), 1, 1 << 20) == data
 
 
 @settings(max_examples=150, deadline=None)
