@@ -35,13 +35,13 @@ from pdf_extraction_spark.operators import (
     suites,
     textops,
 )
-from pdf_extraction_spark.pipeline import extract_corpus
+from pdf_extraction_spark.pipeline import extract_stage
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     corpus = corpus_from_documents(spark, "/root/testdata/sf0.001", payload="html")
-    out = extract_corpus(corpus, repartition=False)
+    out = extract_stage(corpus)
     return out.select("url", "extracted_text", "n_elements", "method", "error")
 
 

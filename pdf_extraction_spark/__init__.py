@@ -4,7 +4,7 @@ Brand-new implementation (not a port) with the capabilities of the
 reference PDF document-understanding pipeline surveyed in SURVEY.md:
 HTML boilerplate stripping (text-density + link-density heuristics) and
 pure-Python PDF layout parsing (xref walk, content-stream tokenizer,
-reading-order reconstruction), run as vectorized pandas/Arrow UDFs over
+reading-order reconstruction), run in Arrow-batched Spark stages over
 Common-Crawl-style tables ``(url, warc_ts, html, text, lang)``.
 
 Layout:

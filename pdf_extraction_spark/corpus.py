@@ -276,7 +276,7 @@ def spread_docs(docs):
     sf1. Repartitioning the pre-payload TEXT rows by ``doc_id`` hash
     spreads that work for the cost of shuffling kilobyte text rows; the
     generated binary payloads themselves still never shuffle (the oracle
-    queries keep ``extract_corpus(..., repartition=False)``). At production
+    queries run ``extract_stage``, which has no shuffle). At production
     scale the scan arrives pre-parallel from thousands of files, so the
     shuffle is SKIPPED there (guarded on the scan's actual partition
     count) — forcing a full text shuffle on an already-parallel 100 TB

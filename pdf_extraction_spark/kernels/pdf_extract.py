@@ -1694,19 +1694,24 @@ def _median(vals: list[float]) -> float:
 
 
 def _group_lines(runs: list[tuple]) -> list[dict]:
-    """Group runs into visual lines by y (tolerance Y_TOL), runs sorted by x."""
+    """Group runs into visual lines by y (tolerance Y_TOL), runs sorted by x.
+
+    A run joins the first line made so far within Y_TOL of it. Runs come in
+    by descending y, so that line is at a pointer that only moves forward;
+    a non-finite y (``inf - inf`` is NaN) restarts the scan for every run."""
     by_y: list[dict] = []
-    for run in sorted(runs, key=lambda r: (-r[1], r[0])):
-        x, y, size, txt, _w = run
-        placed = None
-        for line in by_y:
-            if abs(line["y"] - y) <= Y_TOL:
-                placed = line
-                break
-        if placed is None:
-            placed = {"y": y, "runs": []}
-            by_y.append(placed)
-        placed["runs"].append(run)
+    ordered = sorted(runs, key=lambda r: (-r[1], r[0]))
+    finite = all(math.isfinite(r[1]) for r in ordered)
+    first = 0
+    for run in ordered:
+        y = run[1]
+        if not finite:
+            first = 0
+        while first < len(by_y) and not abs(by_y[first]["y"] - y) <= Y_TOL:
+            first += 1
+        if first == len(by_y):
+            by_y.append({"y": y, "runs": []})
+        by_y[first]["runs"].append(run)
     for line in by_y:
         line["runs"].sort(key=lambda r: r[0])
         line["x"] = line["runs"][0][0]

@@ -118,7 +118,6 @@ def run_resumable(
     salt: int = 8,
     run_id: str | None = None,
     wave_size: int | None = None,
-    fail_buckets: set[int] | None = None,
 ) -> dict:
     """Run (or resume) the extraction pipeline over ``corpus`` into
     ``output_path``, bucket-checkpointed. Returns a run summary dict.
@@ -128,14 +127,11 @@ def run_resumable(
     crash loses at most one wave of work. Default (None) = one wave — lowest
     overhead when the whole run is expected to fit one job. At 10^12-doc
     scale you pick wave_size so each wave is minutes of work; per-wave input
-    scans prune on the pushed ``bucket IN (...)`` predicate.
-
-    ``fail_buckets`` is a test-only fault injector: the extraction stage
-    raises for rows in those buckets, crashing whichever wave contains them
-    (waves committed before it survive — that is the resume guarantee).
+    scans prune on the pushed ``bucket IN (...)`` predicate. The ``docs/``
+    write overwrites partitions dynamically by its own write option, leaving
+    the session conf as it was.
     """
     spark = corpus.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
@@ -181,7 +177,6 @@ def run_resumable(
     docs_path = output_path.rstrip("/") + "/docs"
     wave_size = wave_size or len(pending)
     waves = [pending[i:i + wave_size] for i in range(0, len(pending), wave_size)]
-    fb = sorted(fail_buckets) if fail_buckets else []
 
     for wave in waves:
         ts = datetime.datetime.now(datetime.timezone.utc)
@@ -208,14 +203,6 @@ def run_resumable(
             ],
             tally=tally,
         )
-        if fb:
-            def _bomb(batches):
-                for pdf in batches:
-                    if pdf["bucket"].isin(fb).any():
-                        raise RuntimeError(f"injected failure for buckets {fb}")
-                    yield pdf
-
-            extracted = extracted.mapInPandas(_bomb, schema=extracted.schema)
 
         # The upstream repartition is bucket-aligned, so each task already
         # holds whole (bucket, salt) groups — the partitioned write emits
@@ -226,6 +213,7 @@ def run_resumable(
         t_ex = time.monotonic()
         (
             extracted.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(docs_path)
         )

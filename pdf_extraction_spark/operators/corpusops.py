@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpus import doc_url, spread_docs
-from ..pipeline import META_SCHEMA, _extract_stage, fanout
+from ..pipeline import META_SCHEMA, extract_stage, fanout
 from .common import tbl
 from .textops import QUALITY_EXPR_SQL
 
@@ -862,7 +862,7 @@ def q_indexable_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = F.concat(F.lit("<html><head>"), head,
                     F.lit("</head><body><p>x</p></body></html>"))
     pages = docs.select(doc_url().alias("url"), F.encode(html, "UTF-8").alias("html"), "doc_id")
-    m = _extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
+    m = extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
     noindex = F.coalesce(F.col("meta.robots"), F.lit("")).contains("noindex")
     non_canon = F.col("meta.canonical").isNotNull() & (
         F.col("meta.canonical") != F.col("url")

@@ -5,7 +5,7 @@ text: the head ``<title>`` and robots/author ``<meta>`` tags for HTML, the
 trailer /Info dictionary for PDF (what PyMuPDF exposes as ``doc.metadata``
 in the reference's stack — the reference itself never reads it). Both are
 a projection of the ``meta`` column the one Arrow extraction stage
-(``pipeline._extract_stage``) builds; at 10^12 docs this is
+(``pipeline.extract_stage``) builds; at 10^12 docs this is
 embarrassingly parallel, partitioned by the source scan (with the
 ``spread_docs`` rebalance kicking in only when a small-file scan would
 starve the cores — see :func:`..corpus.spread_docs`).
@@ -18,7 +18,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import corpus_from_documents, spread_docs
-from ..pipeline import META_SCHEMA, _extract_stage, fanout
+from ..pipeline import META_SCHEMA, extract_stage, fanout
 from .common import first_words, sql_fold_ws, tbl
 
 
@@ -26,7 +26,7 @@ def _meta_df(corpus: DataFrame) -> DataFrame:
     """(url, title, author, robots, canonical) per document: the ``meta``
     column of the extraction stage, canonical resolved against the
     ``<base href>``-adjusted document URL."""
-    return _extract_stage(corpus, META_SCHEMA).select(
+    return extract_stage(corpus, META_SCHEMA).select(
         "url", *(f"meta.{c}" for c in ("title", "author", "robots", "canonical"))
     )
 

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..corpus import doc_url, spread_docs
 from ..kernels import pdf_write
-from ..pipeline import extract_corpus, fanout
+from ..pipeline import extract_stage, fanout
 from .common import first_words, tbl
 
 
@@ -118,7 +118,7 @@ def q_element_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     figure at level 2; header/footer chrome stays root; every
     paragraph/list sits at level 1 under the doc title."""
     corpus = _figured_pdf_corpus(spark, sf_dir)
-    ex = extract_corpus(corpus, repartition=False)
+    ex = extract_stage(corpus)
     els = elements_df(ex)
     parents = els.select(
         F.col("url").alias("p_url"),
@@ -219,7 +219,7 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly why the kernel clusters columns before emitting
     (reference stub it fills: advanced_layout_extractor.py:546-552)."""
     corpus = _titled_pdf_corpus(spark, sf_dir).filter(F.col("doc_id") % 3 != 0)
-    ex = extract_corpus(corpus, repartition=False)
+    ex = extract_stage(corpus)
     els = elements_df(ex)
     w = Window.partitionBy("url").orderBy("page", "y0", "x0", "pos")
     ranked = els.withColumn("rank", F.row_number().over(w) - 1)
@@ -248,7 +248,7 @@ def q_spatial_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference behavior pinned: the O(n²) pair loop + relation predicate
     (advanced_layout_extractor.py:487-538)."""
     corpus = _titled_pdf_corpus(spark, sf_dir)
-    ex = extract_corpus(corpus, repartition=False)
+    ex = extract_stage(corpus)
     els = elements_df(ex)
     a, b = els.alias("a"), els.alias("b")
     pairs = a.join(
@@ -388,7 +388,7 @@ def q_confidence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("doc_id").cast("string")).alias("url"),
         make_pdf("text", "doc_id").alias("html"),
     )
-    els = elements_df(extract_corpus(corpus, repartition=False))
+    els = elements_df(extract_stage(corpus))
     tables = els.filter(F.col("elem_type") == "table").select(
         "url", "page", "confidence"
     )

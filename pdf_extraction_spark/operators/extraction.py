@@ -8,7 +8,7 @@ would silently lose its correctness row (VERDICT r4 "what's wrong" item 1).
 per-part value-level verification as :mod:`.suites`:
 
 * the two HTML-side parts (``html_roundtrip``, ``spans_tile``) share a
-  single ``extract_corpus`` pass — their cells are emitted from one
+  single ``extract_stage`` pass — their cells are emitted from one
   projection and one explode, so consolidating them does NOT re-run the
   extraction kernel per part (the union-branch trap the suites module
   documents);
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import corpus_from_documents
-from ..pipeline import extract_corpus
+from ..pipeline import extract_stage
 from ..sources import wet as wetmod
 from .suites import NUM, STR, _unpivot, make_suite_sql
 
@@ -36,7 +36,7 @@ def q_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted text — must equal documents.text byte-identically (north
     rule)."""
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
-    out = extract_corpus(corpus, repartition=False)
+    out = extract_stage(corpus)
     return out.select("url", "extracted_text", "n_elements")
 
 
@@ -54,7 +54,7 @@ def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     AES-encrypted variants), parse with the pure-Python PDF kernel,
     reconstruct reading order — byte-identical text back."""
     corpus = corpus_from_documents(spark, sf_dir, payload="pdf")
-    out = extract_corpus(corpus, repartition=False)
+    out = extract_stage(corpus)
     return out.select("url", "extracted_text", "method")
 
 
@@ -70,7 +70,7 @@ def q_extract_spans_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-offset invariant as a query: spans tile extracted_text exactly
     (char_end - char_start sums to length minus separators)."""
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
-    out = extract_corpus(corpus, repartition=False)
+    out = extract_stage(corpus)
     return out.select("url", *_span_tile_cols())
 
 
@@ -121,8 +121,8 @@ def q_extraction_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, _fn, _sql, keys, vals in EXTRACTION_PARTS
         if name in ("html_roundtrip", "spans_tile")
     ]
-    html_out = extract_corpus(
-        corpus_from_documents(spark, sf_dir, payload="html"), repartition=False
+    html_out = extract_stage(
+        corpus_from_documents(spark, sf_dir, payload="html")
     ).select("url", "extracted_text", "n_elements", *_span_tile_cols())
     branches = [_unpivot(html_out, shared)]
     for name, fn, _sql, keys, vals in EXTRACTION_PARTS:

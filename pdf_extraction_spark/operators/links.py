@@ -6,7 +6,7 @@ dedup. The reference has no link path at all (its inputs are local files);
 this is the Spark-first rebuild over the corpus table:
 
 * anchors and PDF URI annotations come out of the one Arrow extraction
-  stage (``pipeline._extract_stage``) as a typed ``links`` column, which
+  stage (``pipeline.extract_stage``) as a typed ``links`` column, which
   :func:`outlinks` explodes with a JVM ``inline``;
 * URL resolution (:mod:`..kernels.urlnorm`) happens in that same batch,
   so the shuffle only ever carries resolved targets;
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import corpus_from_documents, doc_url, spread_docs
-from ..pipeline import LINKS_SCHEMA, META_SCHEMA, _extract_stage, fanout
+from ..pipeline import LINKS_SCHEMA, META_SCHEMA, extract_stage, fanout
 from .common import first_words, sql_fold_ws, tbl
 
 
@@ -37,7 +37,7 @@ def outlinks(corpus: DataFrame) -> DataFrame:
     (javascript:, mailto:, fragments) are dropped after resolution. The
     anchor text rides along because it is the web's oldest relevance
     signal — :func:`q_anchor_text_rollup` aggregates it per target."""
-    return _extract_stage(corpus, LINKS_SCHEMA).select("url", F.inline("links"))
+    return extract_stage(corpus, LINKS_SCHEMA).select("url", F.inline("links"))
 
 
 def q_extract_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,7 +146,7 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = docs.select(doc_url().alias("url"), F.encode(html, "UTF-8").alias("html"), "doc_id")
     return (
-        _extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
+        extract_stage(pages, META_SCHEMA, keep_cols=("doc_id",))
         .filter(F.col("meta.refresh_delay").isNotNull())
         .select("doc_id", F.col("meta.refresh_delay").alias("delay_s"),
                 F.col("meta.refresh").alias("target"))

@@ -8,10 +8,11 @@ Rebuilds the reference's eager per-document loop
            ─ mapInArrow(extract_batch)    # Arrow batches through the kernels
            ─ sink (parquet, Iceberg-compatible layout)
 
-No per-row Python crosses the JVM boundary outside the Arrow batch path;
-kernels initialize once per partition (scalar-iterator form). The salt term
-splits pathological hosts (a single domain holding 30% of a 10^12-row corpus)
-across ``salt`` partitions while keeping host locality for everything else.
+Every Python worker stage is opened here, by :func:`arrow_stage`: rows
+cross the JVM boundary only as Arrow batches, and the kernel runs once per
+document inside a batch. The salt term splits pathological hosts (a single
+domain holding 30% of a 10^12-row corpus) across ``salt`` partitions while
+keeping host locality for everything else.
 """
 
 from __future__ import annotations
@@ -112,11 +113,24 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> Da
     return spark.createDataFrame(table, schema)
 
 
+def arrow_stage(df: DataFrame, fn, schema: T.StructType | str) -> DataFrame:
+    """The one way into a Python worker: ``df.mapInArrow`` over ``fn``,
+    which maps a task's iterator of input ``pyarrow.RecordBatch`` to
+    batches of ``schema``, with :func:`_drop_zip_finders` run once at the
+    start of every task."""
+
+    def _task(batches):
+        _drop_zip_finders()
+        yield from fn(batches)
+
+    return df.mapInArrow(_task, schema)
+
+
 ROWS_PER_BATCH = 2048  # output Arrow-batch bound of every fanout stage
 
 
 def fanout(df: DataFrame, fn, schema: T.StructType | str) -> DataFrame:
-    """Per-row Python operator as one ``mapInArrow`` stage: ``fn(*row)``
+    """Per-row Python operator as one :func:`arrow_stage`: ``fn(*row)``
     runs over every ``df`` row (its columns in order, as Python values) and
     each tuple it yields is one output row of ``schema`` (a ``StructType``
     or DDL string). Columns are built as typed Arrow arrays, so an all-NULL
@@ -147,7 +161,7 @@ def fanout(df: DataFrame, fn, schema: T.StructType | str) -> DataFrame:
         if out:
             yield build(out)
 
-    return df.mapInArrow(_fanout_batches, schema)
+    return arrow_stage(df, _fanout_batches, schema)
 
 
 def salted_repartition(df: DataFrame, partitions: int, salt: int = 8) -> DataFrame:
@@ -263,16 +277,24 @@ _KERNEL_COLS = {"extracted_text": "text", "spans": "spans", "n_elements": "n_ele
                 "method": "method", "error": "error", "links": "links", "meta": "meta"}
 
 
-def _make_extract_batches(schema: T.StructType, tally=None):
-    """mapInArrow worker factory: one kernel pass per Arrow batch, building
-    each ``schema`` column that ``_KERNEL_COLS`` names straight from the
-    kernel results (``links``/``meta`` resolved first, see
-    :func:`_resolve`) and carrying every other column (``url``, the
-    lineage bucket) through from the input batch untouched. Payloads reach
-    the kernels as zero-copy memoryviews into the Arrow buffer; no pandas
-    round-trip. With a :class:`BucketTally` accumulator ``tally`` (the
-    schema then holds ``extracted_text``, ``error`` and ``bucket``), each
-    batch adds its per-bucket counts to it."""
+def extract_stage(df: DataFrame, schema: T.StructType = OUTPUT_SCHEMA,
+                  keep_cols: tuple[str, ...] = (), tally=None) -> DataFrame:
+    """The one Spark stage that runs the kernels: ``df``'s ``(url, html)``
+    rows through ``extract_document``, with no shuffle before it, emitting
+    the columns of ``schema`` (``OUTPUT_SCHEMA``, ``LINKS_SCHEMA`` or
+    ``META_SCHEMA``) followed by ``keep_cols`` carried through. Operators
+    that need a document's links or head metadata project this stage's
+    output instead of calling the kernel themselves.
+
+    One kernel pass per Arrow batch builds each column that
+    ``_KERNEL_COLS`` names straight from the kernel results (``links``/
+    ``meta`` resolved first, see :func:`_resolve`); every other column
+    (``url``, the lineage bucket) comes through from the input batch
+    untouched. Payloads reach the kernels as zero-copy memoryviews into
+    the Arrow buffer. With a :class:`BucketTally` accumulator ``tally``
+    (the lineage runner's; ``keep_cols`` then holds ``bucket``), each batch
+    adds its per-bucket counts to it."""
+    schema = T.StructType(schema.fields + [df.schema[c] for c in keep_cols])
     built = [f for f in schema.fields if f.name in _KERNEL_COLS]
     names = [f.name for f in built]
     links, meta = "links" in schema.names, "meta" in schema.names
@@ -281,9 +303,6 @@ def _make_extract_batches(schema: T.StructType, tally=None):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        # every task of a reused worker would otherwise re-read each zip
-        # on sys.path (safe while no shipped archive changes in place)
-        _drop_zip_finders()
         types = [to_arrow_type(f.dataType) for f in built]
         for batch in batches:
             urls = batch.column("url").to_pylist() if links or meta else None
@@ -305,30 +324,13 @@ def _make_extract_batches(schema: T.StructType, tally=None):
                 names=schema.names,
             )
 
-    return _extract_batches
-
-
-def _extract_stage(
-    df: DataFrame, schema: T.StructType, keep_cols: tuple[str, ...] = (), tally=None
-) -> DataFrame:
-    """The one Spark stage that runs the kernels: ``df``'s ``(url, html)``
-    rows through ``extract_document``, emitting the columns of ``schema``
-    (``OUTPUT_SCHEMA``, ``LINKS_SCHEMA`` or ``META_SCHEMA``) followed by
-    ``keep_cols`` carried through. Operators that need a document's links
-    or head metadata project this stage's output instead of calling the
-    kernel themselves. ``tally`` is the lineage runner's
-    :class:`BucketTally` (see :func:`_make_extract_batches`)."""
-    schema = T.StructType(schema.fields + [df.schema[c] for c in keep_cols])
-    return df.select("url", "html", *keep_cols).mapInArrow(
-        _make_extract_batches(schema, tally), schema=schema
-    )
+    return arrow_stage(df.select("url", "html", *keep_cols), _extract_batches, schema)
 
 
 def extract_corpus(
     corpus: DataFrame,
     partitions: int | None = None,
     salt: int = 8,
-    repartition: bool = True,
     keep_cols: tuple[str, ...] = (),
     partition_exprs: list | None = None,
     tally=None,
@@ -337,7 +339,7 @@ def extract_corpus(
 
     Prunes to ``(url, html)`` (+ ``keep_cols``) before the Python stage so
     the parquet scan reads only the needed columns (ReadSchema check in
-    tests), then salted repartition, then the Arrow-batched kernel stage.
+    tests), then salted repartition, then :func:`extract_stage`.
 
     ``partition_exprs`` overrides the default (host-hash, url-salt)
     repartition keys — the lineage runner passes (bucket, url-salt) so the
@@ -347,13 +349,11 @@ def extract_corpus(
     ``tally``, a :class:`BucketTally` accumulator that the kernel stage
     fills with per-bucket counts (``keep_cols`` then holds ``bucket``).
     """
+    if partitions is None:
+        partitions = corpus.sparkSession.sparkContext.defaultParallelism
     pruned = corpus.select("url", "html", *keep_cols)
-    if repartition:
-        if partitions is None:
-            partitions = corpus.sparkSession.sparkContext.defaultParallelism
-        if partition_exprs is not None:
-            pruned = pruned.repartition(partitions, *partition_exprs)
-        else:
-            pruned = salted_repartition(pruned, partitions, salt)
-    return _extract_stage(pruned, OUTPUT_SCHEMA, keep_cols, tally)
-
+    if partition_exprs is not None:
+        pruned = pruned.repartition(partitions, *partition_exprs)
+    else:
+        pruned = salted_repartition(pruned, partitions, salt)
+    return extract_stage(pruned, OUTPUT_SCHEMA, keep_cols, tally)

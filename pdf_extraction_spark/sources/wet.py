@@ -31,7 +31,7 @@ import gzip
 import io
 import zlib
 
-from ..pipeline import fanout
+from ..pipeline import arrow_stage, extract_stage, fanout
 from . import paths_df
 from .warc import CRLF, iter_warc_records, maybe_gunzip, parse_warc_date
 
@@ -116,29 +116,28 @@ def to_wet_segments(extracted):
     rows, one gzipped WET segment per Arrow batch. Embarrassingly parallel;
     the segment name is content-addressed (md5 of member urls) so
     re-runs and speculative tasks produce identical objects. ``warc_ts``
-    crosses as epoch seconds (pandas would hand over session-local wall
-    time) and is written as that UTC instant."""
-    import pandas as pd
+    crosses as epoch seconds and is written as that UTC instant."""
     from pyspark.sql import functions as F
 
-    def gen(batches):
+    def segments(batches):
         import hashlib
 
+        import pyarrow as pa
+
         utc = datetime.timezone.utc
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"segment": [], "n_docs": [], "wet_gz": []})
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             rows = [
                 {"url": u,
-                 "warc_ts": None if pd.isna(s) else datetime.datetime.fromtimestamp(int(s), utc),
+                 "warc_ts": None if s is None else datetime.datetime.fromtimestamp(s, utc),
                  "text": t}
-                for u, s, t in zip(pdf["url"], pdf["warc_s"], pdf["extracted_text"])
+                for u, s, t in zip(*(c.to_pylist() for c in batch.columns))
             ]
             rows.sort(key=lambda r: r["url"])  # order-independent segments
             blob = gzip.compress(wet_bytes(rows), 6, mtime=0)
             name = hashlib.md5("\n".join(r["url"] for r in rows).encode()).hexdigest()[:16]
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"segment": [name], "n_docs": [len(rows)], "wet_gz": [blob]}
             )
 
@@ -147,8 +146,9 @@ def to_wet_segments(extracted):
         if "warc_ts" in extracted.columns
         else F.lit(None).cast("long")
     )
-    return extracted.select("url", ts.alias("warc_s"), "extracted_text").mapInPandas(
-        gen, schema="segment string, n_docs long, wet_gz binary"
+    return arrow_stage(
+        extracted.select("url", ts.alias("warc_s"), "extracted_text"),
+        segments, "segment string, n_docs long, wet_gz binary",
     )
 
 
@@ -172,10 +172,9 @@ def q_wet_roundtrip(spark, sf_dir: str):
     golden-test-only; this runs the full serialize/parse cycle inside the
     DuckDB-checked correctness gate."""
     from ..corpus import corpus_from_documents
-    from ..pipeline import extract_corpus
 
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
-    segs = to_wet_segments(extract_corpus(corpus, repartition=False))
+    segs = to_wet_segments(extract_stage(corpus))
 
     def back(blob):
         for row in parse_wet_bytes(blob):

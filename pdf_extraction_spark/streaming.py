@@ -15,7 +15,7 @@ streaming analog of the bucket lineage table). ``maxFilesPerTrigger``
 bounds micro-batch size so executor memory is sized by config, not by
 whatever landed in the directory.
 
-The transformation body is exactly :func:`..pipeline.extract_corpus` — the
+The transformation body is exactly :func:`..pipeline.extract_stage` — the
 same declarative plan runs batch or streaming unchanged, which is the point
 of building on the DataFrame API.
 """
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from .pipeline import extract_corpus
+from .pipeline import extract_stage, host_col
 from .sources.warc import CORPUS_SCHEMA  # ONE corpus schema, not a copy
 
 
@@ -48,10 +48,10 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     corpus = reader.parquet(input_dir)
 
-    extracted = extract_corpus(corpus, repartition=False)
-    # NOTE: repartition=False — a streaming micro-batch is already split into
-    # file-sized tasks; the salted shuffle matters for hot-host batch scans,
-    # while per-micro-batch repartition would add a shuffle per trigger.
+    extracted = extract_stage(corpus)
+    # the kernel stage without the salted shuffle: a streaming micro-batch is
+    # already split into file-sized tasks; the shuffle matters for hot-host
+    # batch scans, while here it would add a shuffle per trigger.
 
     return (
         extracted.writeStream.format("parquet")
@@ -90,8 +90,6 @@ def stream_windowed_counts(
     plan, unbounded state.
     """
     from pyspark.sql import functions as F
-
-    from .pipeline import host_col
 
     corpus = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
     agg = (
@@ -167,8 +165,6 @@ def stream_host_stats(
     """
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .pipeline import host_col
 
     corpus = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
     per_doc = corpus.select(

@@ -1,15 +1,21 @@
 """Module layering: ``pipeline`` is the only place a corpus row meets the
-document kernel. Operators project the extraction stage's typed columns
+document kernel, and the only module that opens a Python worker stage.
+Operators project the extraction stage's typed columns
 (``pipeline.OUTPUT_SCHEMA``, ``LINKS_SCHEMA``, ``META_SCHEMA``) instead of
-running ``extract_document`` inside a stage of their own, and per-row
-Python operators and sources go through ``pipeline.fanout`` instead of
-hand-rolling a ``mapInPandas`` generator."""
+running ``extract_document`` inside a stage of their own, and every other
+module reaches ``mapInArrow`` through ``pipeline.arrow_stage`` (per-row
+operators through ``pipeline.fanout``) instead of hand-rolling one."""
 
 import ast
 import pathlib
 
-OPERATORS = pathlib.Path(__file__).parent.parent / "pdf_extraction_spark" / "operators"
-SOURCES = OPERATORS.parent / "sources"
+PACKAGE = pathlib.Path(__file__).parent.parent / "pdf_extraction_spark"
+OPERATORS = PACKAGE / "operators"
+MODULES = sorted(PACKAGE.rglob("*.py"))
+
+
+def _name(path):
+    return str(path.relative_to(PACKAGE))
 
 
 def _imports(tree):
@@ -33,22 +39,31 @@ def test_operators_never_import_the_document_kernel():
     assert not offenders, offenders
 
 
-def _calls(tree, attr):
-    """(top-level definition name, line) of every ``<x>.<attr>(...)`` call."""
-    for top in tree.body:
+def _calls(path, attr):
+    """``module:top-level definition`` of every ``<x>.<attr>(...)`` call."""
+    for top in ast.parse(path.read_text()).body:
         for node in ast.walk(top):
             if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
                     and node.func.attr == attr):
-                yield getattr(top, "name", "<module>"), node.lineno
+                yield f"{_name(path)}:{getattr(top, 'name', '<module>')}"
 
 
-def test_per_row_python_goes_through_fanout():
-    # the WET sink is per batch (one segment per Arrow batch), not per row
-    allowed = {("wet.py", "to_wet_segments")}
+def test_no_mapinpandas_anywhere():
+    offenders = [call for path in MODULES for call in _calls(path, "mapInPandas")]
+    assert not offenders, offenders
+
+
+def test_one_arrow_stage_opener():
+    calls = [call for path in MODULES for call in _calls(path, "mapInArrow")]
+    assert calls == ["pipeline.py:arrow_stage"], calls
+
+
+def test_no_private_pipeline_names_imported():
     offenders = [
-        f"{path.parent.name}/{path.name}:{line} in {name}"
-        for path in sorted([*OPERATORS.glob("*.py"), *SOURCES.glob("*.py")])
-        for name, line in _calls(ast.parse(path.read_text()), "mapInPandas")
-        if (path.name, name) not in allowed
+        f"{_name(path)}: from {module} import {name}"
+        for path in MODULES if _name(path) != "pipeline.py"
+        for module, names in _imports(ast.parse(path.read_text()))
+        if module.rpartition(".")[2] == "pipeline"
+        for name in names if name.startswith("_")
     ]
     assert not offenders, offenders

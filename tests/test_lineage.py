@@ -41,7 +41,27 @@ def test_single_shot_run(spark, corpus_df, tmp_path):
     assert _read_texts(spark, out) == goldens
 
 
-def test_crash_then_resume_byte_identical(spark, corpus_df, tmp_path):
+def _poison(monkeypatch, buckets):
+    """Make ``run_resumable``'s docs write raise for rows in ``buckets``,
+    crashing whichever wave holds them: the plan is built on the driver, so
+    wrapping ``lineage.extract_corpus`` there adds a failing stage to it."""
+    real = lineage.extract_corpus
+
+    def extract_corpus(*args, **kwargs):
+        extracted = real(*args, **kwargs)
+
+        def bomb(batches):
+            for batch in batches:
+                if buckets & set(batch.column("bucket").to_pylist()):
+                    raise RuntimeError(f"injected failure for buckets {sorted(buckets)}")
+                yield batch
+
+        return extracted.mapInArrow(bomb, extracted.schema)
+
+    monkeypatch.setattr(lineage, "extract_corpus", extract_corpus)
+
+
+def test_crash_then_resume_byte_identical(spark, corpus_df, tmp_path, monkeypatch):
     """Crash mid-run (injected failure aborts the wave holding the poisoned
     bucket), resume, and end with the exact single-shot output — no loss, no
     duplicates, no reprocess of committed waves."""
@@ -50,10 +70,10 @@ def test_crash_then_resume_byte_identical(spark, corpus_df, tmp_path):
 
     # wave_size=2 -> waves [0,1] [2,3] [4,5] [6,7]; poison bucket 7 so the
     # first three waves commit and the last wave crashes.
-    with pytest.raises(Exception):
+    with monkeypatch.context() as m, pytest.raises(Exception, match="injected failure"):
+        _poison(m, {7})
         lineage.run_resumable(
-            df, out, n_buckets=N_BUCKETS, partitions=4, run_id="r1",
-            wave_size=2, fail_buckets={7},
+            df, out, n_buckets=N_BUCKETS, partitions=4, run_id="r1", wave_size=2,
         )
     committed = lineage.completed_buckets(spark, out)
     assert committed == {0, 1, 2, 3, 4, 5}
@@ -78,6 +98,21 @@ def test_crash_then_resume_byte_identical(spark, corpus_df, tmp_path):
             F.max("attempt").alias("a")).collect()
     }
     assert attempts[7] == 2 and attempts[0] == 1
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, corpus_df, tmp_path):
+    """The docs write overwrites partitions dynamically through its own
+    option: after a run, a partitioned ``overwrite`` in the same session
+    still replaces the whole table."""
+    df, _ = corpus_df
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    lineage.run_resumable(df, str(tmp_path / "run8"), n_buckets=N_BUCKETS, partitions=4)
+    assert spark.conf.get(key) == before
+    table = str(tmp_path / "table")
+    spark.range(4).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(table)
+    spark.range(1).selectExpr("id", "0 AS p").write.mode("overwrite").partitionBy("p").parquet(table)
+    assert [tuple(r) for r in spark.read.parquet(table).collect()] == [(0, 0)]
 
 
 def test_metrics_summary(spark, corpus_df, tmp_path):
@@ -122,7 +157,7 @@ def test_resume_with_different_bucket_grid_refuses(spark, tmp_path):
     assert s["buckets_run"] == 0 and s["resumed"]
 
 
-def test_grid_recorded_before_first_sink_write(spark, corpus_df, tmp_path):
+def test_grid_recorded_before_first_sink_write(spark, corpus_df, tmp_path, monkeypatch):
     """A crash in the FIRST wave leaves only ``pending`` rows — they alone
     must carry the grid, so resuming under another grid still refuses."""
     df, _ = corpus_df
@@ -132,11 +167,9 @@ def test_grid_recorded_before_first_sink_write(spark, corpus_df, tmp_path):
         r["b"] for r in df.select(lineage.bucket_col(N_BUCKETS).alias("b")).distinct().collect()
     } & first_wave
     assert hit, "corpus leaves the first wave empty"
-    with pytest.raises(Exception):
-        lineage.run_resumable(
-            df, out, n_buckets=N_BUCKETS, partitions=4, wave_size=2,
-            fail_buckets={min(hit)},
-        )
+    with monkeypatch.context() as m, pytest.raises(Exception, match="injected failure"):
+        _poison(m, {min(hit)})
+        lineage.run_resumable(df, out, n_buckets=N_BUCKETS, partitions=4, wave_size=2)
     assert lineage.completed_buckets(spark, out) == set()
     with pytest.raises(ValueError, match="n_buckets"):
         lineage.run_resumable(df, out, n_buckets=4, partitions=4)

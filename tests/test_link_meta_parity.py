@@ -128,13 +128,13 @@ def test_outlinks_and_meta_match_single_thread_kernel(spark):
 def test_meta_refresh_resolves_against_base_and_drops_junk_delay(spark):
     """The stage's ``meta`` column resolves the refresh target like links,
     and a delay past int32 (junk content) is null, not a batch failure."""
-    from pdf_extraction_spark.pipeline import META_SCHEMA, _extract_stage
+    from pdf_extraction_spark.pipeline import META_SCHEMA, extract_stage
 
     junk = ("<html><head><meta http-equiv='refresh' content='99999999999;url=/x'>"
             "</head><body><p>x</p></body></html>")
     corpus = _corpus(spark, ROWS[:2] + [("https://j.example.com/", junk.encode())])
     got = {r["url"]: (r["refresh_delay"], r["refresh"]) for r in
-           _extract_stage(corpus, META_SCHEMA).select("url", "meta.*").collect()}
+           extract_stage(corpus, META_SCHEMA).select("url", "meta.*").collect()}
     assert got == {
         "https://www.example.com/a/page.html": (None, None),
         "https://site.example.com/r/old": (3, "https://site.example.com/next/page"),

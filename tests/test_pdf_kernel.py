@@ -1437,3 +1437,83 @@ def test_text_units_is_sum_of_char_widths(s):
 
     for mt in (afm.HELVETICA, afm.TIMES, afm.COURIER, afm.SYMBOL):
         assert mt.text_units(s) == sum(mt.char_width(ch) for ch in s)
+
+
+def _group_lines_by_scan(runs):
+    """Line grouping as it was before the forward pointer: every run scans
+    every line made so far, O(runs × lines)."""
+    from pdf_extraction_spark.kernels.pdf_extract import Y_TOL, _join_runs
+
+    by_y = []
+    for run in sorted(runs, key=lambda r: (-r[1], r[0])):
+        x, y, size, txt, _w = run
+        placed = None
+        for line in by_y:
+            if abs(line["y"] - y) <= Y_TOL:
+                placed = line
+                break
+        if placed is None:
+            placed = {"y": y, "runs": []}
+            by_y.append(placed)
+        placed["runs"].append(run)
+    for line in by_y:
+        line["runs"].sort(key=lambda r: r[0])
+        line["x"] = line["runs"][0][0]
+        line["size"] = max(r[2] for r in line["runs"])
+        line["text"] = _join_runs(line["runs"])
+        line["x1"] = max(r[0] + r[4] for r in line["runs"])
+    by_y.sort(key=lambda L: -L["y"])
+    return by_y
+
+
+_NONFINITE = [float("inf"), float("-inf"), float("nan")]
+# multiples of Y_TOL / 2 land exactly on the tolerance edge; the rest sit
+# one ulp either side of it or carry rounding of their own
+_EDGE_Y = st.one_of(
+    st.integers(-12, 12).map(lambda k: k * 1.5),
+    st.sampled_from([2.9999999999999996, 3.0000000000000004, 0.1, 3.1, 1e16, 1e16 + 4]),
+    st.floats(-40, 40),
+)
+_COORD = st.one_of(_EDGE_Y, st.sampled_from(_NONFINITE), st.floats())
+
+
+def _runs(ys):
+    return st.lists(
+        st.tuples(st.sampled_from([0.0, 1.0, 7.5]) | _COORD, ys, st.floats(1, 20),
+                  st.sampled_from(["a", "bc", ""]), st.floats(0, 10)),
+        max_size=40,
+    )
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.one_of(_runs(_EDGE_Y), _runs(_COORD)))
+@example([(0.0, 3.0, 10.0, "a", 1.0), (5.0, 0.0, 10.0, "b", 1.0),
+          (1.0, -3.0, 10.0, "c", 1.0), (2.0, 6.0, 10.0, "d", 1.0)])
+@example([(0.0, 1.5, 10.0, "a", 1.0), (0.0, 1.5, 12.0, "b", 1.0),
+          (3.0, 4.5, 10.0, "c", 1.0), (1.0, -1.5, 10.0, "d", 1.0)])
+@example([(0.0, float("inf"), 10.0, "a", 1.0), (1.0, float("inf"), 10.0, "b", 1.0),
+          (2.0, 0.0, 10.0, "c", 1.0)])
+@example([(0.0, float("nan"), 10.0, "a", 1.0), (1.0, 2.0, 10.0, "b", 1.0),
+          (2.0, 0.0, 10.0, "c", 1.0), (3.0, float("-inf"), 10.0, "d", 1.0)])
+@example([(float("nan"), 3.0, 10.0, "a", 1.0), (1.0, 0.0, 10.0, "b", 1.0),
+          (2.0, 3.0, 10.0, "c", 1.0)])
+def test_group_lines_matches_scan(runs):
+    """The forward-pointer grouping gives the full scan's lines exactly,
+    at the tolerance edges, on ties and with non-finite coordinates."""
+    from pdf_extraction_spark.kernels.pdf_extract import _group_lines
+
+    assert repr(_group_lines(runs)) == repr(_group_lines_by_scan(runs))
+
+
+def test_group_lines_is_linear_in_baselines():
+    """10,000 runs on distinct baselines group in well under a second; the
+    scan over every earlier line took 2.47 s at 8,000 on one core."""
+    import time
+
+    from pdf_extraction_spark.kernels.pdf_extract import Y_TOL, _group_lines
+
+    runs = [(0.0, i * 2 * Y_TOL, 10.0, "w", 5.0) for i in range(10_000)]
+    t0 = time.process_time()
+    lines = _group_lines(runs)
+    assert time.process_time() - t0 < 1.0
+    assert len(lines) == 10_000

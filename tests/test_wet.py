@@ -47,7 +47,7 @@ def test_segments_roundtrip_extraction_output(spark, tmp_path):
     back → byte-identical extracted text per url."""
     import pandas as pd
 
-    from pdf_extraction_spark.pipeline import extract_corpus
+    from pdf_extraction_spark.pipeline import extract_stage
 
     rows = synth_rows(60, seed=31)
     corpus = spark.createDataFrame(
@@ -59,7 +59,7 @@ def test_segments_roundtrip_extraction_output(spark, tmp_path):
              "lang": [r["lang"] for r in rows]}
         )
     )
-    extracted = extract_corpus(corpus, repartition=False)
+    extracted = extract_stage(corpus)
     seg_path = str(tmp_path / "segments")
     to_wet_segments(extracted).write.parquet(seg_path)
 
