@@ -86,68 +86,43 @@ def _expand_key(key: bytes) -> list[list[int]]:
     return [sum(w[r * 4 : r * 4 + 4], []) for r in range(11)]
 
 
-# numpy-vectorized round primitives: state is a (n_blocks, 16) uint8 array,
-# column-major within a block (s[c*4 + r]). CBC DECRYPTION is
+# numpy-vectorized inverse round primitives: state is a (n_blocks, 16)
+# uint8 array, column-major within a block (s[c*4 + r]). CBC DECRYPTION is
 # block-parallel (each plaintext block = D(C_i) ^ C_{i-1}), so decrypting a
 # whole stream is ~40 numpy ops total instead of ~100 µs of scalar Python
 # per block — this sits in the extraction hot path for encrypted documents.
 import numpy as _np
 
-_SBOX_NP = _np.array(_SBOX, dtype=_np.uint8)
 _INV_SBOX_NP = _np.array(_INV_SBOX, dtype=_np.uint8)
 _MULT_NP = {
     m: _np.array([_gmul(x, m) for x in range(256)], dtype=_np.uint8)
-    for m in (2, 3, 9, 11, 13, 14)
+    for m in (9, 11, 13, 14)
 }
-# forward ShiftRows rotates row r left by r: new[c*4+r] = old[((c+r)%4)*4+r]
-_SHIFT_IDX = _np.array([((i // 4 + i % 4) % 4) * 4 + i % 4 for i in range(16)])
+# inverse ShiftRows rotates row r right by r: new[c*4+r] = old[((c-r)%4)*4+r]
 _INV_SHIFT_IDX = _np.array([((i // 4 - i % 4) % 4) * 4 + i % 4 for i in range(16)])
+_INV_MIX = (14, 11, 13, 9)
 
 
-def _mix_columns_np(st: "_np.ndarray", inv: bool) -> "_np.ndarray":
+def _inv_mix_columns_np(st: "_np.ndarray") -> "_np.ndarray":
     v = st.reshape(-1, 4, 4)  # (n, column, row)
     cols = [v[:, :, j] for j in range(4)]
-    m = (14, 11, 13, 9) if inv else (2, 3, 1, 1)
     out = _np.empty_like(v)
     for r in range(4):
-        acc = None
-        for j in range(4):
-            f = m[(j - r) % 4]
-            term = cols[j] if f == 1 else _MULT_NP[f][cols[j]]
-            acc = term if acc is None else acc ^ term
+        acc = _MULT_NP[_INV_MIX[-r % 4]][cols[0]]
+        for j in range(1, 4):
+            acc = acc ^ _MULT_NP[_INV_MIX[(j - r) % 4]][cols[j]]
         out[:, :, r] = acc
     return out.reshape(-1, 16)
 
 
-class AES128:
-    def __init__(self, key: bytes):
-        if len(key) != 16:
-            raise ValueError("AES-128 key must be 16 bytes")
-        self._rk = _np.array(_expand_key(key), dtype=_np.uint8)  # (11, 16)
-
-    def _encrypt_states(self, st: "_np.ndarray") -> "_np.ndarray":
-        rk = self._rk
-        st = st ^ rk[0]
-        for rnd in range(1, 10):
-            st = _SBOX_NP[st][:, _SHIFT_IDX]
-            st = _mix_columns_np(st, inv=False) ^ rk[rnd]
-        return _SBOX_NP[st][:, _SHIFT_IDX] ^ rk[10]
-
-    def _decrypt_states(self, st: "_np.ndarray") -> "_np.ndarray":
-        rk = self._rk
-        st = st ^ rk[10]
-        for rnd in range(9, 0, -1):
-            st = _INV_SBOX_NP[st[:, _INV_SHIFT_IDX]] ^ rk[rnd]
-            st = _mix_columns_np(st, inv=True)
-        return _INV_SBOX_NP[st[:, _INV_SHIFT_IDX]] ^ rk[0]
-
-    def encrypt_block(self, block: bytes) -> bytes:
-        st = _np.frombuffer(block, dtype=_np.uint8).reshape(1, 16)
-        return self._encrypt_states(st).tobytes()
-
-    def decrypt_block(self, block: bytes) -> bytes:
-        st = _np.frombuffer(block, dtype=_np.uint8).reshape(1, 16)
-        return self._decrypt_states(st).tobytes()
+def _decrypt_states(rk: "_np.ndarray", st: "_np.ndarray") -> "_np.ndarray":
+    """AES-128 inverse cipher on every block of ``st`` under the round keys
+    ``rk`` (11, 16)."""
+    st = st ^ rk[10]
+    for rnd in range(9, 0, -1):
+        st = _INV_SBOX_NP[st[:, _INV_SHIFT_IDX]] ^ rk[rnd]
+        st = _inv_mix_columns_np(st)
+    return _INV_SBOX_NP[st[:, _INV_SHIFT_IDX]] ^ rk[0]
 
 
 # scalar per-block encrypt for the serial CBC chain: one block at a time,
@@ -208,9 +183,11 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     on malformed length or padding."""
     if len(data) < 32 or len(data) % 16:
         raise ValueError("bad CBC data length")
-    aes = AES128(key)
+    if len(key) != 16:
+        raise ValueError("AES-128 key must be 16 bytes")
+    rk = _np.array(_expand_key(key), dtype=_np.uint8)
     ct = _np.frombuffer(data, dtype=_np.uint8).reshape(-1, 16)
-    out = (aes._decrypt_states(ct[1:]) ^ ct[:-1]).tobytes()
+    out = (_decrypt_states(rk, ct[1:]) ^ ct[:-1]).tobytes()
     pad = out[-1]
     if not 1 <= pad <= 16 or out[-pad:] != bytes([pad]) * pad:
         raise ValueError("bad CBC padding")

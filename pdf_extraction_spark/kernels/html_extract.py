@@ -726,8 +726,6 @@ class _BlockParser:
             self.blocks.append(self._cur)
         self._cur = None
 
-    # -- HTMLParser hooks ----------------------------------------------------
-
     def handle_starttag(self, tag, attrs):
         # tag arrives already lowercased from _scan
         if tag in _VOID_TAGS:
@@ -1212,6 +1210,16 @@ def _classify(blocks: list[Block], saw_main: bool) -> list[tuple[str, str, int, 
     return kept if kept else chrome_kept
 
 
+def _parse(payload: bytes | str) -> _BlockParser:
+    """Decode one payload and run the block parser over it to the end: the
+    front end :func:`extract_html` and every side extractor share."""
+    html = payload if isinstance(payload, str) else decode_payload(payload)
+    parser = _BlockParser()
+    _scan(html, parser)
+    parser.close()
+    return parser
+
+
 def extract_html(payload: bytes | str) -> dict:
     """Extract main content from one HTML payload.
 
@@ -1224,10 +1232,7 @@ def extract_html(payload: bytes | str) -> dict:
     silenced).
     """
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
+        parser = _parse(payload)
         kept = _classify(parser.blocks, parser.saw_main)
         texts: list[str] = []
         spans: list = []
@@ -1292,11 +1297,7 @@ def extract_html_tables(payload: bytes | str) -> list[dict]:
     tables recoverable from the leniently-unwound tag stack.
     """
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
-        return parser.tables
+        return _parse(payload).tables
     except Exception:
         return []
 
@@ -1308,11 +1309,7 @@ def extract_html_assets(payload: bytes | str) -> list[dict]:
     template/svg) contribute nothing; boilerplate regions are flagged, not
     removed. Never raises."""
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
-        return parser.assets
+        return _parse(payload).assets
     except Exception:
         return []
 
@@ -1327,12 +1324,8 @@ def extract_jsonld(payload: bytes | str) -> list[dict]:
     import json as _json
 
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
         out: list[dict] = []
-        for raw in parser.ldjson:
+        for raw in _parse(payload).ldjson:
             try:
                 obj = _json.loads(raw)
             except ValueError:
@@ -1353,10 +1346,7 @@ def extract_meta_map(payload: bytes | str) -> dict:
     normalized values) plus the head ``<title>`` under ``"title"`` — the
     surface OpenGraph/Twitter-card harvesters read. Never raises."""
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
+        parser = _parse(payload)
         out = dict(parser.meta)
         if parser.title is not None:
             out.setdefault("title", parser.title)
@@ -1371,10 +1361,6 @@ def extract_feed_links(payload: bytes | str) -> list[dict]:
     site's feeds from any page. Returns ``[{href, kind, title}]``. Never
     raises."""
     try:
-        html = payload if isinstance(payload, str) else decode_payload(payload)
-        parser = _BlockParser()
-        _scan(html, parser)
-        parser.close()
-        return parser.feeds
+        return _parse(payload).feeds
     except Exception:
         return []

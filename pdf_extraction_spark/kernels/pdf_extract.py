@@ -160,6 +160,12 @@ KERN_SPACE_TJ = 180.0
 # referential form graphs terminate instead of recursing.
 _FORM_MAX_DEPTH = 8
 
+# Depth bound of a name tree or the AcroForm field tree below its root: it
+# keeps a field's dotted name (one segment per level) short.
+_TREE_MAX_DEPTH = 32
+# Entries a page list, an attachment list or a field list may reach.
+_TREE_MAX_ENTRIES = 10000
+
 # Work bounds, per stream and per page, so a document's length never
 # counts against them: bytes one stream's filter chain may produce (a
 # 24 KiB Flate stream can inflate to gigabytes), and content-stream tokens
@@ -646,6 +652,10 @@ def _decode_stream(sdict: dict, raw: bytes, resolve, budget: _Budget) -> bytes:
     return data
 
 
+def _is_page(node: dict) -> bool:
+    return str(node.get("Type", "")) == "Page"
+
+
 class _Doc:
     """Parsed object store with xref-driven and scan-fallback lookup."""
 
@@ -911,31 +921,74 @@ class _Doc:
     def resolve(self, v):
         return self.get(v.num) if isinstance(v, _Ref) else v
 
-    # -- page tree ------------------------------------------------------------
+    # -- /Kids trees ----------------------------------------------------------
 
-    def pages(self) -> list[dict]:
+    def _kids(self, roots: list, leaf=None):
+        """Depth-first pre-order walk of a /Kids tree: the page tree, a name
+        tree (§7.7.4) or the AcroForm field tree (§12.7.3.1). ``roots`` are
+        references or dicts. Yields ``(num, node, parent)`` per dict node:
+        its object number (None for a direct dict) and the yield index of
+        the node whose /Kids reached it (-1 for a root).
+
+        Each node is visited once, however many /Kids arrays name it, so a
+        cycle or a shared subtree costs one visit. A node keeps its kids to
+        itself when ``leaf(node)`` holds, or, without ``leaf``, when it sits
+        ``_TREE_MAX_DEPTH`` levels below its root."""
+        stack = [(ref, 0, -1) for ref in reversed(roots)]
+        seen: set = set()
+        index = 0
+        while stack:
+            ref, depth, parent = stack.pop()
+            node = self.resolve(ref)
+            if not isinstance(node, dict) or id(node) in seen:
+                continue
+            seen.add(id(node))
+            yield (ref.num if isinstance(ref, _Ref) else None), node, parent
+            kids = self.resolve(node.get("Kids"))
+            if isinstance(kids, list) and not (
+                leaf(node) if leaf else depth >= _TREE_MAX_DEPTH
+            ):
+                stack.extend((kid, depth + 1, index) for kid in reversed(kids))
+            index += 1
+
+    def _page_list(self) -> list[tuple]:
+        """``(num, page)`` per page in page-tree order, ``num`` None for a
+        direct page dict; without a page tree, every /Type /Page object in
+        number order."""
         root = self.resolve(self.trailer.get("Root"))
-        out: list[dict] = []
+        out: list[tuple] = []
         if isinstance(root, dict):
-            tree = self.resolve(root.get("Pages"))
-            self._walk_pages(tree, out, set())
+            for num, node, _ in self._kids([root.get("Pages")], _is_page):
+                if len(out) > _TREE_MAX_ENTRIES:
+                    break
+                if _is_page(node):
+                    out.append((num, node))
         if not out:  # fallback: every /Type /Page object in number order
             for num in sorted(set(self.offsets) | set(self.in_objstm)):
                 obj = self.get(num)
-                if isinstance(obj, dict) and str(obj.get("Type", "")) == "Page":
-                    out.append(obj)
+                if isinstance(obj, dict) and _is_page(obj):
+                    out.append((num, obj))
         return out
 
-    def _walk_pages(self, node, out, seen):
-        if not isinstance(node, dict) or id(node) in seen or len(out) > 10000:
-            return
-        seen.add(id(node))
-        typ = str(node.get("Type", ""))
-        if typ == "Page":
-            out.append(node)
-            return
-        for kid in node.get("Kids", []) or []:
-            self._walk_pages(self.resolve(kid), out, seen)
+    def pages(self) -> list[dict]:
+        return [page for _, page in self._page_list()]
+
+    def page_num_map(self) -> dict[int, int]:
+        """Object number → page index, the index :meth:`pages` gives that
+        page (for /Dest resolution)."""
+        return {
+            num: i for i, (num, _) in enumerate(self._page_list())
+            if num is not None
+        }
+
+    def _name_tree(self, node):
+        """``(key, value)`` per leaf /Names pair of a name tree, in tree
+        order, the key resolved."""
+        for _, n, _ in self._kids([node]):
+            arr = self.resolve(n.get("Names"))
+            if isinstance(arr, list):
+                for j in range(0, len(arr) - 1, 2):
+                    yield self.resolve(arr[j]), arr[j + 1]
 
     def page_content(self, page: dict) -> bytes:
         # /Contents may be a stream, an ARRAY of streams, or an indirect
@@ -1070,9 +1123,9 @@ class _Doc:
 
     def named_dest(self, name):
         """Resolve a named destination (§12.3.2.3): the PDF 1.1 catalog
-        /Dests dictionary first, else the catalog /Names → /Dests name tree
-        (§7.7.4) — leaf /Names pair arrays, interior /Kids, bounded walk.
-        String keys come back decrypted by the normal object parse."""
+        /Dests dictionary first, else the first non-null entry for the
+        name in the catalog /Names → /Dests name tree. String keys come back decrypted
+        by the normal object parse."""
         key = (
             name
             if isinstance(name, bytes)
@@ -1089,26 +1142,11 @@ class _Doc:
                     return v
             names = self.resolve(root.get("Names"))
             if isinstance(names, dict):
-                return self._name_tree_lookup(
-                    self.resolve(names.get("Dests")), key, 0
-                )
+                for k, v in self._name_tree(names.get("Dests")):
+                    if k == key and (v := self.resolve(v)) is not None:
+                        return v
         except Exception:
             pass
-        return None
-
-    def _name_tree_lookup(self, node, key: bytes, depth: int):
-        if not isinstance(node, dict) or depth > 32:
-            return None
-        arr = self.resolve(node.get("Names"))
-        if isinstance(arr, list):
-            for j in range(0, len(arr) - 1, 2):
-                k = self.resolve(arr[j])
-                if isinstance(k, bytes) and k == key:
-                    return self.resolve(arr[j + 1])
-        for kid in self.resolve(node.get("Kids")) or []:
-            hit = self._name_tree_lookup(self.resolve(kid), key, depth + 1)
-            if hit is not None:
-                return hit
         return None
 
     def embedded_files(self) -> list[dict]:
@@ -1124,21 +1162,10 @@ class _Doc:
             names = self.resolve(root.get("Names"))
             if not isinstance(names, dict):
                 return []
-            self._collect_embedded(
-                self.resolve(names.get("EmbeddedFiles")), out, 0
-            )
-        except Exception:
-            pass
-        return out
-
-    def _collect_embedded(self, node, out: list, depth: int) -> None:
-        if not isinstance(node, dict) or depth > 32 or len(out) > 10000:
-            return
-        arr = self.resolve(node.get("Names"))
-        if isinstance(arr, list):
-            for j in range(0, len(arr) - 1, 2):
-                key = self.resolve(arr[j])
-                spec = self.resolve(arr[j + 1])
+            for key, spec in self._name_tree(names.get("EmbeddedFiles")):
+                if len(out) > _TREE_MAX_ENTRIES:
+                    break
+                spec = self.resolve(spec)
                 if isinstance(spec, tuple) and spec[0] == "stream":
                     spec = spec[1]
                 if not isinstance(spec, dict):
@@ -1164,8 +1191,9 @@ class _Doc:
                     "size": len(data),
                     "data": data,
                 })
-        for kid in self.resolve(node.get("Kids")) or []:
-            self._collect_embedded(self.resolve(kid), out, depth + 1)
+        except Exception:
+            pass
+        return out
 
     def form_fields(self) -> list[dict]:
         """Interactive-form (AcroForm, §12.7) field values: walk the
@@ -1182,63 +1210,35 @@ class _Doc:
                 af = af[1]
             if not isinstance(af, dict):
                 return []
-            for ref in self.resolve(af.get("Fields")) or []:
-                self._walk_field(ref, "", out, 0)
+            fields = self.resolve(af.get("Fields"))
+            full_names: list[str] = []  # per visited node, in visit order
+            for _, node, parent in self._kids(
+                fields if isinstance(fields, list) else []
+            ):
+                if len(out) > _TREE_MAX_ENTRIES:
+                    break
+                t = self.resolve(node.get("T"))
+                name = _pdf_text(t) if isinstance(t, bytes) else ""
+                prefix = full_names[parent] if parent >= 0 else ""
+                full = f"{prefix}.{name}" if prefix and name else (name or prefix)
+                full_names.append(full)
+                if ("V" in node or "FT" in node) and name:
+                    v = self.resolve(node.get("V"))
+                    if isinstance(v, bytes):
+                        value = _pdf_text(v)
+                    elif v is not None:
+                        value = str(v)
+                    else:
+                        value = None
+                    ft = self.resolve(node.get("FT"))
+                    out.append({
+                        "name": full,
+                        "field_type": str(ft) if ft is not None else None,
+                        "value": value,
+                    })
         except Exception:
             pass
         return out
-
-    def _walk_field(self, ref, prefix: str, out: list, depth: int) -> None:
-        node = self.resolve(ref)
-        if not isinstance(node, dict) or depth > 32 or len(out) > 10000:
-            return
-        t = self.resolve(node.get("T"))
-        name = _pdf_text(t) if isinstance(t, bytes) else ""
-        full = f"{prefix}.{name}" if prefix and name else (name or prefix)
-        kids = self.resolve(node.get("Kids"))
-        has_term = "V" in node or "FT" in node
-        if has_term and name:
-            v = self.resolve(node.get("V"))
-            if isinstance(v, bytes):
-                value = _pdf_text(v)
-            elif v is not None:
-                value = str(v)
-            else:
-                value = None
-            ft = self.resolve(node.get("FT"))
-            out.append({
-                "name": full,
-                "field_type": str(ft) if ft is not None else None,
-                "value": value,
-            })
-        if isinstance(kids, list):
-            for kid in kids:
-                self._walk_field(kid, full, out, depth + 1)
-
-    def page_num_map(self) -> dict[int, int]:
-        """Object number → page index, in page-tree order (for /Dest
-        resolution)."""
-        out: dict[int, int] = {}
-        try:
-            root = self.resolve(self.trailer.get("Root"))
-            if isinstance(root, dict):
-                self._walk_page_nums(root.get("Pages"), out, set())
-        except Exception:
-            pass
-        return out
-
-    def _walk_page_nums(self, ref, out: dict, seen: set) -> None:
-        num = ref.num if isinstance(ref, _Ref) else None
-        node = self.resolve(ref)
-        if not isinstance(node, dict) or id(node) in seen or len(out) > 10000:
-            return
-        seen.add(id(node))
-        if str(node.get("Type", "")) == "Page":
-            if num is not None:
-                out[num] = len(out)
-            return
-        for kid in node.get("Kids", []) or []:
-            self._walk_page_nums(kid, out, seen)
 
     def outline(self) -> list[dict]:
         """Flattened /Outlines (bookmark) tree: ``[{level, title, page}]``
@@ -1912,21 +1912,7 @@ def extract_table_cells(payload: bytes) -> list[dict]:
         if not doc.try_decrypt():
             return []
         out: list[dict] = []
-        for pno, page in enumerate(doc.pages()):
-            content = doc.page_content(page)
-            if not content:
-                continue
-            img_names, fts, frms = doc.page_paint(page)
-            doc.budget.start_page()
-            runs, hl, vl, rects, _ = _interpret_content(
-                content, img_names, fonts=fts, forms=frms, budget=doc.budget
-            )
-            rot = doc.page_rotate(page)
-            if rot:
-                pw, ph = doc.page_size(page)
-                _, _, runs, hl, vl, rects, _img = _normalize_rotation(
-                    rot, pw, ph, runs, hl, vl, rects, []
-                )
+        for pno, _, _, _, runs, hl, vl, rects, _ in _page_layouts(doc, doc.pages()):
             hl, vl = _with_rect_rules(hl, vl, rects)
             for gx0, gy0, gx1, gy1 in _grid_regions(hl, vl):
                 row_bounds = _cluster_coords(
@@ -2024,14 +2010,30 @@ def _failed(error: str) -> dict:
             "error": error, "links": [], "headings": [], "meta": {}}
 
 
-def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
-    """Extract text + typed spans from one PDF payload. Never raises.
+def _page_layouts(doc: _Doc, pages: list[dict]):
+    """Interpret each page that has content, in page order, under the
+    document's work budget. Yields ``(pno, page, pw, ph, runs, hl, vl,
+    rects, images)`` with a /Rotate page's geometry already upright."""
+    for pno, page in enumerate(pages):
+        pw, ph = doc.page_size(page)
+        content = doc.page_content(page)
+        if not content:
+            continue
+        img_names, fts, frms = doc.page_paint(page)
+        doc.budget.start_page()
+        runs, hl, vl, rects, images = _interpret_content(
+            content, img_names, fonts=fts, forms=frms, budget=doc.budget
+        )
+        rot = doc.page_rotate(page)
+        if rot:
+            pw, ph, runs, hl, vl, rects, images = _normalize_rotation(
+                rot, pw, ph, runs, hl, vl, rects, images
+            )
+        yield pno, page, pw, ph, runs, hl, vl, rects, images
 
-    ``_collect_images`` (private): when a list is passed,
-    per-page placed-image records ``{page, pw, ph, images, meta}`` are
-    appended to it during the SAME parse/interpret pass — how
-    :func:`extract_pdf_images` avoids parsing and interpreting every page
-    twice. The public result shape is unchanged.
+
+def extract_pdf(payload: bytes) -> dict:
+    """Extract text + typed spans from one PDF payload. Never raises.
 
     Returns the same record shape as :func:`html_extract.extract_html`
     with ``method="pdf"``. Reading order: per page, columns left→right,
@@ -2047,40 +2049,32 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
     emitted after the page's text flow, ordered top-to-bottom. Spans carry
     ``(hierarchy_level, parent_id)`` from :mod:`hierarchy`.
     """
+    return _extract_pdf(payload)[0]
+
+
+def _extract_pdf(payload: bytes) -> tuple:
+    """:func:`extract_pdf`'s record, the parsed document (None if it did
+    not parse), and the pages that placed images, ``(pno, page, pw, ph,
+    images)`` each, so far as the interpretation got."""
     from .hierarchy import assign_hierarchy
 
+    doc = None
+    placed: list[tuple] = []
     try:
         doc = _Doc(payload)
         if not doc.try_decrypt():
             # a real password (or unsupported handler) is required:
             # strings/streams stay ciphertext — emitting "extracted text"
             # from them would be garbage; degrade explicitly
-            return _failed("encrypted")
+            return _failed("encrypted"), doc, placed
         pages = doc.pages()
         blocks: list[dict] = []  # {kind, page, texts: [line...], bbox}
-        for pno, page in enumerate(pages):
-            pw, ph = doc.page_size(page)
-            content = doc.page_content(page)
-            if not content:
-                continue
-            img_names, fts, frms = doc.page_paint(page)
-            doc.budget.start_page()
-            runs, hl, vl, rects, images = _interpret_content(
-                content, img_names, fonts=fts, forms=frms, budget=doc.budget
-            )
-            rot = doc.page_rotate(page)
-            if rot:
-                pw, ph, runs, hl, vl, rects, images = _normalize_rotation(
-                    rot, pw, ph, runs, hl, vl, rects, images
-                )
-            if _collect_images is not None and images:
-                _collect_images.append({
-                    "page": pno, "pw": pw, "ph": ph, "images": list(images),
-                    "meta": _image_meta_from_res(
-                        doc, doc.page_attr(page, "Resources")
-                    ),
-                })
-            if not runs and not images:
+        for pno, page, pw, ph, runs, hl, vl, rects, images in _page_layouts(
+            doc, pages
+        ):
+            if images:
+                placed.append((pno, page, pw, ph, images))
+            elif not runs:
                 continue
             hl, vl = _with_rect_rules(hl, vl, rects)
             inter = (
@@ -2200,7 +2194,7 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
         links = _annot_links(doc, pages)
         meta = doc.info()
         if doc.budget.error:  # overran where an except swallowed it
-            return _failed(doc.budget.error)
+            return _failed(doc.budget.error), doc, placed
         return {
             "text": "\n\n".join(texts),
             "spans": spans,
@@ -2210,11 +2204,11 @@ def extract_pdf(payload: bytes, _collect_images: list | None = None) -> dict:
             "links": links,
             "headings": [],
             "meta": meta,
-        }
+        }, doc, placed
     except _BudgetExceeded as exc:
-        return _failed(str(exc))
+        return _failed(str(exc)), doc, placed
     except Exception as exc:
-        return _failed(f"{type(exc).__name__}: {exc}")
+        return _failed(f"{type(exc).__name__}: {exc}"), doc, placed
 
 
 def _annot_links(doc: _Doc, pages: list[dict]) -> list[dict]:
@@ -2360,13 +2354,16 @@ def extract_pdf_images(payload: bytes) -> list[dict]:
     fmt='inline' with -1 dims (their dict never leaves the content stream
     in this parser). Never raises."""
     try:
-        # ONE parse/decrypt/interpret pass: extract_pdf computes everything
-        # (including per-page placed images, collected via the private
-        # out-param) — this function used to rebuild its own _Doc and
-        # re-interpret every page just to re-derive the same image tuples
-        collected: list[dict] = []
-        full = extract_pdf(payload, _collect_images=collected)
+        # one parse/decrypt/interpret pass: extract_pdf's own, which also
+        # hands back the pages that placed images
+        full, doc, placed = _extract_pdf(payload)
         if (full["error"] or "").startswith(("encrypted", "budget")):
+            return []
+        metas = [
+            _image_meta_from_res(doc, doc.page_attr(page, "Resources"))
+            for _, page, _, _, _ in placed
+        ]
+        if placed and doc.budget.error:  # decoding an image header overran
             return []
         # caption spans per page: (cy0, cy1, cx0, cx1, text)
         caps: dict[int, list] = {}
@@ -2378,9 +2375,7 @@ def extract_pdf_images(payload: bytes) -> list[dict]:
                     (bx[1], bx[3], bx[0], bx[2], text[s[2] : s[3]])
                 )
         rows: list[dict] = []
-        for entry in collected:
-            pno, pw, ph = entry["page"], entry["pw"], entry["ph"]
-            images, meta = entry["images"], entry["meta"]
+        for (pno, _, pw, ph, images), meta in zip(placed, metas):
             for ix0, iy0, ix1, iy1, nm in sorted(
                 images, key=lambda b: (-b[3], b[0])
             ):

@@ -4,7 +4,9 @@ Operators project the extraction stage's typed columns
 (``pipeline.OUTPUT_SCHEMA``, ``LINKS_SCHEMA``, ``META_SCHEMA``) instead of
 running ``extract_document`` inside a stage of their own, and every other
 module reaches ``mapInArrow`` through ``pipeline.arrow_stage`` (per-row
-operators through ``pipeline.fanout``) instead of hand-rolling one."""
+operators through ``pipeline.fanout``) instead of hand-rolling one. The
+pandas workers that remain are listed one by one, so a new one is a
+decision, not an accident."""
 
 import ast
 import pathlib
@@ -67,3 +69,33 @@ def test_no_private_pipeline_names_imported():
         for name in names if name.startswith("_")
     ]
     assert not offenders, offenders
+
+
+PANDAS_OPENERS = ("pandas_udf", "applyInPandas", "applyInPandasWithState")
+# ``module:top-level definition:opener`` of every pandas worker today: the
+# four PDF payload builders, the per-label cosine block, and the two
+# streaming state stages
+PANDAS_SITES = [
+    "corpus.py:corpus_from_documents:pandas_udf",
+    "operators/elements.py:_figured_pdf_corpus:pandas_udf",
+    "operators/elements.py:_titled_pdf_corpus:pandas_udf",
+    "operators/elements.py:q_confidence_gate:pandas_udf",
+    "operators/similarity.py:q_embedding_cosine_pairs:applyInPandas",
+    "streaming.py:stream_dedup_exact:applyInPandasWithState",
+    "streaming.py:stream_host_stats:applyInPandasWithState",
+]
+
+
+def test_pandas_workers_only_at_listed_sites():
+    sites = sorted(
+        f"{call}:{attr}"
+        for path in MODULES for attr in PANDAS_OPENERS
+        for call in _calls(path, attr)
+    )
+    imported = [
+        f"{_name(path)}: from {module} import {name}"
+        for path in MODULES
+        for module, names in _imports(ast.parse(path.read_text()))
+        for name in names if name in PANDAS_OPENERS
+    ]
+    assert sites == PANDAS_SITES and not imported, (sites, imported)
